@@ -9,10 +9,14 @@ Scale design notes:
 - shingling explodes O(tokens) rows but immediately re-aggregates per
   (doc, seed) with map-side partial min — shuffle carries only
   n_docs × n_hashes rows.
-- LSH banding turns all-pairs O(n²) into a self-join on band keys;
-  band-key groups are the only quadratic site and AQE skew-split
-  handles hot buckets.
+- LSH banding turns all-pairs O(n²) into a group-collect on band
+  keys; band-key groups are the only quadratic site, bounded by
+  max_bucket_size.
 - exact dedup is one hash-aggregate, no join.
+
+Each MinHash-LSH primitive (shingle, signature, band, pair) has ONE
+rendering, a SQL fragment; the DataFrame entry points run a fragment
+alone and minhash_signatures / minhash_lsh_pairs compose them.
 """
 
 from __future__ import annotations
@@ -35,126 +39,149 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def shingles_of(words_col, k: int):
-    """Column expr: DISTINCT k-gram array from a word-array column.
+# The MinHash-LSH primitives below are SQL fragments, each one SELECT
+# over a FROM source: "{docs}" when the fragment runs alone (spark.sql
+# binds the DataFrame argument to a temp view for the one call and
+# drops it), or the parenthesized fragment of the previous step when
+# minhash_signatures / minhash_lsh_pairs compose them into one
+# statement — one Catalyst analysis pass instead of ~25 chained ones
+# (r13: ~0.5 s of driver time per call at sf0.1).
+_DOCS = "{docs}"
+
+
+def _bq(name: str) -> str:
+    """Backtick-quote an identifier for the SQL fragments — column
+    names with spaces, hyphens or reserved words must survive — and
+    double its braces so spark.sql's DataFrame-argument formatter
+    passes them through as text."""
+    q = "`" + name.replace("`", "``") + "`"
+    return q.replace("{", "{{").replace("}", "}}")
+
+
+def _kgram_sql(words: str, k: int) -> str:
+    """SQL text of the DISTINCT k-gram array of a word-array column.
     slice+array_join, NOT k element_at calls — codegen does no CSE
     across lambda boundaries, so per-element expressions re-evaluate
     whatever produced the array once per call (k× per gram); slice
-    touches it once per gram. Bind the array as a projected attribute
-    when possible (word_shingles does) so it's computed once per row."""
-    # 1-based start positions; guard size >= k because Spark's
-    # sequence(1, 0) counts DOWN (would yield bogus indices)
-    return F.array_distinct(
-        F.when(
-            F.size(words_col) >= k,
-            F.transform(
-                F.sequence(F.lit(1), F.size(words_col) - (k - 1)),
-                lambda i: F.array_join(F.slice(words_col, i, k), " "),
-            ),
-        )
+    touches it once per gram. ``words`` should name a projected
+    attribute so the split runs once per row. The size guard matters:
+    Spark's sequence(1, 0) counts DOWN (bogus indices)."""
+    return (
+        f"CASE WHEN size({words}) >= {k} "
+        f"THEN array_distinct(transform(sequence(1, size({words}) - {k - 1}), "
+        f"i -> array_join(slice({words}, i, {k}), ' '))) END"
     )
 
 
-def shingle_array(text_col, k: int):
-    """Column expr: DISTINCT word k-gram array for one document —
-    dedup happens per-row with array_distinct, so shingling needs NO
-    shuffle (vs explode+distinct, which shuffles every shingle
-    instance)."""
-    return shingles_of(F.split(text_col, " "), k)
+def shingles_of(words: str, k: int):
+    """Column expr: DISTINCT k-gram array of the word-array column
+    named ``words`` — dedup happens per row, so shingling needs NO
+    shuffle (vs explode+distinct, which shuffles every instance)."""
+    return F.expr(_kgram_sql(words, k))
 
 
-def _shingle_par(df: DataFrame) -> int | None:
-    """Partition count for the pre-shingle text repartition, or None
-    to skip it (r14). Document corpora often arrive as few large files
-    (the testdata: one), where the CPU-heavy shingle fan-out would run
-    on as many cores as there are input splits — there the shuffle
-    pays for itself. An input that already scans wide gains nothing:
-    every doc's shingles live in one row, so the per-doc min-signature
-    partial aggregation is already complete map-side and the only
-    required shuffle is n_docs × n_hashes partial rows — repartitioning
-    would move the FULL corpus text first, the §8 shuffle-the-payload
-    mistake. Probe = input file count: analysis-only and cheap, where
-    an .rdd partition probe would physical-plan the input and fire its
-    broadcast jobs eagerly on composed inputs (measured on x38).
-    Non-file inputs (local test frames, checkpoints) report zero files
-    and keep the repartition — the conservative default."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        if len(df.inputFiles()) >= par:
-            return None
-    except Exception:
-        pass
-    return par
+def _shingle_sql(src: str, id_col: str, text_col: str, k: int, par: int) -> str:
+    """(id, shingle): distinct word k-grams per document. The text is
+    repartitioned to full parallelism on the id first — document
+    corpora often arrive as few large files (the testdata: one), and
+    the CPU-heavy shingle fan-out would otherwise run on as many cores
+    as there are input splits."""
+    idq, txtq = _bq(id_col), _bq(text_col)
+    return f"""
+        SELECT {idq}, shingle
+        FROM (SELECT /*+ REPARTITION({par}, {idq}) */
+                     {idq}, split({txtq}, ' ') AS __words
+              FROM {src})
+        LATERAL VIEW explode({_kgram_sql("__words", k)}) t AS shingle
+        WHERE shingle != ''
+    """
+
+
+def _sig_sql(src: str, id_col: str, n_hashes: int) -> str:
+    """(id, "0".."{n-1}"): sig_i = min over the doc's shingles of
+    md5(i || ':' || shingle), from (id, shingle) rows."""
+    idq = _bq(id_col)
+    sig_cols = ",\n               ".join(
+        f"min(md5(concat_ws(':', {i}, shingle))) AS `{i}`" for i in range(n_hashes)
+    )
+    return f"""
+        SELECT {idq},
+               {sig_cols}
+        FROM {src} GROUP BY {idq}
+    """
+
+
+def _band_sql(src: str, id_col: str, n_hashes: int, bands: int) -> str:
+    """(id, band, band_key) from a wide signature source — band_key =
+    md5 of the band's r=n_hashes/bands consecutive signature values.
+    One explode instead of a bands-way union: the signature subtree is
+    computed once, not ``bands`` times."""
+    r = n_hashes // bands
+    band_structs = ",\n                   ".join(
+        "named_struct('band', {b}, 'band_key', md5(concat_ws('|', {b}, {cols})))".format(
+            b=b, cols=", ".join(f"`{b * r + j}`" for j in range(r))
+        )
+        for b in range(bands)
+    )
+    return f"""
+        SELECT {_bq(id_col)}, bk.band AS band, bk.band_key AS band_key
+        FROM {src}
+        LATERAL VIEW explode(array(
+                   {band_structs})) t AS bk
+    """
+
+
+def _pairs_sql(src: str, id_col: str, max_bucket_size: int) -> str:
+    """(doc_a, doc_b) distinct, doc_a < doc_b, from (id, band,
+    band_key) rows. Group-collect instead of a self-join: the
+    signature subtree is evaluated ONCE, and in-bucket pairs are a
+    double explode of the sorted member list. Bucket size and anchor
+    ride one window shuffle; buckets past ``max_bucket_size`` emit
+    star pairs (anchor, id) instead (see minhash_lsh_pairs)."""
+    idq = _bq(id_col)
+    return f"""
+        WITH ranked AS (
+          SELECT {idq}, band, band_key,
+                 COUNT(*) OVER (PARTITION BY band, band_key) AS __sz,
+                 MIN({idq}) OVER (PARTITION BY band, band_key) AS __anchor
+          FROM {src}
+        ),
+        pairs_exact AS (
+          SELECT doc_a, doc_b
+          FROM (SELECT sort_array(collect_list({idq})) AS ids
+                FROM ranked
+                WHERE __sz >= 2 AND __sz <= {max_bucket_size}
+                GROUP BY band, band_key)
+          LATERAL VIEW posexplode(ids) p AS pos, doc_a
+          LATERAL VIEW explode(slice(ids, pos + 2, size(ids))) q AS doc_b
+        ),
+        pairs_star AS (
+          SELECT __anchor AS doc_a, {idq} AS doc_b
+          FROM ranked
+          WHERE __sz > {max_bucket_size} AND {idq} != __anchor
+        )
+        SELECT DISTINCT CAST(doc_a AS BIGINT) AS doc_a,
+                        CAST(doc_b AS BIGINT) AS doc_b
+        FROM (SELECT doc_a, doc_b FROM pairs_exact
+              UNION ALL
+              SELECT doc_a, doc_b FROM pairs_star)
+    """
 
 
 def word_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """Distinct word k-grams per document: (id, shingle). JVM-side only
-    (split/sequence/transform), no Python UDF.
-
-    Few-file inputs are repartitioned to full parallelism first (see
-    _shingle_par — wide inputs skip the text shuffle entirely)."""
-    par = _shingle_par(df)
-    if par is not None:
-        df = df.repartition(par, F.col(id_col))
-    return (
-        df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__words"))
-        .select(
-            F.col(id_col), F.explode(shingles_of(F.col("__words"), k)).alias("shingle")
-        )
-        .where(F.col("shingle") != "")
-    )
+    (split/sequence/transform), no Python UDF."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    return df.sparkSession.sql(_shingle_sql(_DOCS, id_col, text_col, k, par), docs=df)
 
 
-def _bq(name: str) -> str:
-    """Backtick-quote an identifier for interpolation into the
-    one-statement SQL renderings — column names with spaces, hyphens
-    or reserved words must survive the round trip the F.col()-based
-    renderings always supported (r13 advisor)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
-def _shingle_sql(
-    view: str, id_col: str, text_col: str, k: int, par: int
-) -> str:
-    """SQL text of the distinct-word-k-gram explode over a temp view —
-    the word_shingles pipeline as one subquery (expressions verbatim),
-    shared by the one-statement renderings below."""
-    idq, txtq = _bq(id_col), _bq(text_col)
-    return f"""
-          SELECT {idq}, shingle
-          FROM (SELECT /*+ REPARTITION({par}, {idq}) */
-                       {idq}, split({txtq}, ' ') AS __words
-                FROM {view})
-          LATERAL VIEW explode(
-            CASE WHEN size(__words) >= {k}
-                 THEN array_distinct(transform(
-                        sequence(1, size(__words) - {k - 1}),
-                        i -> array_join(slice(__words, i, {k}), ' ')))
-            END) t AS shingle
-          WHERE shingle != ''
-    """
-
-
-def _shingle_sig_sql(
-    view: str, id_col: str, text_col: str, n_hashes: int, k: int, par: int
-) -> str:
-    """SQL text of the shingle→md5→min-signature pipeline over a temp
-    view — shared by minhash_signatures and minhash_lsh_pairs so the
-    whole chain is ONE Catalyst analysis pass (see minhash_lsh_pairs).
-    Expressions mirror word_shingles/signatures_from_shingles exactly."""
-    sig_cols = ",\n                 ".join(
-        f"min(md5(concat_ws(':', {i}, shingle))) AS `{i}`"
-        for i in range(n_hashes)
-    )
-    idq = _bq(id_col)
-    return f"""
-        WITH sh AS (
-          {_shingle_sql(view, id_col, text_col, k, par)}
-        )
-        SELECT {idq},
-               {sig_cols}
-        FROM sh GROUP BY {idq}
-    """
+def signatures_from_shingles(
+    sh: DataFrame, id_col: str, n_hashes: int = 8
+) -> DataFrame:
+    """Signature aggregation over a precomputed (id, shingle) frame —
+    for multi-consumer pipelines (jaccard estimate, fuzzy join) that
+    shingle once and feed several consumers."""
+    return sh.sparkSession.sql(_sig_sql(_DOCS, id_col, n_hashes), docs=sh)
 
 
 def minhash_signatures(
@@ -164,41 +191,38 @@ def minhash_signatures(
     md5(i || ':' || shingle), i in [0, n_hashes). Output:
     (id, "0".."{n-1}") — one wide row per doc.
 
-    Shape notes: explode + groupBy rather than 8 array_min
+    Shape notes: explode + groupBy rather than n array_min
     projections over a shared shingle-array column — Catalyst's
     projection collapse would inline (= recompute) the shingling into
     every signature expression; the explode materializes each shingle
     exactly once, and the n mins run as parallel partial aggregates
-    map-side, so the groupBy shuffle carries only n_docs rows.
-    Rendered as one spark.sql statement (one analysis pass — see
-    minhash_lsh_pairs); signatures_from_shingles remains the
-    DataFrame rendering for precomputed-shingle callers."""
-    import uuid
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    view = f"__mh_sig_{uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(view)
-    try:
-        out = spark.sql(
-            _shingle_sig_sql(view, id_col, text_col, n_hashes, shingle_k, par)
-        )
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
+    map-side, so the groupBy shuffle carries only n_docs rows."""
+    par = df.sparkSession.sparkContext.defaultParallelism
+    sh = _shingle_sql(_DOCS, id_col, text_col, shingle_k, par)
+    return df.sparkSession.sql(_sig_sql(f"({sh})", id_col, n_hashes), docs=df)
 
 
-def signatures_from_shingles(
-    sh: DataFrame, id_col: str, n_hashes: int = 8
+def band_keys(
+    sig: DataFrame, id_col: str, n_hashes: int = 8, bands: int = 4
 ) -> DataFrame:
-    """Signature aggregation over a precomputed (id, shingle) frame —
-    split out so multi-consumer pipelines (jaccard estimate) can
-    persist the shingles once instead of re-shingling per consumer."""
-    aggs = [
-        F.min(F.md5(F.concat_ws(":", F.lit(i), F.col("shingle")))).alias(str(i))
-        for i in range(n_hashes)
-    ]
-    return sh.groupBy(id_col).agg(*aggs)
+    """(id, band, band_key) rows from a wide signature frame (see
+    _band_sql)."""
+    return sig.sparkSession.sql(_band_sql(_DOCS, id_col, n_hashes, bands), docs=sig)
+
+
+def pairs_from_signatures(
+    sig: DataFrame,
+    id_col: str,
+    n_hashes: int = 8,
+    bands: int = 4,
+    max_bucket_size: int = 1000,
+) -> DataFrame:
+    """LSH banding over a precomputed signature frame (see
+    minhash_lsh_pairs for semantics; split out for signature reuse)."""
+    banded = _band_sql(_DOCS, id_col, n_hashes, bands)
+    return sig.sparkSession.sql(
+        _pairs_sql(f"({banded})", id_col, max_bucket_size), docs=sig
+    )
 
 
 def minhash_lsh_pairs(
@@ -222,148 +246,16 @@ def minhash_lsh_pairs(
     graph diameter 2 (a chain would stall label propagation), and the
     member list is never materialized.
 
-    The whole pipeline is rendered as ONE spark.sql statement over a
-    temp view of ``df`` (r13 optimization round): the chained
-    DataFrame rendering re-ran Catalyst analysis per transformation
-    (~25 passes, ~0.5 s of driver time per call at sf0.1, paid again
-    by every consumer — x02/x14/x57); one statement is one analysis
-    pass. Expressions are verbatim the same (word_shingles /
-    signatures_from_shingles / band_keys / pairs_from_signatures
-    remain the reference DataFrame rendering for composable callers),
-    so the physical plan and the output are unchanged — oracle-locked.
+    The shingle → signature → band → pair fragments compose into ONE
+    spark.sql statement, so the optimizer sees the whole pipeline in
+    one analysis pass — oracle-locked via x02/x14/x57.
     """
-    import uuid
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    r = n_hashes // bands
-    k = shingle_k
-    view = f"__mh_docs_{uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(view)
-    band_structs = ",\n                 ".join(
-        "named_struct('band', {b}, 'band_key', "
-        "md5(concat_ws('|', {b}, {cols})))".format(
-            b=b, cols=", ".join(f"`{b * r + j}`" for j in range(r))
-        )
-        for b in range(bands)
-    )
-    sig_sql = _shingle_sig_sql(view, id_col, text_col, n_hashes, k, par)
-    # signature columns enumerated explicitly (they are known:
-    # `0`..`n_hashes-1`) — `* EXCEPT (col)` needs Spark 3.4+ while the
-    # surrounding code is otherwise version-agnostic (r13 advisor)
-    sig_col_list = ", ".join(f"`{i}`" for i in range(n_hashes))
-    sql = f"""
-        WITH sig AS (
-          SELECT {_bq(id_col)} AS __id, {sig_col_list}
-          FROM ({sig_sql})
-        ),
-        banded AS (
-          SELECT __id, bk.band AS band, bk.band_key AS band_key
-          FROM sig
-          LATERAL VIEW explode(array(
-                 {band_structs})) t AS bk
-        ),
-        ranked AS (
-          SELECT __id, band, band_key,
-                 COUNT(*) OVER (PARTITION BY band, band_key) AS __sz,
-                 MIN(__id) OVER (PARTITION BY band, band_key) AS __anchor
-          FROM banded
-        ),
-        pairs_exact AS (
-          SELECT doc_a, doc_b
-          FROM (SELECT sort_array(collect_list(__id)) AS ids
-                FROM ranked
-                WHERE __sz >= 2 AND __sz <= {max_bucket_size}
-                GROUP BY band, band_key)
-          LATERAL VIEW posexplode(ids) p AS pos, doc_a
-          LATERAL VIEW explode(slice(ids, pos + 2, size(ids))) q AS doc_b
-        ),
-        pairs_star AS (
-          SELECT __anchor AS doc_a, __id AS doc_b
-          FROM ranked
-          WHERE __sz > {max_bucket_size} AND __id != __anchor
-        )
-        SELECT DISTINCT CAST(doc_a AS BIGINT) AS doc_a,
-                        CAST(doc_b AS BIGINT) AS doc_b
-        FROM (SELECT doc_a, doc_b FROM pairs_exact
-              UNION ALL
-              SELECT doc_a, doc_b FROM pairs_star)
-    """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
-
-
-def band_keys(
-    sig: DataFrame, id_col: str, n_hashes: int = 8, bands: int = 4
-) -> DataFrame:
-    """(id, band, band_key) rows from a wide signature frame — band_key
-    = md5 of the band's r=n_hashes/bands consecutive signature values.
-    One explode instead of a bands-way union: the signature subtree is
-    computed once, not ``bands`` times."""
-    r = n_hashes // bands
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|", F.lit(b), *[F.col(str(b * r + j)) for j in range(r)]
-                    )
-                ).alias("band_key"),
-            )
-            for b in range(bands)
-        ]
-    )
-    return sig.select(F.col(id_col), F.explode(band_structs).alias("bk")).select(
-        id_col, F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
-    )
-
-
-def pairs_from_signatures(
-    sig: DataFrame,
-    id_col: str,
-    n_hashes: int = 8,
-    bands: int = 4,
-    max_bucket_size: int = 1000,
-) -> DataFrame:
-    """LSH banding over a precomputed signature frame (see
-    minhash_lsh_pairs for semantics; split out for signature reuse)."""
-    banded = band_keys(sig, id_col, n_hashes=n_hashes, bands=bands)
-    # group-collect instead of self-join: the signature subtree is
-    # evaluated ONCE (a self-join would recompute it per side), and
-    # in-bucket pair generation is a double explode of the bucket
-    # member list — bounded by max_bucket_size, so no giant-array row.
-    # Bucket size is computed streaming in the same window shuffle as
-    # the member rank (one exchange, two sorts).
-    size_w = Window.partitionBy("band", "band_key")
-    ranked = banded.withColumn("__sz", F.count("*").over(size_w)).withColumn(
-        "__anchor", F.min(F.col(id_col)).over(size_w)
-    )
-    small_buckets = (
-        ranked.where((F.col("__sz") >= 2) & (F.col("__sz") <= max_bucket_size))
-        .groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-    )
-    pairs_exact = (
-        small_buckets.select(F.posexplode("ids").alias("pos", "doc_a"), F.col("ids"))
-        .select(
-            F.col("doc_a"),
-            F.explode(F.slice(F.col("ids"), F.col("pos") + 2, F.size("ids"))).alias(
-                "doc_b"
-            ),
-        )
-    )
-    pairs_star = (
-        ranked.where((F.col("__sz") > max_bucket_size) & (F.col(id_col) != F.col("__anchor")))
-        .select(F.col("__anchor").alias("doc_a"), F.col(id_col).alias("doc_b"))
-    )
-    return (
-        pairs_exact.unionByName(pairs_star)
-        .select(F.col("doc_a").cast("long"), F.col("doc_b").cast("long"))
-        .distinct()
+    par = df.sparkSession.sparkContext.defaultParallelism
+    sh = _shingle_sql(_DOCS, id_col, text_col, shingle_k, par)
+    sig = _sig_sql(f"({sh})", id_col, n_hashes)
+    banded = _band_sql(f"({sig})", id_col, n_hashes, bands)
+    return df.sparkSession.sql(
+        _pairs_sql(f"({banded})", id_col, max_bucket_size), docs=df
     )
 
 
@@ -488,22 +380,16 @@ def ngram_jaccard_pairs(
     two post-aggregation size-lookup joins the op otherwise needs.
     Output: (doc_a, doc_b, jaccard).
 
-    One spark.sql statement over a temp view (one Catalyst analysis
-    pass — see minhash_lsh_pairs); expressions verbatim from the prior
-    DataFrame rendering, oracle-locked."""
-    import uuid
-
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    view = f"__nj_docs_{uuid.uuid4().hex[:12]}"
-    df.createOrReplaceTempView(view)
+    One spark.sql statement over the shingle fragment (one Catalyst
+    analysis pass — see minhash_lsh_pairs), oracle-locked via x04."""
+    par = df.sparkSession.sparkContext.defaultParallelism
     t = f"CAST({threshold!r} AS DOUBLE)"
     idq = _bq(id_col)
     sql = f"""
         WITH sized AS (
           SELECT {idq}, shingle,
                  COUNT(*) OVER (PARTITION BY {idq}) AS n_sh
-          FROM ({_shingle_sql(view, id_col, text_col, k, par)})
+          FROM ({_shingle_sql(_DOCS, id_col, text_col, k, par)})
         )
         SELECT CAST(doc_a AS BIGINT) AS doc_a,
                CAST(doc_b AS BIGINT) AS doc_b,
@@ -521,11 +407,7 @@ def ngram_jaccard_pairs(
                     GROUP BY a.{idq}, b.{idq}, a.n_sh, b.n_sh))
         WHERE jaccard >= {t}
     """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
+    return df.sparkSession.sql(sql, docs=df)
 
 
 def common_shingle_stats(
@@ -596,11 +478,19 @@ def split_leakage(
     Output: (split, n_docs, n_leaked, leak_ratio) — one row per
     non-train split.
     """
-    g = df.select(
-        F.col(id_col),
-        F.col(split_col),
-        F.explode(shingle_array(F.col(text_col), n)).alias("gram"),
-    ).where(F.col("gram") != "")
+    g = (
+        df.select(
+            F.col(id_col),
+            F.col(split_col),
+            F.split(F.col(text_col), " ").alias("__words"),
+        )
+        .select(
+            F.col(id_col),
+            F.col(split_col),
+            F.explode(shingles_of("__words", n)).alias("gram"),
+        )
+        .where(F.col("gram") != "")
+    )
     train_grams = (
         g.where(F.col(split_col) == train_name).select("gram").distinct()
     )
@@ -753,13 +643,16 @@ def embedding_neardup_pairs(
     # (here: one → a single task evaluated every pair). One cheap
     # shuffle of the (id, vec) rows; the broadcast side is unaffected.
     # Width-gated (r14, settling the r13 verdict's one open
-    # regression): an input that already arrives in >= par partitions
-    # gains nothing from the shuffle — skip it so already-parallel
-    # corpora don't pay an extra exchange. The partition probe is
-    # plan-only (no job, sub-ms).
+    # regression): an input that already scans >= par files gains
+    # nothing from the shuffle — skip it so already-parallel corpora
+    # don't pay an extra exchange. The probe is the input file count:
+    # analysis-only, so it launches no job even on a composed input
+    # (an .rdd partition probe would physical-plan the input and fire
+    # its broadcast jobs). Non-file inputs report zero files and keep
+    # the repartition.
     par = df.sparkSession.sparkContext.defaultParallelism
     a = v
-    if v.rdd.getNumPartitions() < par:
+    if len(df.inputFiles()) < par:
         a = a.repartition(par, F.col("vid"))
     a = a.alias("a")
     b = v.alias("b")
@@ -841,8 +734,8 @@ def dedup_clusters(
     # removes 2 of 5 stages per round (measured in OPTIMIZATION_r13.md).
     from pyspark.sql import Observation
 
-    def _observed_checkpoint(edges: DataFrame, tag: str):
-        obs = Observation(tag)
+    def _observed_checkpoint(edges: DataFrame):
+        obs = Observation()  # unnamed = a fresh random name per round
         ck = edges.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
@@ -866,23 +759,18 @@ def dedup_clusters(
     # comp construction dedupes once.
     #
     # The full alternation (large star ∘ small star) is ONE spark.sql
-    # statement over a temp view of the checkpointed edges: the
-    # DataFrame rendering re-ran Catalyst analysis on every chained
-    # transformation (~15 analysis passes/round, measured ~0.2 s/round
-    # of pure driver time at sf0.1 — r13 optimization round); one SQL
-    # statement is one analysis pass, with a physical plan identical
-    # operator-for-operator to the DataFrame version.
-    import uuid
-
-    spark = pairs.sparkSession
-    view = f"__cc_edges_{uuid.uuid4().hex[:12]}"
-    round_sql = f"""
+    # statement over the checkpointed edges: a chained DataFrame
+    # rendering re-ran Catalyst analysis on every transformation (~15
+    # analysis passes/round, measured ~0.2 s/round of pure driver time
+    # at sf0.1 — r13 optimization round); one SQL statement is one
+    # analysis pass, with the same physical plan.
+    round_sql = """
         WITH ls AS (
           SELECT dst AS src, m AS dst FROM (
             SELECT src, dst, LEAST(MIN(dst) OVER (PARTITION BY src), src) AS m
-            FROM (SELECT src, dst FROM {view}
+            FROM (SELECT src, dst FROM {edges}
                   UNION ALL
-                  SELECT dst AS src, src AS dst FROM {view})
+                  SELECT dst AS src, src AS dst FROM {edges})
           ) WHERE dst > src AND dst <> m
         )
         SELECT e.s AS src, e.m AS dst
@@ -907,18 +795,12 @@ def dedup_clusters(
     # convergence compares consecutive ROUND checksums instead
     prev = None
     rounds = 0
-    try:
-        for i in range(max_iter):
-            edges.createOrReplaceTempView(view)
-            edges, cur = _observed_checkpoint(
-                spark.sql(round_sql), f"__cc_round_{view}_{i}"
-            )
-            rounds += 1
-            if cur == prev:
-                break
-            prev = cur
-    finally:
-        spark.catalog.dropTempView(view)
+    for _ in range(max_iter):
+        edges, cur = _observed_checkpoint(pairs.sparkSession.sql(round_sql, edges=edges))
+        rounds += 1
+        if cur == prev:
+            break
+        prev = cur
     if stats is not None:
         stats["rounds"] = rounds
     # fixpoint edge set is a union of stars: (node, component_min) for
@@ -969,7 +851,7 @@ def ngram_decontaminate(
     """
     bench_grams = (
         benchmark.select(F.split(F.lower(F.col(text_col)), " ").alias("__words"))
-        .select(F.explode(shingles_of(F.col("__words"), n)).alias("gram"))
+        .select(F.explode(shingles_of("__words", n)).alias("gram"))
         .where(F.col("gram") != "")
         .distinct()
     )
@@ -980,7 +862,7 @@ def ngram_decontaminate(
         )
         .select(
             F.col("doc_id"),
-            F.explode(shingles_of(F.col("__words"), n)).alias("gram"),
+            F.explode(shingles_of("__words", n)).alias("gram"),
         )
         .where(F.col("gram") != "")
     )
@@ -1008,7 +890,6 @@ def minhash_jaccard_estimate(
     bands: int = 4,
     shingle_k: int = 3,
     max_bucket_size: int = 1000,
-    persist: bool = True,
 ) -> DataFrame:
     """Sketch accuracy, measured: for every LSH candidate pair, the
     MinHash Jaccard ESTIMATE (signature agreement rate — what a 100 TB
@@ -1025,26 +906,21 @@ def minhash_jaccard_estimate(
     Caveats: pairs inherit ``max_bucket_size`` hot-bucket degradation
     (buckets past the cap emit star pairs, not all pairs) — a plain-SQL
     oracle enumerating exact per-bucket pairs only matches while every
-    bucket is under the cap. The two persisted intermediates stay
-    cached for the session (the result is lazy, so this function
-    cannot unpersist them itself); pass ``persist=False`` in
-    long-lived sessions that call this repeatedly, or clear with
-    ``spark.catalog.clearCache()``.
+    bucket is under the cap.
 
     Output: (doc_a, doc_b, est_jaccard, exact_jaccard).
     """
-    from pyspark import StorageLevel
-
     # shingles feed three consumers (signatures → est + pairs, exact
-    # intersection, per-doc counts) and signatures feed two — persist
-    # both so the shingle fan-out runs once, spilling to disk if the
-    # corpus outgrows executor memory
-    sh_raw = word_shingles(df, id_col, text_col, k=shingle_k)
-    if persist:
-        sh_raw = sh_raw.persist(StorageLevel.MEMORY_AND_DISK)
-    sig = signatures_from_shingles(sh_raw, id_col, n_hashes=n_hashes)
-    if persist:
-        sig = sig.persist(StorageLevel.MEMORY_AND_DISK)
+    # intersection, per-doc counts) and signatures feed two — LAZY
+    # local checkpoints run the shingle fan-out once, in the first job
+    # that needs it, and (unlike persist) leave no CacheManager entry
+    # that outlives the call or serves a later query's plan
+    sh_raw = word_shingles(df, id_col, text_col, k=shingle_k).localCheckpoint(
+        eager=False
+    )
+    sig = signatures_from_shingles(sh_raw, id_col, n_hashes=n_hashes).localCheckpoint(
+        eager=False
+    )
     pairs = pairs_from_signatures(
         sig, id_col, n_hashes=n_hashes, bands=bands,
         max_bucket_size=max_bucket_size,

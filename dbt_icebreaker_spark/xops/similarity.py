@@ -16,6 +16,8 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _bq
+
 
 def _as_double_vec(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
     v = df.select(
@@ -47,21 +49,11 @@ def cosine_topk(
     partial-rank pushdown). Output: (query_id, neighbor_id, cosine,
     rank), ties broken by neighbor_id.
 
-    One spark.sql statement over temp views (one Catalyst analysis
-    pass — see dedup.minhash_lsh_pairs); expressions verbatim from the
-    prior DataFrame rendering, oracle-locked via x06.
+    One spark.sql statement (one Catalyst analysis pass — see
+    dedup.minhash_lsh_pairs), oracle-locked via x06.
     """
-    import uuid
 
-    spark = corpus.sparkSession
-    tok = uuid.uuid4().hex[:12]
-    cview, qview = f"__ct_corpus_{tok}", f"__ct_queries_{tok}"
-    corpus.createOrReplaceTempView(cview)
-    queries.createOrReplaceTempView(qview)
-
-    from .dedup import _bq
-
-    def _vec_cte(view: str, out_id: str) -> str:
+    def _vec_cte(src: str, out_id: str) -> str:
         return f"""
           SELECT {out_id}, {out_id}_vec,
                  sqrt(aggregate({out_id}_vec, 0.0D,
@@ -69,12 +61,12 @@ def cosine_topk(
           FROM (SELECT {_bq(id_col)} AS {out_id},
                        transform({_bq(vec_col)}, x -> CAST(x AS DOUBLE))
                          AS {out_id}_vec
-                FROM {view})
+                FROM {src})
         """
 
     sql = f"""
-        WITH q AS ({_vec_cte(qview, "query_id")}),
-        c AS ({_vec_cte(cview, "neighbor_id")}),
+        WITH q AS ({_vec_cte("{queries}", "query_id")}),
+        c AS ({_vec_cte("{corpus}", "neighbor_id")}),
         scored AS (
           SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,
                  aggregate(zip_with(query_id_vec, neighbor_id_vec,
@@ -94,12 +86,7 @@ def cosine_topk(
               FROM scored)
         WHERE rank <= {k}
     """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(cview)
-        spark.catalog.dropTempView(qview)
-    return out
+    return corpus.sparkSession.sql(sql, corpus=corpus, queries=queries)
 
 
 def hyperplane_buckets(
@@ -237,11 +224,10 @@ def kmeans_centroids(
     rendering nested each iteration inside the next and re-ran
     Catalyst analysis per transformation (~0.6 s of driver time per
     call at sf0.1, paid by x38/x11/x15); one statement is one
-    analysis pass. Expressions mirror the prior DataFrame rendering
-    verbatim (argmin in a projection BELOW the posexplode — in the
-    same SELECT as the LATERAL VIEW it would re-evaluate per exploded
-    element, dim× per vector), so plan shape and output are unchanged
-    — oracle-locked via x38/x11/x15.
+    analysis pass. The argmin sits in a projection BELOW the
+    posexplode — in the same SELECT as the LATERAL VIEW it would
+    re-evaluate per exploded element, dim× per vector. Oracle-locked
+    via x38/x11/x15.
 
     centroid_round quantizes each mean (e.g. 9 dp): summation order
     across engines/partitions perturbs the last bits, and an
@@ -249,11 +235,6 @@ def kmeans_centroids(
     argmin — the one cascade point in an otherwise deterministic
     pipeline (same defense as lsh_topk.round_to).
     """
-    import uuid
-
-    spark = base.sparkSession
-    view = f"__km_vecs_{uuid.uuid4().hex[:12]}"
-    base.createOrReplaceTempView(view)
     argmin = (
         "array_min(transform(cs, c -> named_struct('dist', "
         "aggregate(zip_with(bid_vec, c.centroid, (x, y) -> (x - y) * (x - y)),"
@@ -285,13 +266,11 @@ def kmeans_centroids(
           GROUP BY cell
         )""")
         prev = f"centroids{i}"
-    from .dedup import _bq
-
     sql = f"""
         WITH v AS (
           SELECT {_bq(id_col)} AS bid,
                  transform({_bq(vec_col)}, x -> CAST(x AS DOUBLE)) AS bid_vec
-          FROM {view}
+          FROM {{base}}
         ),
         init AS (
           SELECT CAST(ROW_NUMBER() OVER (ORDER BY __ord) AS INT) AS cell,
@@ -301,11 +280,7 @@ def kmeans_centroids(
         ){''.join(ctes)}
         SELECT cell, centroid FROM {prev}
     """
-    try:
-        out = spark.sql(sql)
-    finally:
-        spark.catalog.dropTempView(view)
-    return out
+    return base.sparkSession.sql(sql, base=base)
 
 
 def _nearest_cell(cells_col, vec_col):

@@ -328,7 +328,7 @@ AGG_CASES = [
 
 
 # round-6a sweep lock: semantic traps where Spark's same-named builtin
-# silently differs from Snowflake (probe_sweep_r6a found the first 5)
+# silently differs from Snowflake (the round-6a probe sweep found the first 5)
 R6_CASES = [
     # Snowflake GREATEST/LEAST propagate NULL; Spark's skip it
     ("SELECT GREATEST(1, 5, NULL)", ("__NULL__",)),
@@ -907,7 +907,7 @@ class TestToQueryR8:
 
 
 R8C_CASES = [
-    # r8 sweep lock-ins (scripts/probe_sweep_r8a.py + adversarial
+    # r8 sweep lock-ins (the round-8a probe sweep + adversarial
     # probes): EDITDISTANCE NULL cap must propagate NULL (greatest()
     # skips NULLs — the nvl2 guard), runtime-negative caps clamp to 0
     ("SELECT EDITDISTANCE('ab', 'cd', NULL) IS NULL", True),

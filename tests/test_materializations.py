@@ -3147,8 +3147,8 @@ class TestTimeTravelR7:
 
 
 class TestR7bSweep:
-    """Round-7b probe-sweep lock-ins (scripts/probe_sweep_r7b.py, 16
-    executed materialization/session shapes) — snapshot hard-delete/
+    """Round-7b probe-sweep lock-ins (16 materialization/session
+    shapes executed in that sweep) — snapshot hard-delete/
     re-add/NULL transitions, incremental NULL-key merge and schema
     evolution, session-variable actionability (sweep finding)."""
 

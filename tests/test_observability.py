@@ -5,6 +5,7 @@ arithmetic and sync orchestration."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -62,6 +63,36 @@ class TestCrashWal:
         w.post_execute("m", success=False)
         w.clear("m")
         assert w.crash_count("m") == 0
+
+    def test_concurrent_threads(self, tmp_path):
+        # ProjectRunner(threads>1) drives one WAL from a thread pool:
+        # saving must never iterate a dict another thread is growing,
+        # and the file must reload with every model
+        import threading
+
+        p = str(tmp_path / "wal.json")
+        w = CrashWal(p)
+        errors = []
+
+        def work(t):
+            try:
+                for i in range(100):  # 200 calls per thread
+                    w.pre_execute(f"t{t}_m{i % 25}")
+                    w.post_execute(f"t{t}_m{i % 25}", success=i % 2 == 0)
+            except Exception as e:  # noqa: BLE001 — surfaced below
+                errors.append(e)
+
+        threads = [threading.Thread(target=work, args=(t,)) for t in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+        assert errors == []
+        state = json.loads(open(p).read())
+        assert set(state) == {f"t{t}_m{i}" for t in range(8) for i in range(25)}
+        assert all(e["status"] != "running" for e in state.values())
+        assert CrashWal(p).crash_count("t3_m1") == 2  # i = 1, 51
+        assert sorted(os.listdir(tmp_path)) == ["wal.json"]
 
 
 class TestComplexity:

@@ -412,8 +412,9 @@ class TestRound3OpPlans:
         plan = _executed_plan(qs["x37_common_shingles"](spark, SF_DIR))
         tree = _final_tree(plan)
         assert "PythonUDF" not in plan
-        # shingle-key exchanges + per-doc agg exchange; the repartition
-        # in word_shingles adds one more — cap the total
+        # shingle-key exchanges + per-doc agg exchange; the shingle
+        # fragment's REPARTITION(par, id) hint adds one more — cap the
+        # total
         assert len(re.findall(r"\bExchange \(\d+\)", tree)) <= 5
 
     def test_semantic_dedup_broadcasts_centroids(self, spark, qs):

@@ -605,8 +605,8 @@ class TestLoadProjectReviewFixes:
 
 
 class TestR7cStreamingEdges:
-    """Round-7c streaming sweep lock-ins (scripts/probe_sweep_r7c.py,
-    9 executed edges, all green — semantics pinned so they can't
+    """Round-7c streaming sweep lock-ins (9 edges executed in that
+    sweep, all green — semantics pinned so they can't
     drift): NULL-key dedup parity, exact session-gap boundaries,
     inclusive attribution horizon, append-mode subset contract."""
 

@@ -953,8 +953,8 @@ class TestUnquotedProcTrailingR7:
 
 
 class TestR7aSweep:
-    """Round-7 probe-sweep lock-ins (scripts/probe_sweep_r7a.py, 69
-    executed shapes): variable/column collisions in every expression
+    """Round-7 probe-sweep lock-ins (69 shapes executed in that
+    sweep): variable/column collisions in every expression
     position, variable-parameterized cursors, CALL in loops, RESULTSET
     reassignment + TABLE(rs) in embedded SQL (sweep finding), VARIANT
     variables through json paths (sweep finding), handler scoping."""

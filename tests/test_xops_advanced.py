@@ -59,33 +59,10 @@ class TestDedupClusters:
         got = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
         assert got == {1: 1, 2: 1, 3: 1}
 
-    def test_sql_rendering_matches_dataframe_rendering(self, spark):
-        # r13 optimization: minhash_lsh_pairs / minhash_signatures are
-        # one-statement SQL renderings; the composable DataFrame
-        # rendering (word_shingles → signatures_from_shingles →
-        # pairs_from_signatures) is retained and must stay
-        # row-identical — this is the equivalence the oracle relies on
-        register_dir(spark, SF)
-        docs = spark.table("documents")
-        ref_sig = dedup.signatures_from_shingles(
-            dedup.word_shingles(docs, "doc_id", "text", k=3), "doc_id"
-        )
-        new_sig = dedup.minhash_signatures(docs, "doc_id", "text")
-        assert new_sig.columns == ref_sig.columns
-        assert sorted(map(tuple, new_sig.collect())) == sorted(
-            map(tuple, ref_sig.collect())
-        )
-        ref_pairs = dedup.pairs_from_signatures(ref_sig, "doc_id")
-        new_pairs = dedup.minhash_lsh_pairs(docs, "doc_id", "text")
-        assert sorted(map(tuple, new_pairs.collect())) == sorted(
-            map(tuple, ref_pairs.collect())
-        )
-
     def test_ngram_jaccard_sql_matches_dataframe_rendering(self, spark):
-        # r13 advisor: the ngram_jaccard_pairs SQL rewrite had no
-        # direct equivalence test — pin it against the retained
-        # DataFrame building blocks (word_shingles + window + size-
-        # ratio-pruned join), expressions mirrored from the docstring
+        # r13 advisor: pin the one-statement ngram_jaccard_pairs
+        # against a reference built here from word_shingles + window +
+        # size-ratio-pruned join, expressions mirrored from the docstring
         from pyspark.sql import Window
 
         register_dir(spark, SF)
@@ -174,33 +151,44 @@ class TestDedupClusters:
 
     def test_sql_renderings_accept_quoted_identifiers(self, spark):
         # r14 (r13 advisor): interpolated identifiers are backtick-
-        # escaped, so column names needing quoting work like they did
-        # under the F.col()-based renderings
+        # escaped, so column names needing quoting work like they do
+        # under F.col(); braces are doubled so the names also survive
+        # spark.sql's DataFrame-argument formatter
         register_dir(spark, SF)
-        docs = (
-            spark.table("documents").filter(F.col("doc_id") < 300)
-            .select(F.col("doc_id").alias("doc id"),
-                    F.col("text").alias("the text"))
-        )
         plain = spark.table("documents").filter(F.col("doc_id") < 300)
-        got = dedup.minhash_lsh_pairs(docs, "doc id", "the text")
-        want = dedup.minhash_lsh_pairs(plain, "doc_id", "text")
-        assert sorted(map(tuple, got.collect())) == sorted(
-            map(tuple, want.collect())
+        want = sorted(
+            map(tuple, dedup.minhash_lsh_pairs(plain, "doc_id", "text").collect())
         )
-        emb = spark.table("embeddings").select(
-            F.col("vec_id").alias("vec id"),
-            F.col("embedding").alias("the embedding"),
+        want_sh = sorted(
+            map(tuple, dedup.word_shingles(plain, "doc_id", "text").collect())
         )
-        out = similarity.cosine_topk(
-            emb, emb.filter(F.col("vec id") < 5),
-            id_col="vec id", vec_col="the embedding", k=3,
-        )
-        assert out.count() > 0
-        cents = similarity.kmeans_centroids(
-            emb, id_col="vec id", vec_col="the embedding", n_cells=4, iters=1
-        )
-        assert cents.count() == 4
+        for id_name, text_name in (("doc id", "the text"), ("doc{id}", "te}x{t")):
+            docs = plain.select(
+                F.col("doc_id").alias(id_name), F.col("text").alias(text_name)
+            )
+            got = dedup.minhash_lsh_pairs(docs, id_name, text_name)
+            assert sorted(map(tuple, got.collect())) == want
+            sh = dedup.word_shingles(docs, id_name, text_name)
+            assert sh.columns == [id_name, "shingle"]
+            assert sorted(map(tuple, sh.collect())) == want_sh
+        want_top = None
+        for id_name, vec_name in (("vec id", "the embedding"), ("vec{id", "emb}")):
+            emb = spark.table("embeddings").select(
+                F.col("vec_id").alias(id_name),
+                F.col("embedding").alias(vec_name),
+            )
+            out = similarity.cosine_topk(
+                emb, emb.filter(F.col(id_name) < 5),
+                id_col=id_name, vec_col=vec_name, k=3,
+            )
+            top = sorted(map(tuple, out.collect()))
+            assert top
+            assert want_top is None or top == want_top
+            want_top = top
+            cents = similarity.kmeans_centroids(
+                emb, id_col=id_name, vec_col=vec_name, n_cells=4, iters=1
+            )
+            assert cents.count() == 4
 
     def test_pipeline_over_fixture(self, spark):
         register_dir(spark, SF)
@@ -595,6 +583,16 @@ class TestJaccardEstimate:
             assert 0.0 <= r["est_jaccard"] <= 1.0
             assert abs(r["est_jaccard"] * 8 - round(r["est_jaccard"] * 8)) < 1e-9
             assert 0.0 < r["exact_jaccard"] < 1.0
+
+    def test_leaves_no_cached_intermediates(self, spark):
+        # the shingle/signature intermediates are lazy local
+        # checkpoints, not persist(): nothing stays in the
+        # CacheManager to outlive the call or serve a later plan
+        register_dir(spark, SF)
+        spark.catalog.clearCache()
+        docs = spark.table("documents").filter(F.col("doc_id") < 300)
+        assert dedup.minhash_jaccard_estimate(docs, "doc_id", "text").collect()
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 class TestProfile:
@@ -1125,6 +1123,29 @@ class TestSemanticDedup:
         brute_dropped = {max(p.vec_a, p.vec_b) for p in pairs}
         ids = [r.vec_id for r in emb.select("vec_id").collect()]
         assert sem == {i: i not in brute_dropped for i in ids}
+
+    def test_neardup_width_probe_launches_no_job(self, spark):
+        # the repartition gate of embedding_neardup_pairs must not
+        # plan the input physically: on a broadcast-joined input an
+        # .rdd partition probe fires the broadcast job at build time
+        register_dir(spark, SF)
+        emb = spark.table("embeddings")
+        keep = F.broadcast(emb.filter("vec_id < 100").select("vec_id"))
+        composed = emb.join(keep, "vec_id")
+        sc = spark.sparkContext
+        group = "neardup-probe-test"
+        sc.setJobGroup(group, "neardup build then count")
+        try:
+            pairs = dedup.embedding_neardup_pairs(
+                composed, "vec_id", "embedding", threshold=0.35
+            )
+            build_jobs = sc.statusTracker().getJobIdsForGroup(group)
+            pairs.count()
+            all_jobs = sc.statusTracker().getJobIdsForGroup(group)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert build_jobs == []
+        assert all_jobs  # the group does see this op's jobs once it runs
 
     def test_deterministic_across_partitionings(self, spark):
         register_dir(spark, SF)
