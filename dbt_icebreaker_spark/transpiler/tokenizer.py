@@ -162,11 +162,6 @@ def render(tokens: Iterable[Token]) -> str:
     return "".join(t.text for t in tokens)
 
 
-def strip_ws(tokens: list[Token]) -> list[Token]:
-    """Drop whitespace/comment tokens (for structural matching)."""
-    return [t for t in tokens if t.kind not in (WS, COMMENT)]
-
-
 # OP-pair concatenations that would re-tokenize as one token (a
 # comment marker or a multi-char operator) — e.g. `3 - -1` stripped
 # renders as `3--1`, a line comment

@@ -672,6 +672,46 @@ def embedding_neardup_pairs(
     )
 
 
+# Edge-set size at or below which dedup_clusters stops running star
+# rounds and labels the components on the driver. Measured crossover
+# on local[4] (SCALE.md, "dedup_clusters driver finish"): the driver
+# finish still wins at 3M edges; the cap bounds what one call pulls to
+# the driver (16 bytes an edge as Arrow, ~16 MB here).
+_DRIVER_FINISH_EDGES = 1_000_000
+
+
+def _driver_labels(edges: DataFrame) -> DataFrame:
+    """(__cc_id, __cc_label) for every node of a small checkpointed
+    edge set, labelled on the driver: the edges arrive as one Arrow
+    table, the nodes are renumbered by ``np.unique`` (sorted, so the
+    smallest index is the smallest id), and a vectorized union-find
+    hooks every tree root under the smallest root it shares an edge
+    with, then pointer-jumps until each node points at its root. A
+    root is the minimum of its tree, so the root is the component's
+    minimum id. The frame is built from the Arrow table, not a Python
+    list: a list would become a Python RDD and start Python workers
+    when broadcast."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = edges.toArrow()
+    ends = np.concatenate([t.column("src").to_numpy(), t.column("dst").to_numpy()])
+    nodes, idx = np.unique(ends, return_inverse=True)
+    a, b = np.split(idx, 2)
+    parent = np.arange(len(nodes))
+    while True:
+        while not np.array_equal(up := parent[parent], parent):
+            parent = up
+        ra, rb = parent[a], parent[b]
+        cross = ra != rb
+        if not cross.any():
+            break
+        np.minimum.at(parent, np.maximum(ra, rb)[cross], np.minimum(ra, rb)[cross])
+    return edges.sparkSession.createDataFrame(
+        pa.table({"__cc_id": nodes, "__cc_label": nodes[parent]})
+    )
+
+
 def dedup_clusters(
     pairs: DataFrame,
     docs: DataFrame | None = None,
@@ -687,9 +727,10 @@ def dedup_clusters(
     pairs are transitive ("a≈b, b≈c" ⇒ one group {a,b,c}), so keeping
     "one doc per pair" over- or under-deletes.
 
-    Implemented as the alternating large-star / small-star algorithm
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC 2014) rather than min-label propagation:
+    Large edge sets contract with the alternating large-star /
+    small-star algorithm (Kiveris et al., "Connected Components in
+    MapReduce and Beyond", SoCC 2014) rather than min-label
+    propagation:
 
     - **large-star**: every node links its larger neighbors to the
       minimum of its closed neighborhood; **small-star**: every node
@@ -698,44 +739,40 @@ def dedup_clusters(
       O(log n) in the worst case instead of component diameter —
       on a 100 TB corpus with a few deep chains that is the
       difference between 4 and 40 shuffles;
-    - each half-round is one groupBy (min over 2E edges) + one
-      co-partitioned join + distinct, all O(E);
-    - ``localCheckpoint`` truncates lineage each round — without it
-      the plan doubles per iteration and Catalyst analysis time
-      explodes long before data does; the checkpoint is EAGER and the
-      convergence checksum rides its materialization job as an
-      Observation, so each round stays ONE Spark job with no separate
-      aggregation pass over E;
-    - convergence: the (count, sum(src), sum(dst)) checksum of the
-      edge set is stable across a full alternation exactly at the
-      fixpoint (dst labels are monotonically non-increasing).
+    - each alternation is one spark.sql statement: two window mins,
+      no joins, no distinct, O(E);
+    - every edge set (the input and each round's output) is an EAGER
+      ``localCheckpoint`` — it truncates lineage, without which the
+      plan doubles per round — and the edge count and the
+      (count, sum(src), sum(dst)) checksum ride its materialization
+      job as an Observation, so reading them launches no job.
 
-    ``stats``, if given, receives {"rounds": n} for round-count
-    assertions. If ``docs`` is given, singleton documents (no
-    near-dup edges) are included as their own cluster. Output:
+    Termination, checked before every round (round 0 included):
+
+    - **driver finish**: once the exact edge count is at most
+      ``_DRIVER_FINISH_EDGES``, the edges are pulled as Arrow and
+      labelled by a vectorized union-find on the driver
+      (``_driver_labels``), and the labels are broadcast back. Both
+      star ops keep every node and its component, so labels from any
+      round's edge set equal the fixpoint's. The pull is bounded by
+      that count, never by an estimate. Small graphs (most dedup
+      batches) run no star round at all;
+    - **fixpoint**: the checksum of two consecutive rounds is equal
+      exactly at the fixpoint (dst labels are monotonically
+      non-increasing); the fixpoint edge set is a union of stars
+      (node, component min), read back with one distributed group-by;
+    - otherwise, after ``max_iter`` rounds, ValueError — never a
+      partially contracted (wrong) clustering.
+
+    ``stats``, if given, receives {"rounds": n}, the number of star
+    rounds run. If ``docs`` is given, singleton documents (no near-dup
+    edges) are included as their own cluster. Output:
     (doc_id, cluster_id, is_canonical).
     """
-    # no input distinct: duplicate / reversed pairs are tolerated by
-    # both star ops (multiset stays bounded, dupes collapse through
-    # small-star's center pass), and LSH pair generators already
-    # dedupe — paying a shuffle here would be pure overhead
-    e = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=False)
-    )
-
-    # convergence checksum rides the checkpoint-materialization job as
-    # an Observation (CollectMetrics) instead of a separate agg job
-    # per round: one job per round does star ops + checkpoint + metric,
-    # where the r12 shape paid the same job PLUS a two-stage aggregate
-    # (partial + singleton exchange) to read the checksum back. At
-    # 100 TB that is one fewer pass over E per round; at sf0.1 it
-    # removes 2 of 5 stages per round (measured in OPTIMIZATION_r13.md).
     from pyspark.sql import Observation
 
     def _observed_checkpoint(edges: DataFrame):
-        obs = Observation()  # unnamed = a fresh random name per round
+        obs = Observation()  # unnamed = a fresh random name per call
         ck = edges.observe(
             obs,
             F.count(F.lit(1)).alias("n"),
@@ -788,30 +825,44 @@ def dedup_clusters(
         WHERE e.s <> e.m
     """
 
-    edges = e
-    # no baseline checksum of the input: it bought only early exit on
-    # an ALREADY-converged edge set (one extra round there, a rare
-    # shape) while costing one full aggregation job on every call —
-    # convergence compares consecutive ROUND checksums instead
+    # no input distinct: duplicate / reversed pairs are tolerated by
+    # both star ops (multiset stays bounded, dupes collapse through
+    # small-star's center pass) and by the driver finish, and LSH pair
+    # generators already dedupe — a shuffle here would be pure overhead
+    edges, cur = _observed_checkpoint(
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .filter(F.col("src") != F.col("dst"))
+    )
+    # the input's checksum never counts towards convergence: only a
+    # round's output is in the stars form the fixpoint test assumes
     prev = None
     rounds = 0
-    for _ in range(max_iter):
-        edges, cur = _observed_checkpoint(pairs.sparkSession.sql(round_sql, edges=edges))
+    while cur[0] > _DRIVER_FINISH_EDGES and cur != prev:
+        if rounds == max_iter:
+            raise ValueError(
+                f"dedup_clusters: no fixpoint after {max_iter} star rounds "
+                f"and {cur[0]} edges remain, above the driver-finish cap "
+                f"of {_DRIVER_FINISH_EDGES} — raise max_iter"
+            )
+        prev = cur if rounds else None
+        edges, cur = _observed_checkpoint(
+            pairs.sparkSession.sql(round_sql, edges=edges)
+        )
         rounds += 1
-        if cur == prev:
-            break
-        prev = cur
     if stats is not None:
         stats["rounds"] = rounds
-    # fixpoint edge set is a union of stars: (node, component_min) for
-    # every non-min node; minima label themselves
-    comp = edges.select(
-        F.col("src").alias("__cc_id"), F.col("dst").alias("__cc_label")
-    ).unionByName(
-        edges.select(
-            F.col("dst").alias("__cc_id"), F.col("dst").alias("__cc_label")
-        )
-    ).groupBy("__cc_id").agg(F.min("__cc_label").alias("__cc_label"))
+    if cur[0] <= _DRIVER_FINISH_EDGES:
+        comp = F.broadcast(_driver_labels(edges))
+    else:
+        # fixpoint edge set is a union of stars: (node, component_min)
+        # for every non-min node; minima label themselves
+        comp = edges.select(
+            F.col("src").alias("__cc_id"), F.col("dst").alias("__cc_label")
+        ).unionByName(
+            edges.select(
+                F.col("dst").alias("__cc_id"), F.col("dst").alias("__cc_label")
+            )
+        ).groupBy("__cc_id").agg(F.min("__cc_label").alias("__cc_label"))
     if docs is not None:
         out = docs.select(F.col(id_col).cast("long").alias("doc_id")).join(
             comp, F.col("doc_id") == F.col("__cc_id"), "left"

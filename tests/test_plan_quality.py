@@ -306,6 +306,18 @@ class TestSaltedJoin:
         plan = _executed_plan(salted_join(left, right, on="k", n_salts=8))
         assert SALT_COL in plan  # the physical join keys carry the salt
 
+    def test_top_keys_heaviest_first(self, spark):
+        # X12 diagnostic: the k heaviest keys with their row counts,
+        # heaviest first (hot key 7: 2000 rows + its 10 in the tail)
+        from dbt_icebreaker_spark.xops.skew import top_keys
+
+        df = self._skewed(spark)
+        top = [tuple(r) for r in top_keys(df, "k", k=3).collect()]
+        assert len(top) == 3
+        assert top[0] == (7, 2010)
+        assert [n for _, n in top[1:]] == [10, 10]
+        assert [tuple(r) for r in top_keys(df, ["k"], k=1).collect()] == [(7, 2010)]
+
     def test_right_join_rejected(self, spark):
         import pytest as _pytest
 
@@ -607,6 +619,41 @@ class TestRound3PlanShapes:
         plan = _final_tree(_executed_plan(out))
         assert "BroadcastExchange" in plan
         assert "CartesianProduct" not in plan
+
+    def test_x14_job_floor_no_python_worker(self, spark, qs):
+        """x14 (LSH pairs → dedup_clusters) at sf0.001 finishes its
+        small edge set on the driver: build + collect stay within the
+        measured job count (the star-round rendering ran 12), and no
+        stage runs a Python worker — the driver's label frame is built
+        from Arrow; a Python-list frame would add a PythonRDD stage."""
+        register_dir(spark, SF_DIR)  # registration jobs stay outside
+        sc = spark.sparkContext
+        group = "x14-job-floor"
+        sc.setJobGroup(group, "x14 build then collect")
+        try:
+            qs["x14_dedup_clusters"](spark, SF_DIR).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        tracker = sc.statusTracker()
+        jobs = tracker.getJobIdsForGroup(group)
+        assert 0 < len(jobs) <= 7
+        store = sc._jsc.sc().statusStore()
+
+        def rdd_names(cluster):
+            nodes, subs = cluster.childNodes(), cluster.childClusters()
+            for i in range(nodes.size()):
+                yield nodes.apply(i).name()
+            for i in range(subs.size()):
+                yield from rdd_names(subs.apply(i))
+
+        python = [
+            (s, n)
+            for j in jobs
+            for s in tracker.getJobInfo(j).stageIds
+            for n in rdd_names(store.operationGraphForStage(s).rootCluster())
+            if "Python" in n
+        ]
+        assert python == []
 
 
 class TestRound6DmlPlans:

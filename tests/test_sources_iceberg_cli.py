@@ -50,6 +50,31 @@ class TestVariantIngest:
         assert spark.sql(sql).collect()[0].a == 7
 
 
+class TestAutoCacheSources:
+    def test_caches_only_missing_refs(self, spark, tmp_path):
+        # S3: every schema.table a SQL string reads that the catalog
+        # lacks is fetched, cached and registered; a present one is not
+        from dbt_icebreaker_spark.sources import auto_cache_sources
+
+        fetched = []
+
+        def fetch(db, schema, table):
+            fetched.append((db, schema, table))
+            return spark.createDataFrame([(1, table)], "id long, src string")
+
+        cache = SourceCache(
+            spark, CacheConfig(cache_dir=str(tmp_path / "cache")), fetch=fetch
+        )
+        cache.register("warehouse", "acs", "present_t")
+        fetched.clear()
+        sql = "SELECT * FROM acs.present_t p JOIN acs.missing_t m ON p.id = m.id"
+        assert auto_cache_sources(cache, sql) == ["acs_missing_t"]
+        assert fetched == [("warehouse", "acs", "missing_t")]
+        assert spark.table("acs_missing_t").collect()[0].src == "missing_t"
+        assert auto_cache_sources(cache, sql) == []
+        assert len(fetched) == 1
+
+
 class TestCliSync:
     def test_sync_command_end_to_end(self, spark, tmp_path, monkeypatch):
         from dbt_icebreaker_spark import cli

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+import pytest
 
 from dbt_icebreaker_spark.sources import register_dir
 from dbt_icebreaker_spark.xops import dedup, similarity
@@ -10,54 +11,117 @@ from dbt_icebreaker_spark.xops import dedup, similarity
 SF = "/root/testdata/sf0.001"
 
 
+def _cap_legs(monkeypatch, n_edges):
+    """Run a dedup_clusters graph test once per driver-finish cap:
+    "rounds" (cap 0: star rounds to the fixpoint), "driver" (the
+    default cap: no round at all) and "after_round" (one below the
+    input's edge count: at least one round, then the driver finish if
+    a round shrank the edge set). Yields the leg's name; the caller
+    checks ``stats["rounds"]`` with ``_check_rounds``."""
+    default = dedup._DRIVER_FINISH_EDGES
+    for leg, cap in (("rounds", 0), ("driver", default), ("after_round", n_edges - 1)):
+        monkeypatch.setattr(dedup, "_DRIVER_FINISH_EDGES", cap)
+        yield leg
+
+
+def _check_rounds(leg, st):
+    if leg == "rounds":
+        assert st["rounds"] >= 2  # the fixpoint needs a confirming round
+    elif leg == "driver":
+        assert st["rounds"] == 0
+    else:
+        assert st["rounds"] >= 1
+
+
 class TestDedupClusters:
-    def test_transitive_components(self, spark):
+    def test_transitive_components(self, spark, monkeypatch):
         # 1-2, 2-3 chain plus 5-6: clusters {1,2,3} and {5,6}
         pairs = spark.createDataFrame(
             [(1, 2), (2, 3), (5, 6)], ["doc_a", "doc_b"]
         )
-        out = dedup.dedup_clusters(pairs).collect()
-        got = {r.doc_id: r.cluster_id for r in out}
-        assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
-        canon = {r.doc_id for r in out if r.is_canonical}
-        assert canon == {1, 5}
+        for leg in _cap_legs(monkeypatch, 3):
+            st: dict = {}
+            out = dedup.dedup_clusters(pairs, stats=st).collect()
+            got = {r.doc_id: r.cluster_id for r in out}
+            assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}, leg
+            canon = {r.doc_id for r in out if r.is_canonical}
+            assert canon == {1, 5}, leg
+            _check_rounds(leg, st)
 
-    def test_singletons_included_with_docs(self, spark):
+    def test_singletons_included_with_docs(self, spark, monkeypatch):
         pairs = spark.createDataFrame([(1, 2)], ["doc_a", "doc_b"])
         docs = spark.createDataFrame([(1,), (2,), (9,)], ["doc_id"])
-        out = {r.doc_id: (r.cluster_id, r.is_canonical)
-               for r in dedup.dedup_clusters(pairs, docs=docs).collect()}
-        assert out == {1: (1, True), 2: (1, False), 9: (9, True)}
+        for leg in _cap_legs(monkeypatch, 1):
+            st: dict = {}
+            out = {r.doc_id: (r.cluster_id, r.is_canonical)
+                   for r in dedup.dedup_clusters(pairs, docs=docs, stats=st).collect()}
+            assert out == {1: (1, True), 2: (1, False), 9: (9, True)}, leg
+            _check_rounds(leg, st)
 
-    def test_long_chain_converges(self, spark):
+    def test_long_chain_converges(self, spark, monkeypatch):
         # path graph 0-1-2-...-9: diameter 9, still one component
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(9)], ["doc_a", "doc_b"]
         )
-        out = dedup.dedup_clusters(pairs).collect()
-        assert {r.cluster_id for r in out} == {0}
-        assert len(out) == 10
+        for leg in _cap_legs(monkeypatch, 9):
+            st: dict = {}
+            out = dedup.dedup_clusters(pairs, stats=st).collect()
+            assert {r.cluster_id for r in out} == {0}, leg
+            assert len(out) == 10, leg
+            _check_rounds(leg, st)
 
-    def test_star_rounds_sublinear_in_diameter(self, spark):
+    def test_star_rounds_sublinear_in_diameter(self, spark, monkeypatch):
         # alternating large/small-star (Kiveris et al. SoCC'14)
         # contracts a diameter-64 path in O(log n) alternations —
         # min-label propagation would need 64 rounds
         pairs = spark.createDataFrame(
             [(i, i + 1) for i in range(64)], ["doc_a", "doc_b"]
         )
-        st: dict = {}
-        out = dedup.dedup_clusters(pairs, stats=st)
-        assert out.select("cluster_id").distinct().collect()[0][0] == 0
-        assert out.count() == 65
-        assert st["rounds"] <= 10  # log-ish, far under diameter 64
+        for leg in _cap_legs(monkeypatch, 64):
+            st: dict = {}
+            out = dedup.dedup_clusters(pairs, stats=st)
+            assert out.select("cluster_id").distinct().collect()[0][0] == 0, leg
+            assert out.count() == 65, leg
+            _check_rounds(leg, st)
+            if leg == "rounds":
+                assert st["rounds"] <= 10  # log-ish, far under diameter 64
 
-    def test_reversed_and_duplicate_edges(self, spark):
+    def test_reversed_and_duplicate_edges(self, spark, monkeypatch):
         # same component given in both orientations + repeats
         pairs = spark.createDataFrame(
             [(2, 1), (1, 2), (3, 2), (2, 3), (3, 2)], ["doc_a", "doc_b"]
         )
-        got = {r.doc_id: r.cluster_id for r in dedup.dedup_clusters(pairs).collect()}
-        assert got == {1: 1, 2: 1, 3: 1}
+        for leg in _cap_legs(monkeypatch, 5):
+            st: dict = {}
+            got = {r.doc_id: r.cluster_id
+                   for r in dedup.dedup_clusters(pairs, stats=st).collect()}
+            assert got == {1: 1, 2: 1, 3: 1}, leg
+            _check_rounds(leg, st)
+            if leg == "after_round":
+                # the first round collapses the duplicates under the
+                # cap: the driver finishes the partly contracted set
+                assert st["rounds"] == 1
+
+    def test_max_iter_exhausted_raises(self, spark, monkeypatch):
+        # star rounds that run out of max_iter above the cap must not
+        # return a partly contracted clustering (the 64-node path
+        # came back as 63 clusters)
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(63)], ["doc_a", "doc_b"]
+        )
+        monkeypatch.setattr(dedup, "_DRIVER_FINISH_EDGES", 0)
+        with pytest.raises(ValueError, match="no fixpoint after 1 star rounds"):
+            dedup.dedup_clusters(pairs, max_iter=1)
+
+    def test_max_iter_under_cap_is_exact(self, spark):
+        # the same path under the default cap: the driver finish is
+        # exact whatever max_iter allows
+        pairs = spark.createDataFrame(
+            [(i, i + 1) for i in range(63)], ["doc_a", "doc_b"]
+        )
+        out = dedup.dedup_clusters(pairs, max_iter=1).collect()
+        assert len(out) == 64
+        assert {r.cluster_id for r in out} == {0}
 
     def test_ngram_jaccard_sql_matches_dataframe_rendering(self, spark):
         # r13 advisor: pin the one-statement ngram_jaccard_pairs
