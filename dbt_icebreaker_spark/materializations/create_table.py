@@ -5,10 +5,12 @@ SELECT …`` (ref table.sql:72-76 renders exactly this) — has no direct
 Spark equivalent on the v1 parquet catalog: Spark's ``REPLACE TABLE``
 needs a DSv2 catalog and errors with UNSUPPORTED_FEATURE. Like COPY
 INTO / MERGE / DELETE (`merge_stmt.py`), the engine parses the
-statement and lowers it onto ``DataFrame.write.mode("overwrite")
-.saveAsTable`` — the same atomic staged-overwrite the table
-materialization (M1) uses, so a crash mid-write never leaves a
-half-replaced table.
+statement and lowers it onto the staged overwrite the incremental
+rewrites use (``incremental._staged_overwrite``: write a staging
+table, then rename-swap), so a crash mid-write never leaves a
+half-replaced table and the SELECT may read the table it replaces.
+The table materialization (M1) does not stage: it writes its target
+directly through ``ddl.write_table``.
 
 ``CLUSTER BY (cols)`` maps to range-repartition + in-partition sort on
 the key order — Snowflake's clustering is LINEAR on the cluster-key
@@ -283,7 +285,6 @@ def run_create_or_replace_table(spark, spec, transpiler, execute_fn) -> dict:
     from .ddl import clear_orphaned_location
 
     if spec.select_sql is not None:
-        from pyspark.sql import Observation
         from pyspark.sql import functions as F
 
         from .incremental import _staged_overwrite
@@ -316,16 +317,13 @@ def run_create_or_replace_table(spark, spec, transpiler, execute_fn) -> dict:
                    .sortWithinPartitions(*spec.cluster_by)
         # staged write + rename swap: survives a crash mid-write and
         # allows the Snowflake rebuild-in-place pattern (SELECT ... FROM
-        # the table being replaced); the row count rides the write via
-        # observe — no second scan of the output
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("n"))
-        # CLUSTER BY just established a range layout — the writer's
-        # size-targeted coalesce must not merge those files back
-        _staged_overwrite(spark, df, spec.target,
-                          size_coalesce=not spec.cluster_by)
+        # the table being replaced). CLUSTER BY just established a
+        # range layout — the writer's size-targeted coalesce must not
+        # merge those files back
+        n = _staged_overwrite(spark, df, spec.target,
+                              size_coalesce=not spec.cluster_by)
         _apply_table_comment(spark, spec)
-        return {"table": spec.target, "rows_affected": obs.get["n"]}
+        return {"table": spec.target, "rows_affected": n}
     if spec.like_source is not None:
         # LIKE: empty copy of the source's schema (Snowflake copies
         # structure, not data). Capture the source schema BEFORE the

@@ -5,8 +5,9 @@ macros/adapters.sql:18-94) plus M7 schema-name generation
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import Optional, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def clear_orphaned_location(spark: SparkSession, qualified_name: str) -> None:
@@ -92,22 +93,37 @@ class Ddl:
         return self.spark.catalog.tableExists(f"{schema}.{identifier}")
 
 
-def configure_writer(
-    writer,
-    partition_by=None,
-    clustered_by=None,
-    buckets=None,
-):
-    """Apply layout options to a DataFrameWriter — shared by the table
-    and incremental materializations so partitioning AND bucketing
-    survive every rewrite path (a bucketed table silently degrading to
-    unbucketed after one merge would lose the zero-Exchange join
-    property nobody re-checks)."""
+def write_table(
+    spark: SparkSession,
+    df: DataFrame,
+    target: str,
+    mode: str = "overwrite",
+    partition_by: Optional[str] = None,
+    clustered_by: str | Sequence[str] | None = None,
+    buckets: Optional[int] = None,
+) -> int:
+    """The one table writer of the materializations: ``saveAsTable``
+    of ``df`` into ``target`` (``overwrite`` or ``append``), returning
+    the rows written. Observe-once invariant: the count is a count(1)
+    observed on ``df`` by the write itself, which evaluates ``df``
+    exactly once — no job of its own, and no caller re-scans
+    ``target`` to learn it. Partitioning and bucketing are re-declared
+    on every write, so a bucketed table keeps its zero-Exchange joins
+    through every rewrite (and Spark accepts the append). An overwrite
+    first clears an orphaned location."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
+
+    if bool(clustered_by) != bool(buckets):
+        raise ValueError("clustered_by and buckets must be set together")
+    if mode == "overwrite":
+        clear_orphaned_location(spark, target)
+    obs = Observation()
+    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(partition_by)
-    if clustered_by and buckets:
+    if clustered_by:
         cols = [clustered_by] if isinstance(clustered_by, str) else list(clustered_by)
         writer = writer.bucketBy(buckets, *cols).sortBy(*cols)
-    elif bool(clustered_by) != bool(buckets):
-        raise ValueError("clustered_by and buckets must be set together")
-    return writer
+    writer.saveAsTable(target)
+    return obs.get["n"]

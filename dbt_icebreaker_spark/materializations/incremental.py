@@ -32,7 +32,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ddl import clear_orphaned_location, configure_writer
+from .ddl import clear_orphaned_location, write_table
 
 
 def _normalize_keys(unique_key: str | Sequence[str] | None) -> list[str]:
@@ -41,24 +41,6 @@ def _normalize_keys(unique_key: str | Sequence[str] | None) -> list[str]:
     if isinstance(unique_key, str):
         return [unique_key]
     return list(unique_key)
-
-
-def _observed_count(df: DataFrame, enabled: bool = True):
-    """(df', get) — the row count rides the NEXT action over df
-    (DataFrame.observe) instead of costing a second full scan job
-    after the write. Valid only when df is evaluated exactly once,
-    which every staged-write/CTAS call site here guarantees (the
-    observe node sits on the final union, never on a subtree the plan
-    references twice). ``get`` blocks until the action completes.
-    With enabled=False returns (df, None) — collect_stats=False
-    callers skip both the observe node and the count."""
-    if not enabled:
-        return df, None
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("n"))
-    return out, (lambda: obs.get["n"])
 
 
 def _sync_partitions(spark: SparkSession, table: str) -> None:
@@ -156,11 +138,13 @@ def _staged_overwrite(
     clustered_by: str | Sequence[str] | None = None,
     buckets: Optional[int] = None,
     size_coalesce: bool = True,
-) -> None:
+) -> int:
     """Replace `target` with `df` even when df reads from target:
     write to a staging table first, then swap. Avoids Spark's
     cannot-overwrite-table-that-is-being-read error without caching
-    the whole result in memory.
+    the whole result in memory. Returns the row count write_table
+    observed on the staging write — the rows of the new target, with
+    no scan of the swapped-in table.
 
     Crash safety: the old table is renamed aside (not dropped) before
     the staging table takes its name, and only dropped once the swap
@@ -173,14 +157,11 @@ def _staged_overwrite(
     staging, backup = _swap_names(target)
     for t in (staging, backup):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        clear_orphaned_location(spark, t)
+    clear_orphaned_location(spark, backup)  # write_table clears staging's
     if size_coalesce:
         # callers that already sized their output (compaction) opt out
         df = _size_coalesced(df)
-    writer = configure_writer(
-        df.write.mode("overwrite"), partition_by, clustered_by, buckets
-    )
-    writer.saveAsTable(staging)
+    n = write_table(spark, df, staging, "overwrite", partition_by, clustered_by, buckets)
     if spark.catalog.tableExists(target):
         spark.sql(f"ALTER TABLE {target} RENAME TO {backup}")
         # the OLD table's layout is unknown to the caller — ask the
@@ -196,6 +177,7 @@ def _staged_overwrite(
         # the unpartitioned common case skips a catalog round trip
         _sync_partitions(spark, target)
     spark.sql(f"DROP TABLE IF EXISTS {backup}")
+    return n
 
 
 def _apply_schema_change(
@@ -332,7 +314,13 @@ def run_incremental(
     merge_exclude_columns: Optional[Sequence[str]] = None,
     collect_stats: bool = True,
 ) -> dict:
-    """Apply one incremental batch. Returns stats dict.
+    """Apply one incremental batch. Returns a stats dict whose
+    ``rows`` is the row count of ``target`` after the call: the count
+    write_table observed wherever the write replaced the whole table,
+    one table count on the in-place paths (``append``,
+    ``merge(append)``, ``insert_overwrite``, ``merge(sql)``) — None
+    there under ``collect_stats=False``, whose callers loop many
+    batches and skip that scan.
 
     ``incremental_predicates`` (dbt contract) bound which TARGET rows
     are eligible for matching: rows outside every predicate are
@@ -354,19 +342,16 @@ def run_incremental(
     extra = {"recovered_swap": recovered} if recovered else {}
     exists = spark.catalog.tableExists(target)
 
+    def _in_place(strategy_name: str, **more) -> dict:
+        rows = spark.table(target).count() if collect_stats else None
+        return {"strategy": strategy_name, "rows": rows, **more, **extra}
+
     if not exists or full_refresh:
         # incremental.sql:73-94 — first run / --full-refresh ⇒ CTAS
-        clear_orphaned_location(spark, target)
-        new_rows, get_n = _observed_count(new_rows, collect_stats)
-        writer = configure_writer(
-            new_rows.write.mode("overwrite"), partition_by, clustered_by, buckets
+        n = write_table(
+            spark, new_rows, target, "overwrite", partition_by, clustered_by, buckets
         )
-        writer.saveAsTable(target)
-        return {
-            "strategy": "create",
-            "rows": get_n() if get_n else None,
-            **extra,
-        }
+        return {"strategy": "create", "rows": n, **extra}
 
     old = spark.table(target)
     old, new_aligned, final_cols = _apply_schema_change(
@@ -375,24 +360,21 @@ def run_incremental(
     schema_widened = list(final_cols) != list(spark.table(target).columns)
     if schema_widened and strategy == "append":
         # append can't widen in place on plain parquet — rewrite once
-        result, get_n = _observed_count(old.unionByName(new_aligned))
-        _staged_overwrite(spark, result, target, partition_by, clustered_by, buckets)
+        n = _staged_overwrite(
+            spark, old.unionByName(new_aligned), target,
+            partition_by, clustered_by, buckets,
+        )
         return {
             "strategy": "append(schema-change rewrite)",
-            "rows": get_n(),
+            "rows": n,
             "schema_change": on_schema_change,
             **extra,
         }
 
     if strategy == "append":
-        # incremental.sql:120-128; a bucketed target needs the bucket
-        # spec re-declared on every append or Spark rejects the write
-        new_aligned, get_n = _observed_count(new_aligned)
-        writer = configure_writer(
-            new_aligned.write.mode("append"), None, clustered_by, buckets
-        )
-        writer.saveAsTable(target)
-        return {"strategy": "append", "rows_appended": get_n(), **extra}
+        # incremental.sql:120-128
+        n = write_table(spark, new_aligned, target, "append", None, clustered_by, buckets)
+        return _in_place("append", rows_appended=n)
 
     def _scope_split(frame: DataFrame):
         """(in_scope, out_of_scope) under incremental_predicates —
@@ -435,14 +417,7 @@ def run_incremental(
             new_aligned.select(*cols).write.mode("overwrite").insertInto(target)
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        return {
-            "strategy": "insert_overwrite",
-            # rows = table scan; callers looping many batches
-            # (microbatch) skip it — at scale one count per window is
-            # a full-table scan per window
-            "rows": spark.table(target).count() if collect_stats else None,
-            **extra,
-        }
+        return _in_place("insert_overwrite")
 
     if strategy == "delete+insert":
         # incremental.sql:130-159: with partition_by, delete whole
@@ -466,9 +441,11 @@ def run_incremental(
             raise ValueError("delete+insert needs unique_key or partition_by")
         if carried is not None:
             kept = kept.unionByName(carried)
-        result, get_n = _observed_count(kept.unionByName(new_aligned))
-        _staged_overwrite(spark, result, target, partition_by, clustered_by, buckets)
-        return {"strategy": "delete+insert", "rows": get_n(), **extra}
+        n = _staged_overwrite(
+            spark, kept.unionByName(new_aligned), target,
+            partition_by, clustered_by, buckets,
+        )
+        return {"strategy": "delete+insert", "rows": n, **extra}
 
     update_cols: Optional[list[str]] = None
     if merge_update_columns:
@@ -534,11 +511,11 @@ def run_incremental(
                 raise
             finally:
                 spark.catalog.dropTempView(view)
-            return {"strategy": "merge(sql)", "rows": spark.table(target).count(), **extra}
+            return _in_place("merge(sql)")
         if not keys:
             # reference merge without unique_key degenerates to append
-            new_aligned.write.mode("append").saveAsTable(target)
-            return {"strategy": "merge(append)", "rows_appended": new_aligned.count(), **extra}
+            n = write_table(spark, new_aligned, target, "append", None, clustered_by, buckets)
+            return _in_place("merge(append)", rows_appended=n)
         # AQE picks broadcast vs shuffle from the batch's runtime size
         # (see delete+insert note — a forced hint OOMs on backfills)
         scoped, carried = _scope_split(old)
@@ -583,22 +560,20 @@ def run_incremental(
             kept = merged
             if carried is not None:
                 kept = kept.unionByName(carried.select(*final_cols))
-            result, get_n = _observed_count(kept.unionByName(new_only))
-            _staged_overwrite(
-                spark, result, target, partition_by, clustered_by, buckets
+            n = _staged_overwrite(
+                spark, kept.unionByName(new_only), target,
+                partition_by, clustered_by, buckets,
             )
-            return {
-                "strategy": "merge(partial-update)",
-                "rows": get_n(),
-                **extra,
-            }
+            return {"strategy": "merge(partial-update)", "rows": n, **extra}
         kept = scoped.join(
             new_aligned.select(keys).distinct(), on=keys, how="left_anti"
         )
         if carried is not None:
             kept = kept.unionByName(carried)
-        result, get_n = _observed_count(kept.unionByName(new_aligned))
-        _staged_overwrite(spark, result, target, partition_by, clustered_by, buckets)
-        return {"strategy": "merge", "rows": get_n(), **extra}
+        n = _staged_overwrite(
+            spark, kept.unionByName(new_aligned), target,
+            partition_by, clustered_by, buckets,
+        )
+        return {"strategy": "merge", "rows": n, **extra}
 
     raise ValueError(f"unknown incremental strategy: {strategy}")

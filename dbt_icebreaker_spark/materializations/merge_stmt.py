@@ -619,8 +619,9 @@ def run_merge_statement(
         inserts = src.join(
             tgt.select(*spec.keys).distinct(), spec.keys, "left_anti"
         )
-        rows = inserts.count()
-        run_incremental(spark, spec.target, inserts, strategy="append")
+        rows = run_incremental(
+            spark, spec.target, inserts, strategy="append", collect_stats=False
+        )["rows_appended"]
     else:  # delete [+ insert]
         keys_df = src.select(*spec.keys).distinct()
         remaining = tgt.join(keys_df, spec.keys, "left_anti")

@@ -30,7 +30,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .ddl import clear_orphaned_location
+from .ddl import write_table
 from .incremental import _normalize_keys, _staged_overwrite, recover_staged_swap
 
 META_COLS = ("dbt_valid_from", "dbt_valid_to", "dbt_scd_id", "dbt_updated_at")
@@ -110,9 +110,7 @@ def run_snapshot(
 
     if not spark.catalog.tableExists(target):
         # snapshot.sql:89-111 — first run CTAS
-        clear_orphaned_location(spark, target)
-        staged.write.mode("overwrite").saveAsTable(target)
-        return {"run": "first", "rows": spark.table(target).count()}
+        return {"run": "first", "rows": write_table(spark, staged, target)}
 
     tgt = spark.table(target)
     history = tgt.filter(F.col("dbt_valid_to").isNotNull())
@@ -166,5 +164,4 @@ def run_snapshot(
     for p in parts[1:]:
         result = result.unionByName(p)
 
-    _staged_overwrite(spark, result, target)
-    return {"run": "update", "rows": spark.table(target).count()}
+    return {"run": "update", "rows": _staged_overwrite(spark, result, target)}

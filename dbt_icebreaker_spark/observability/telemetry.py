@@ -4,12 +4,13 @@ MetadataHarvester + `traffic.py:30-43` thresholds).
 The reference harvests per-model runtime/rows/bytes from warehouse
 query history into a TTL'd JSON cache and feeds the traffic gates
 (max_local_seconds=600, max_spill_bytes=1 GiB). Here the measurement
-source is Spark itself: after each materialization the SQL execution's
-metric accumulators (SQLAppStatusStore — the store behind the Spark
-UI's SQL tab) are aggregated into per-run shuffle-write / spill /
-peak-memory / row numbers and persisted to a JSON history the Advisor
-reads, so second runs get advice derived from what the first run
-actually did rather than from static regexes alone.
+source is Spark itself: after each materialization the metric
+accumulators of every SQL execution the run triggered
+(SQLAppStatusStore — the store behind the Spark UI's SQL tab) are
+aggregated into per-run shuffle-write / spill / peak-memory numbers
+and persisted to a JSON history the Advisor reads, so second runs get
+advice derived from what the first run actually did rather than from
+static regexes alone.
 """
 
 from __future__ import annotations
@@ -60,39 +61,55 @@ _HARVEST = {
     "shuffle bytes written": ("shuffle_write_bytes", "sum"),
     "spill size": ("spill_bytes", "sum"),
     "peak memory": ("peak_memory_bytes", "max"),
-    "number of output rows": ("max_operator_rows", "max"),
 }
 
 
-def harvest_last_execution(spark: SparkSession) -> dict[str, float]:
-    """Aggregate the most recent SQL execution's metrics. Returns {}
-    if the status store is unavailable (non-JVM test doubles etc.)."""
+def newest_execution_id(spark: SparkSession) -> int:
+    """Newest SQL execution id in the status store (-1: none, or no JVM)."""
     try:
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        return execs.apply(execs.size() - 1).executionId() if execs.size() else -1
+    except Exception:
+        return -1
+
+
+def harvest_run(spark: SparkSession, description: str, after_id: int) -> dict[str, float]:
+    """Aggregate the metrics of every SQL execution one run triggered:
+    those newer than ``after_id`` (the newest id at run start) that
+    carry the run's ``spark.job.description`` — a staged rewrite's
+    write is not its last execution. Nested executions carry the
+    description too and each reports only its own operators, so the
+    sums do not double-count. {} if the status store is unavailable."""
+    try:
+        sc = spark.sparkContext._jsc.sc()
+        try:  # the store is fed by the async listener bus
+            sc.listenerBus().waitUntilEmpty(2000)
+        except Exception:
+            pass  # a busy bus: harvest what has arrived
         store = spark._jsparkSession.sharedState().statusStore()
         execs = store.executionsList()
-        n = execs.size()
-        if n == 0:
-            return {}
-        last = execs.apply(n - 1)
-        descs = last.metrics()
-        vals = store.executionMetrics(last.executionId())
         out: dict[str, float] = {}
-        it = descs.iterator()
-        while it.hasNext():
-            d = it.next()
-            name = d.name()
-            if name not in _HARVEST:
+        for i in range(execs.size() - 1, -1, -1):
+            e = execs.apply(i)
+            if e.executionId() <= after_id:
+                break
+            if e.description() != description:
                 continue
-            opt = vals.get(d.accumulatorId())
-            if opt.isEmpty():
-                continue
-            field_name, agg = _HARVEST[name]
-            v = _parse_metric(str(opt.get()))
-            if agg == "sum":
-                out[field_name] = out.get(field_name, 0.0) + v
-            else:
-                out[field_name] = max(out.get(field_name, 0.0), v)
-        out["execution_id"] = float(last.executionId())
+            vals = store.executionMetrics(e.executionId())
+            it = e.metrics().iterator()
+            while it.hasNext():
+                d = it.next()
+                if d.name() not in _HARVEST:
+                    continue
+                opt = vals.get(d.accumulatorId())
+                if opt.isEmpty():
+                    continue
+                field_name, agg = _HARVEST[d.name()]
+                v = _parse_metric(str(opt.get()))
+                if agg == "sum":
+                    out[field_name] = out.get(field_name, 0.0) + v
+                else:
+                    out[field_name] = max(out.get(field_name, 0.0), v)
         return out
     except Exception:
         return {}

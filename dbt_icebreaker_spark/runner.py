@@ -13,6 +13,7 @@ view.sql:5-23, incremental.sql:13-215, snapshot.sql:18-232).
 from __future__ import annotations
 
 import datetime as _dt
+import itertools
 import os
 import re
 import time
@@ -22,10 +23,10 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from .errors import raise_classified
-from .materializations.ddl import Ddl, configure_writer, generate_schema_name
+from .materializations.ddl import Ddl, generate_schema_name, write_table
 from .materializations.incremental import run_incremental
 from .materializations.snapshot import run_snapshot
-from .observability.telemetry import TelemetryStore, harvest_last_execution
+from .observability.telemetry import TelemetryStore, harvest_run, newest_execution_id
 from .transpiler import Transpiler
 from .transpiler.core import TranspileError
 
@@ -490,6 +491,10 @@ def _coerce_day_intervals(df: DataFrame | None) -> DataFrame | None:
     return out.toDF(*orig)
 
 
+# per-run job-description suffix (run_model): unique across threads
+_RUN_SEQ = itertools.count()
+
+
 @dataclass
 class RunResult:
     model: str
@@ -703,10 +708,6 @@ class IcebreakerEngine:
         return self.spark.createDataFrame(
             [(name, lit)], "variable string, value string"
         )
-
-    def _record_run(self, name: str, start: float, rows: int, metrics: dict) -> None:
-        if self.telemetry is not None:
-            self.telemetry.record(name, time.time() - start, rows, metrics)
 
     # -------------------------------------------------------- execute
     def sql_to_spark(self, sql: str) -> str:
@@ -2072,13 +2073,6 @@ class IcebreakerEngine:
         return f"{self.effective_schema}.{name}"
 
     # ------------------------------------------------- materializations
-    def _clear_orphaned_location(self, target: str) -> None:
-        """See materializations.ddl.clear_orphaned_location — shared
-        with the incremental/snapshot first-run paths."""
-        from .materializations.ddl import clear_orphaned_location
-
-        clear_orphaned_location(self.spark, target)
-
     def run_model(
         self,
         name: str,
@@ -2105,62 +2099,57 @@ class IcebreakerEngine:
             self.spark.sql(f"CREATE OR REPLACE VIEW {target} AS {spark_sql}")
             return RunResult(name, "view", target, -1, time.time() - start)
 
-        df = self._maybe_sample(self.execute(sql), sql)
-
-        if materialization == "table":
-            # M1: ref table.sql:72-76 (CREATE OR REPLACE TABLE … AS)
-            self._clear_orphaned_location(target)
-            # dbt-spark's clustered_by/buckets contract: persist
-            # bucketed+sorted layout so equi-joins and aggregations on
-            # the bucket key skip their shuffle entirely (the 100 TB
-            # co-located-join path; see
-            # tests/test_plan_quality.py::TestBucketedJoin)
-            writer = configure_writer(
-                df.write.mode("overwrite"), partition_by, clustered_by, buckets
-            )
+        # every execution of this run carries one job description —
+        # the telemetry harvest sums exactly those
+        sc = self.spark.sparkContext
+        caller_desc = sc.getLocalProperty("spark.job.description")
+        run_desc = f"run_model {target} #{next(_RUN_SEQ)}"
+        after_id = newest_execution_id(self.spark) if self.telemetry else -1
+        sc.setLocalProperty("spark.job.description", run_desc)
+        try:
+            df = self._maybe_sample(self.execute(sql), sql)
+            if materialization == "ephemeral":
+                # dbt ephemeral = temp view, not persisted
+                df.createOrReplaceTempView(name)
+                return RunResult(name, "ephemeral", None, -1, time.time() - start)
+            details: dict = {}
             try:  # runtime failures (e.g. bad cast) → actionable error
-                writer.saveAsTable(target)
+                if materialization == "table":
+                    # M1: ref table.sql:72-76 (CREATE OR REPLACE TABLE …
+                    # AS); clustered_by/buckets: see TestBucketedJoin
+                    rows = write_table(
+                        self.spark, df, target, "overwrite",
+                        partition_by, clustered_by, buckets,
+                    )
+                elif materialization == "incremental":
+                    # M3
+                    details = run_incremental(
+                        self.spark,
+                        target,
+                        df,
+                        strategy=incremental_strategy,
+                        unique_key=unique_key,
+                        partition_by=partition_by,
+                        full_refresh=full_refresh,
+                        on_schema_change=on_schema_change,
+                        incremental_predicates=incremental_predicates,
+                        merge_update_columns=merge_update_columns,
+                        merge_exclude_columns=merge_exclude_columns,
+                        clustered_by=clustered_by,
+                        buckets=buckets,
+                        use_sql_merge=use_sql_merge,
+                    )
+                    rows = details["rows"]
+                else:
+                    raise ValueError(f"unknown materialization: {materialization}")
             except Exception as e:
                 raise_classified(e, sql)
-            # harvest the WRITE execution's metrics before the row
-            # count runs its own execution
-            metrics = harvest_last_execution(self.spark) if self.telemetry else {}
-            rows = self.spark.table(target).count()
-            self._record_run(name, start, rows, metrics)
-            return RunResult(name, "table", target, rows, time.time() - start)
-
-        if materialization == "incremental":
-            # M3
-            try:
-                details = run_incremental(
-                    self.spark,
-                    target,
-                    df,
-                    strategy=incremental_strategy,
-                    unique_key=unique_key,
-                    partition_by=partition_by,
-                    full_refresh=full_refresh,
-                    on_schema_change=on_schema_change,
-                    incremental_predicates=incremental_predicates,
-                    merge_update_columns=merge_update_columns,
-                    merge_exclude_columns=merge_exclude_columns,
-                    clustered_by=clustered_by,
-                    buckets=buckets,
-                    use_sql_merge=use_sql_merge,
-                )
-            except Exception as e:
-                raise_classified(e, sql)
-            metrics = harvest_last_execution(self.spark) if self.telemetry else {}
-            rows = self.spark.table(target).count()
-            self._record_run(name, start, rows, metrics)
-            return RunResult(name, "incremental", target, rows, time.time() - start, details)
-
-        if materialization == "ephemeral":
-            # dbt ephemeral = temp view, not persisted
-            df.createOrReplaceTempView(name)
-            return RunResult(name, "ephemeral", None, -1, time.time() - start)
-
-        raise ValueError(f"unknown materialization: {materialization}")
+        finally:
+            sc.setLocalProperty("spark.job.description", caller_desc)
+        if self.telemetry is not None:
+            metrics = harvest_run(self.spark, run_desc, after_id)
+            self.telemetry.record(name, time.time() - start, rows, metrics)
+        return RunResult(name, materialization, target, rows, time.time() - start, details)
 
     def run_snapshot(
         self,
@@ -2187,8 +2176,9 @@ class IcebreakerEngine:
             invalidate_hard_deletes=invalidate_hard_deletes,
             now=now,
         )
-        rows = self.spark.table(target).count()
-        return RunResult(name, "snapshot", target, rows, time.time() - start, details)
+        return RunResult(
+            name, "snapshot", target, details["rows"], time.time() - start, details
+        )
 
     def seed_csv(
         self,
@@ -2238,7 +2228,5 @@ class IcebreakerEngine:
             df = df.select(*cols)
         else:
             df = reader.option("inferSchema", "true").csv(path)
-        self._clear_orphaned_location(target)
-        df.write.mode("overwrite").saveAsTable(target)
-        rows = self.spark.table(target).count()
+        rows = write_table(self.spark, df, target)
         return RunResult(name, "seed", target, rows, time.time() - start)

@@ -249,6 +249,83 @@ class TestDevSampling:
         assert r.rows == 3
 
 
+_ORD = "SELECT o_orderkey, o_custkey, o_totalprice FROM orders"
+_ORD_YEAR = "SELECT o_orderkey, o_totalprice, YEAR(o_orderdate) AS yr FROM orders"
+_CUST = "SELECT c_custkey, c_acctbal, c_mktsegment FROM customer"
+
+
+def _two_batches(strategy, sql=_ORD, **kw):
+    """Create an incremental model from one batch, then apply an
+    overlapping second batch with ``strategy``; return the second
+    RunResult."""
+    def run(eng, name, _tmp):
+        args = dict(incremental_strategy=strategy, **kw)
+        eng.run_model(name, f"{sql} WHERE o_orderkey < 3000", "incremental", **args)
+        return eng.run_model(
+            name, f"{sql} WHERE o_orderkey >= 2000", "incremental", **args)
+    return run
+
+
+def _snapshot(runs):
+    def run(eng, name, _tmp):
+        for day in range(1, runs + 1):
+            res = eng.run_snapshot(
+                name,
+                "SELECT c_custkey, "
+                f"IFF(c_custkey % 7 = 0, c_acctbal + {day}, c_acctbal) AS c_acctbal, "
+                "c_mktsegment FROM customer",
+                unique_key="c_custkey", strategy="check",
+                check_cols=["c_acctbal"], now=datetime.datetime(2026, 3, day),
+            )
+        return res
+    return run
+
+
+def _seed(eng, name, tmp):
+    p = tmp / "seed.csv"
+    p.write_text("k,v\n1,a\n2,b\n3,c\n")
+    return eng.seed_csv(name, str(p))
+
+
+def _dev_limit(eng, name, _tmp):
+    dev = IcebreakerEngine(eng.spark, schema=eng.schema, dev_mode=True,
+                           dev_sample_size=7)
+    return dev.run_model(name, _ORD)
+
+
+_ROWS_RULE_CASES = {
+    "table": lambda eng, name, _tmp: eng.run_model(name, _ORD),
+    "seed": _seed,
+    "dev_limit": _dev_limit,
+    "snapshot_first": _snapshot(1),
+    "snapshot_update": _snapshot(2),
+    "incremental_create": lambda eng, name, _tmp: eng.run_model(
+        name, _ORD, "incremental", unique_key="o_orderkey"),
+    "merge": _two_batches("merge", unique_key="o_orderkey"),
+    "delete_insert": _two_batches("delete+insert", unique_key="o_orderkey"),
+    "append": _two_batches("append"),
+    "merge_no_key": _two_batches("merge"),
+    "insert_overwrite": _two_batches(
+        "insert_overwrite", sql=_ORD_YEAR, partition_by="yr"),
+}
+
+
+class TestRowsRule:
+    """RunResult.rows is the row count of the target after the call on
+    every materialization path — observed on the write where it
+    replaced the whole table, one table count on the in-place paths."""
+
+    @pytest.mark.parametrize("case", sorted(_ROWS_RULE_CASES))
+    def test_rows_equal_target_count(self, spark, engine, tmp_path, case):
+        eng = IcebreakerEngine(spark, schema="rows_rule")
+        res = _ROWS_RULE_CASES[case](eng, f"rr_{case}", tmp_path)
+        assert res.rows > 0
+        assert res.rows == spark.table(res.relation).count()
+        if res.materialization in ("incremental", "snapshot"):
+            # run_incremental / run_snapshot report it themselves
+            assert res.details["rows"] == res.rows
+
+
 class TestOnSchemaChange:
     """All four dbt on_schema_change modes (the reference declares the
     config but never implements it — incremental.sql:25)."""
@@ -1186,6 +1263,7 @@ class TestCopyInto:
         spark.sql("CREATE DATABASE IF NOT EXISTS ci_t")
         spark.sql("DROP TABLE IF EXISTS ci_t.loaded")
         spark.sql("CREATE TABLE ci_t.loaded (id BIGINT, name STRING)")
+        spark.catalog.clearCache()  # start from an empty CacheManager
         eng = IcebreakerEngine(spark, schema="ci_t")
         out = eng.execute(
             f"COPY INTO ci_t.loaded FROM '{p}' "
@@ -1195,6 +1273,8 @@ class TestCopyInto:
         assert out.rows_loaded == 2
         rows = {r.id: r.name for r in spark.table("ci_t.loaded").collect()}
         assert rows == {1: "alpha", 2: "beta"}
+        # the count rides the insert: no cached copy of the source
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     def test_parquet_by_name_with_cast(self, spark, tmp_path):
         from dbt_icebreaker_spark import IcebreakerEngine

@@ -338,6 +338,39 @@ class TestTelemetry:
         assert measured and "shuffle" in measured[0]
         spark.sql("DROP DATABASE IF EXISTS tele_test CASCADE")
 
+    def test_staged_rewrite_records_its_write(self, spark, tmp_path):
+        """A merge batch writes a staging table, swaps it in and drops
+        the backup: the run's last execution is that DROP TABLE. The
+        record sums every execution the run triggered, so the write's
+        shuffle shows up, and the caller's job description survives."""
+        from dbt_icebreaker_spark import IcebreakerEngine
+        from dbt_icebreaker_spark.observability.telemetry import TelemetryStore
+        from dbt_icebreaker_spark.sources import register_dir
+
+        store = TelemetryStore(path=str(tmp_path / "telemetry.json"))
+        eng = IcebreakerEngine(spark, schema="tele_inc_test", telemetry=store)
+        register_dir(spark, SF)
+        sql = (
+            "SELECT o_orderpriority, COUNT(*) AS n, SUM(o_totalprice) AS total "
+            "FROM orders GROUP BY o_orderpriority"
+        )
+        sc = spark.sparkContext
+        sc.setJobDescription("caller")
+        try:
+            runs = [
+                eng.run_model("tele_inc", sql, "incremental",
+                              unique_key="o_orderpriority")
+                for _ in range(2)
+            ]
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+        assert [r.details["strategy"] for r in runs] == ["create", "merge"]
+        recs = store.history("tele_inc")
+        assert [r["rows"] for r in recs] == [5, 5]
+        assert all(r["shuffle_write_bytes"] > 0 for r in recs)
+        spark.sql("DROP DATABASE IF EXISTS tele_inc_test CASCADE")
+
     def test_spill_gate_warning(self, tmp_path):
         from dbt_icebreaker_spark.observability.telemetry import TelemetryStore
 

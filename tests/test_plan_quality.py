@@ -405,6 +405,97 @@ class TestBucketedIncremental:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
+    def test_merge_without_key_keeps_bucket_spec(self, spark):
+        """merge with no unique_key degenerates to an append; like
+        append it must re-declare the bucket spec, or Spark rejects
+        the write on a bucketed target (bucketing mismatch)."""
+        from dbt_icebreaker_spark import IcebreakerEngine
+
+        eng = IcebreakerEngine(spark, schema="bucket_demo")
+        register_dir(spark, SF_DIR)
+        kw = dict(clustered_by="c_custkey", buckets=8)
+        sql = "SELECT c_custkey, c_name FROM customer WHERE "
+        eng.run_model("cust_nokey", sql + "c_custkey < 100", "incremental", **kw)
+        res = eng.run_model(
+            "cust_nokey", sql + "c_custkey >= 100", "incremental", **kw)
+        assert res.details["strategy"] == "merge(append)"
+        assert res.rows == spark.table("customer").count()
+        desc = {r[0]: r[1] for r in spark.sql(
+            "DESCRIBE TABLE EXTENDED bucket_demo.cust_nokey").collect()}
+        assert desc["Num Buckets"] == "8"
+
+
+class TestMaterializationJobFloor:
+    """Every materialization call learns its row count from its own
+    write (ddl.write_table observes count(1) on the written frame), so
+    none re-scans the table it just wrote — such a recount costs two
+    jobs per call. Jobs per call, counted in one job group, stay at or
+    under the measured floor."""
+
+    # call → most jobs allowed
+    FLOOR = {
+        "seed": 3, "table": 1, "incremental_create": 1, "merge": 3,
+        "delete_insert": 3, "append": 3, "snapshot_first": 2,
+        "snapshot_update": 6,
+    }
+
+    def test_jobs_per_call(self, spark, tmp_path):
+        import datetime
+
+        from dbt_icebreaker_spark import IcebreakerEngine
+
+        eng = IcebreakerEngine(spark, schema="job_floor")
+        register_dir(spark, SF_DIR)
+        sc = spark.sparkContext
+        seed = tmp_path / "seed.csv"
+        seed.write_text("k,v\n1,a\n2,b\n3,c\n")
+        orders = "SELECT o_orderkey, o_custkey, o_totalprice FROM orders WHERE "
+        snap = (
+            "SELECT c_custkey, IFF(c_custkey % 7 = 0, c_acctbal + {d}, "
+            "c_acctbal) AS c_acctbal FROM customer"
+        )
+
+        def inc(name, strategy, **kw):
+            """Run the first batch now; return the second batch's call."""
+            eng.run_model(name, orders + "o_orderkey < 3000", "incremental",
+                          incremental_strategy=strategy, **kw)
+            return lambda: eng.run_model(
+                name, orders + "o_orderkey >= 2000", "incremental",
+                incremental_strategy=strategy, **kw)
+
+        def snapshot(day):
+            return lambda: eng.run_snapshot(
+                "jf_snap", snap.format(d=day), unique_key="c_custkey",
+                strategy="check", check_cols=["c_acctbal"],
+                now=datetime.datetime(2026, 4, day))
+
+        calls = {
+            "seed": lambda: eng.seed_csv("jf_seed", str(seed)),
+            "table": lambda: eng.run_model("jf_table", orders + "true"),
+            "incremental_create": lambda: eng.run_model(
+                "jf_create", orders + "true", "incremental",
+                unique_key="o_orderkey"),
+            "merge": inc("jf_merge", "merge", unique_key="o_orderkey"),
+            "delete_insert": inc("jf_di", "delete+insert", unique_key="o_orderkey"),
+            "append": inc("jf_append", "append"),
+            "snapshot_first": snapshot(1),
+            "snapshot_update": snapshot(2),
+        }
+        got = {}
+        for label, call in calls.items():
+            group = f"job-floor-{label}"
+            sc.setJobGroup(group, label)
+            try:
+                call()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is async
+            got[label] = len(sc.statusTracker().getJobIdsForGroup(group))
+        over = {k: (n, self.FLOOR[k]) for k, n in got.items() if n > self.FLOOR[k]}
+        assert not over, f"jobs per call over the floor: {over} (all: {got})"
+
+
 class TestRound3OpPlans:
     def test_quality_filter_scans_once_no_presort(self, spark, qs):
         """filter_corpus is scan-speed: the per-doc flags are one
@@ -634,6 +725,7 @@ class TestRound3PlanShapes:
             qs["x14_dedup_clusters"](spark, SF_DIR).collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is async
         tracker = sc.statusTracker()
         jobs = tracker.getJobIdsForGroup(group)
         assert 0 < len(jobs) <= 7
@@ -646,10 +738,22 @@ class TestRound3PlanShapes:
             for i in range(subs.size()):
                 yield from rdd_names(subs.apply(i))
 
-        python = [
-            (s, n)
+        # Only a stage that ran can run a Python worker. A skipped stage
+        # (its shuffle output reused) ran as a stage of an earlier job,
+        # and the status store evicts skipped stages first once it holds
+        # more than spark.ui.retainedStages, so late in a long session
+        # their graphs are gone.
+        ran = [
+            s
             for j in jobs
             for s in tracker.getJobInfo(j).stageIds
+            if (info := tracker.getStageInfo(s)) is not None
+            and info.numCompletedTasks > 0
+        ]
+        assert ran
+        python = [
+            (s, n)
+            for s in ran
             for n in rdd_names(store.operationGraphForStage(s).rootCluster())
             if "Python" in n
         ]
