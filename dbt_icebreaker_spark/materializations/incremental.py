@@ -27,7 +27,7 @@ broadcast the *new* side of the anti-join.
 
 from __future__ import annotations
 
-from typing import Optional, Sequence
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -138,6 +138,7 @@ def _staged_overwrite(
     clustered_by: str | Sequence[str] | None = None,
     buckets: Optional[int] = None,
     size_coalesce: bool = True,
+    check: Optional[Callable[[], None]] = None,
 ) -> int:
     """Replace `target` with `df` even when df reads from target:
     write to a staging table first, then swap. Avoids Spark's
@@ -145,6 +146,11 @@ def _staged_overwrite(
     the whole result in memory. Returns the row count write_table
     observed on the staging write — the rows of the new target, with
     no scan of the swapped-in table.
+
+    ``check`` runs after the staging write and before the swap, so it
+    can read Observations the write filled (MERGE's duplicate-match
+    guard); if it raises, the staging table is dropped and the target
+    stays untouched.
 
     Crash safety: the old table is renamed aside (not dropped) before
     the staging table takes its name, and only dropped once the swap
@@ -162,6 +168,12 @@ def _staged_overwrite(
         # callers that already sized their output (compaction) opt out
         df = _size_coalesced(df)
     n = write_table(spark, df, staging, "overwrite", partition_by, clustered_by, buckets)
+    if check is not None:
+        try:
+            check()
+        except BaseException:
+            spark.sql(f"DROP TABLE IF EXISTS {staging}")
+            raise
     if spark.catalog.tableExists(target):
         spark.sql(f"ALTER TABLE {target} RENAME TO {backup}")
         # the OLD table's layout is unknown to the caller — ask the

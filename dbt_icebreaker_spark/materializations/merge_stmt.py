@@ -16,12 +16,12 @@ Supported shape:
                                   | DELETE            (any number, in order)
     WHEN NOT MATCHED [AND <cond>] THEN INSERT * | (cols) VALUES (exprs)
 
-Simple unconditional shapes take the incremental fast path; anything
-with conditions, arbitrary SET expressions, column-list INSERT, or
-extra ON conjuncts runs the generalized first-true-wins CASE-cascade
-rewrite. Pure non-equi ON (no equality key) and positional INSERT
-VALUES raise an actionable TranspileError — matching the reference's
-refuse-up-front style rather than producing wrong rows.
+Every shape (and UPDATE … FROM, which parses into a MergeSpec) runs
+one lowering: the first-true-wins CASE-cascade rewrite of
+_run_general_merge. Positional INSERT VALUES raises an actionable
+TranspileError at parse time, and a target row matched by more than
+one source row raises before the swap — matching the reference's
+refusal style rather than producing wrong rows.
 """
 
 from __future__ import annotations
@@ -65,14 +65,9 @@ class MergeSpec:
     source_sql: Optional[str]  # subquery text (Snowflake dialect) …
     source_table: Optional[str]  # … or a plain table name
     source_alias: str
-    keys: list[str]  # same-named equality keys (simple fast path)
-    matched_action: str  # "update" | "delete" | "none"
-    # ALL equality keys as (target_col, source_col) — a merge keyed
-    # on differently-named columns (ON t.id = s.source_id) has no
-    # same-named key but is still a plain equi-join
+    # equality keys as (target_col, source_col) — differently-named
+    # columns (ON t.id = s.source_id) are as much a key as same-named
     key_pairs: list[tuple[str, str]] = field(default_factory=list)
-    update_columns: Optional[list[str]] = None  # None = SET *
-    insert_all: bool = False
     extra_conditions: list[str] = field(default_factory=list)
     clauses: list[WhenClause] = field(default_factory=list)
 
@@ -201,12 +196,11 @@ def parse_merge(sql: str) -> Optional[MergeSpec]:
         raise fail("missing ON clause")
     i = next_code(toks, i + 1)
 
-    # ON: top-level AND conjuncts until WHEN. Same-name `t.k = s.k`
-    # equalities become the join KEYS; any other conjunct (non-equi
-    # comparison, expression equality, functions) is carried verbatim
-    # as an extra condition — the generalized rewrite folds it into
-    # the join. At least one equality key is required (a pure non-equi
-    # merge has no shuffle key; use an Iceberg/Delta catalog table).
+    # ON: top-level AND conjuncts until WHEN. Column equalities
+    # `t.k = s.sk` (one side per table) become the join KEYS; any
+    # other conjunct (non-equi comparison, expression equality,
+    # functions) is carried verbatim as an extra condition — the
+    # rewrite folds it into the join.
     on_lo = i
     depth0 = 0
     case0 = 0
@@ -257,7 +251,6 @@ def parse_merge(sql: str) -> Optional[MergeSpec]:
     conjuncts.append(toks[seg_lo:on_hi])
     i = on_hi
 
-    keys: list[str] = []
     key_pairs: list[tuple[str, str]] = []
     extra_conditions: list[str] = []
     t_names = {target_alias.lower(), target.lower()}
@@ -266,8 +259,8 @@ def parse_merge(sql: str) -> Optional[MergeSpec]:
         s_names.add(source_table.lower())
     for seg in conjuncts:
         code = [c for c in seg if c.kind not in ("ws", "comment")]
-        # strictly  qual.col = qual.col  with one side per table and
-        # the same column name → a join key
+        # strictly  qual.col = qual.col  with one side per table → a
+        # join key
         def colref(codes, p):
             parts = [codes[p].text]
             q = p + 1
@@ -286,12 +279,8 @@ def parse_merge(sql: str) -> Optional[MergeSpec]:
                     scol = lc if la.lower() in s_names else rc if ra.lower() in s_names else None
                     if tcol is not None and scol is not None:
                         # any target-col = source-col equality is a
-                        # join key (ON t.id = s.source_id included);
-                        # same-named keys additionally qualify for the
-                        # DataFrame-join fast path
+                        # join key (ON t.id = s.source_id included)
                         key_pairs.append((tcol, scol))
-                        if tcol.lower() == scol.lower():
-                            keys.append(tcol)
                         is_key = True
         if not is_key:
             txt = _rewrite_on_qualifiers(
@@ -499,143 +488,45 @@ def parse_merge(sql: str) -> Optional[MergeSpec]:
             cl.sets = [(c2, _rw_text(e)) for c2, e in cl.sets]
         if cl.insert_vals is not None:
             cl.insert_vals = [_rw_text(e) for e in cl.insert_vals]
-    # legacy summary fields (drive the fast path + back-compat callers)
-    matched = [c for c in clauses if c.matched]
-    unmatched = [c for c in clauses if not c.matched]
-    matched_action = matched[0].action if matched else "none"
-    update_columns = None
-    if matched and matched[0].action == "update" and matched[0].sets is not None:
-        update_columns = [c for c, _ in matched[0].sets]
-    insert_all = bool(unmatched)
     return MergeSpec(
         target=target,
         target_alias=target_alias,
         source_sql=source_sql,
         source_table=source_table,
         source_alias=source_alias,
-        keys=keys,
         key_pairs=key_pairs,
-        matched_action=matched_action,
-        update_columns=update_columns,
-        insert_all=insert_all,
         extra_conditions=extra_conditions,
         clauses=clauses,
     )
 
 
-def _is_simple_merge(spec: MergeSpec) -> bool:
-    """True when the statement fits the legacy fast path: one
-    unconditional matched clause (UPDATE SET * / same-name SET /
-    DELETE) plus at most one unconditional INSERT *. Everything else
-    (conditions, arbitrary SET expressions, column-list INSERT,
-    multiple WHEN branches) runs the generalized staged rewrite."""
-    import re
-
-    m = [c for c in spec.clauses if c.matched]
-    u = [c for c in spec.clauses if not c.matched]
-    if len(m) > 1 or len(u) > 1:
-        return False
-    if spec.extra_conditions:
-        return False  # non-equi ON conjuncts need the general join
-    if len(spec.key_pairs) != len(spec.keys):
-        return False  # differently-named keys need the general join
-    if any(c.condition is not None for c in spec.clauses):
-        return False
-    if u and u[0].insert_cols is not None:
-        return False
-    if m and m[0].action == "update" and m[0].sets is not None:
-        s_names = {spec.source_alias.lower()}
-        if spec.source_table:
-            s_names.add(spec.source_table.lower())
-        for col, expr in m[0].sets:
-            flat = re.sub(r"\s+", "", expr)
-            mm = re.fullmatch(r"(?:([A-Za-z_][\w$#.]*)\.)?([A-Za-z_][\w$#]*)", flat)
-            if not mm or mm.group(2).lower() != col.lower():
-                return False  # not a plain same-name source column ref
-            if mm.group(1) and mm.group(1).lower() not in s_names:
-                return False
-    return True
-
-
 def run_merge_statement(
     spark: SparkSession, spec: MergeSpec, transpiler
 ) -> dict:
-    """Execute a parsed MERGE via the incremental rewrite machinery.
+    """Execute a parsed MERGE (or UPDATE … FROM) on a parquet table.
 
-    Simple shapes take the legacy fast path:
-    - UPDATE [SET *|cols] + INSERT *  → run_incremental merge strategy
-      (delete-matching + insert-all with optional partial-update),
-      crash-safe staged swap included;
-    - DELETE [+ INSERT *] → anti-join rewrite through the same
-      _staged_overwrite.
-
-    Conditional WHEN clauses, arbitrary SET expressions, column-list
-    INSERT, and multiple WHEN branches run the generalized first-true-
-    wins CASE-cascade rewrite (_run_general_merge).
+    Every shape runs the one lowering, _run_general_merge: the
+    first-true-wins CASE-cascade rewrite behind the crash-safe staged
+    swap, or an append of the inserts when no WHEN MATCHED clause can
+    change the target.
 
     Returns {"table", "rows_affected"} mirroring copy_into's stats.
     """
-    from .incremental import _staged_overwrite, run_incremental
-
     if spec.source_sql is not None:
         src = spark.sql(transpiler.to_spark(spec.source_sql))
     else:
         src = spark.table(spec.source_table)
 
-    tgt = spark.table(spec.target)
-    src_lower = {c.lower() for c in src.columns}
     # validate SOURCE-side names from the pairs (covers renamed keys —
-    # ON t.id = s.src_id — not just same-named spec.keys)
-    src_keys = [sk for _, sk in spec.key_pairs] or spec.keys
-    missing = [k for k in src_keys if k.lower() not in src_lower]
+    # ON t.id = s.src_id)
+    src_lower = {c.lower() for c in src.columns}
+    missing = [sk for _, sk in spec.key_pairs if sk.lower() not in src_lower]
     if missing:
         raise TranspileError(
             f"MERGE INTO: key column(s) {missing} absent from the "
             f"USING source (columns: {src.columns})"
         )
-
-    if spec.clauses and not _is_simple_merge(spec):
-        return _run_general_merge(spark, spec, transpiler, src)
-
-    if spec.matched_action == "update":
-        # UPDATE-only MERGE must not create rows: restrict the batch
-        # to keys already in the target unless INSERT * is present
-        batch = (
-            src
-            if spec.insert_all
-            else src.join(tgt.select(*spec.keys).distinct(), spec.keys, "left_semi")
-        )
-        rows = batch.count()
-        run_incremental(
-            spark,
-            spec.target,
-            batch,
-            strategy="merge",
-            unique_key=spec.keys,
-            merge_update_columns=spec.update_columns,
-        )
-    elif spec.matched_action == "none":
-        # INSERT-only MERGE: append source rows whose keys are new
-        inserts = src.join(
-            tgt.select(*spec.keys).distinct(), spec.keys, "left_anti"
-        )
-        rows = run_incremental(
-            spark, spec.target, inserts, strategy="append", collect_stats=False
-        )["rows_appended"]
-    else:  # delete [+ insert]
-        keys_df = src.select(*spec.keys).distinct()
-        remaining = tgt.join(keys_df, spec.keys, "left_anti")
-        rows = tgt.join(keys_df, spec.keys, "left_semi").count()  # deleted
-        if spec.insert_all:
-            inserts = src.join(
-                tgt.select(*spec.keys).distinct(), spec.keys, "left_anti"
-            ).select(*tgt.columns)
-            rows += inserts.count()
-            new = remaining.unionByName(inserts)
-        else:
-            new = remaining
-        _staged_overwrite(spark, new, spec.target)
-    return {"table": spec.target, "rows_affected": rows}
+    return _run_general_merge(spark, spec, transpiler, src)
 
 
 def _run_general_merge(spark: SparkSession, spec: MergeSpec, transpiler, src) -> dict:
@@ -650,7 +541,8 @@ def _run_general_merge(spark: SparkSession, spec: MergeSpec, transpiler, src) ->
     rows anti-joined on the keys flow through the WHEN NOT MATCHED
     cascade into inserts. Everything is JVM-side CASE/joins — one
     shuffle for the join, one for the anti-join, broadcast-eligible
-    under AQE — then the crash-safe staged swap.
+    under AQE — then the crash-safe staged swap. Without a WHEN
+    MATCHED clause the target keeps every row, so the inserts append.
 
     Snowflake semantics preserved: clauses evaluate in statement
     order; NULL conditions are not-true; a target row matched by more
@@ -659,11 +551,14 @@ def _run_general_merge(spark: SparkSession, spec: MergeSpec, transpiler, src) ->
     row. Every output column is CAST back to the target's type,
     matching INSERT/UPDATE implicit coercion.
 
-    Cost shape: the target-side join runs ONCE — the updated/deleted
-    count rides the write via DataFrame.observe instead of a second
-    join pass. The dup-check is a source-only map-side aggregation +
-    key semi-join (cheap relative to the join, and it must run BEFORE
-    the write: a duplicated target row would corrupt the output)."""
+    Cost shape: the target-side join runs ONCE, and everything the
+    statement reports rides the write via DataFrame.observe: the
+    updated/deleted count, the inserted count, and the duplicate-match
+    guard. A LEFT JOIN emits max(1, matches) rows per target row, so
+    the joined frame has more rows than the target scan exactly when
+    some target row matched twice under the full ON; that comparison
+    runs after the staging write and before the swap, and a refusal
+    drops the staging table with the target untouched."""
     import uuid
 
     tgt = spark.table(spec.target)
@@ -707,7 +602,7 @@ def _run_general_merge(spark: SparkSession, spec: MergeSpec, transpiler, src) ->
                     f"the source; missing {bad}"
                 )
 
-    if not (spec.key_pairs or spec.keys):
+    if not spec.key_pairs:
         # pure non-equi MERGE (BETWEEN band updates): no shuffle key
         # exists, so the join must be a broadcast nested-loop — only
         # sane when the source is bounded. Refuse actionably on a big
@@ -736,115 +631,42 @@ def _run_general_merge(spark: SparkSession, spec: MergeSpec, transpiler, src) ->
 
     uid = uuid.uuid4().hex[:8]
     tview, sview = f"__icebreaker_mrg_t_{uid}", f"__icebreaker_mrg_s_{uid}"
+    jview = f"__icebreaker_mrg_j_{uid}"  # the observed target scan
     tgt.createOrReplaceTempView(tview)
     src.createOrReplaceTempView(sview)
     try:
         return _general_merge_plan(
-            spark, spec, transpiler, src, tgt, tview, sview, ta, sa,
+            spark, spec, transpiler, tgt, tview, sview, jview, ta, sa,
             m_clauses, u_clauses, tcols, ttypes,
         )
     finally:
-        spark.catalog.dropTempView(tview)
-        spark.catalog.dropTempView(sview)
+        for v in (tview, sview, jview):
+            spark.catalog.dropTempView(v)
 
 
 def _general_merge_plan(
-    spark, spec, transpiler, src, tgt, tview, sview, ta, sa,
+    spark, spec, transpiler, tgt, tview, sview, jview, ta, sa,
     m_clauses, u_clauses, tcols, ttypes,
 ):
     from pyspark.sql import Observation, functions as F
 
+    from .ddl import write_table
     from .incremental import _staged_overwrite
-    pairs = spec.key_pairs or [(k, k) for k in spec.keys]
-    if pairs:
-        on = " AND ".join(f"{ta}.{tk} = {sa}.{sk}" for tk, sk in pairs)
+
+    if spec.key_pairs:
+        on = " AND ".join(f"{ta}.{tk} = {sa}.{sk}" for tk, sk in spec.key_pairs)
         if spec.extra_conditions:
             # non-equi / expression conjuncts ride the join condition
             # — the equality keys remain the shuffle keys, the extras
             # are join filters (same shape as the ASOF interval join)
             on += "".join(f" AND ({c})" for c in spec.extra_conditions)
         # an equality's source column is non-NULL exactly on matches
-        matched = f"{sa}.{pairs[0][1]} IS NOT NULL"
+        matched = f"{sa}.{spec.key_pairs[0][1]} IS NOT NULL"
     else:
         # pure non-equi: the ON is the range condition alone; the
         # broadcast marker column flags matched rows
         on = " AND ".join(f"({c})" for c in spec.extra_conditions)
         matched = f"{sa}.__icebreaker_mrk IS NOT NULL"
-
-    obs = None
-    if m_clauses:
-        # a target row matched by >1 source row would be duplicated by
-        # the join — refuse like Snowflake's nondeterministic-merge
-        # error. The guard counts matches per TARGET ROW under the
-        # FULL ON condition (extras included), so several source rows
-        # per key of which at most one survives a non-equi conjunct —
-        # the only-update-if-newer idiom over late-arriving duplicates
-        # — merge fine instead of over-refusing on key counts alone.
-        guard_sql = (
-            f"SELECT 1 FROM ("
-            f"SELECT {ta}.__icebreaker_rid FROM "
-            f"(SELECT *, monotonically_increasing_id() AS __icebreaker_rid "
-            f"FROM {tview}) {ta} JOIN {sview} {sa} ON {on} "
-            f"GROUP BY {ta}.__icebreaker_rid HAVING COUNT(1) > 1 LIMIT 1"
-            f") __icebreaker_dup"
-        )
-        dup = spark.sql(transpiler.to_spark(guard_sql)).count()
-        if dup:
-            raise TranspileError(
-                "MERGE INTO: nondeterministic merge — a target row's "
-                "join key matches more than one source row. "
-                "Deduplicate the USING source on the join keys (e.g. "
-                "QUALIFY ROW_NUMBER() OVER (PARTITION BY keys "
-                "ORDER BY ...) = 1)."
-            )
-
-        def upd_value(cl: WhenClause, col: str) -> str:
-            if cl.action == "delete":
-                return f"{ta}.{col}"  # row is filtered; keep type stable
-            if cl.sets is None:  # SET *
-                return f"{sa}.{col}"
-            for c2, e in cl.sets:
-                if c2.lower() == col.lower():
-                    return f"({e})"
-            return f"{ta}.{col}"
-
-        sel = []
-        for col in tcols:
-            branches = "".join(
-                f" WHEN ({cl.condition or 'TRUE'}) THEN {upd_value(cl, col)}"
-                for cl in m_clauses
-            )
-            sel.append(
-                f"CAST(CASE WHEN NOT ({matched}) THEN {ta}.{col}"
-                f"{branches} ELSE {ta}.{col} END AS {ttypes[col]}) AS {col}"
-            )
-        del_cascade = "".join(
-            f" WHEN ({cl.condition or 'TRUE'}) "
-            f"THEN {'TRUE' if cl.action == 'delete' else 'FALSE'}"
-            for cl in m_clauses
-        )
-        fire_m = "CASE" + "".join(
-            f" WHEN ({cl.condition or 'TRUE'}) THEN TRUE" for cl in m_clauses
-        ) + " ELSE FALSE END"
-        # the fired/delete flags ride the join ONCE; observe() sums the
-        # fired flag during the write action (no second join pass), and
-        # the delete flag drives the survivor filter
-        surv_sql = (
-            f"SELECT {', '.join(sel)}, "
-            f"(({matched}) AND CASE{del_cascade} ELSE FALSE END) "
-            f"AS __icebreaker_del, "
-            f"(({matched}) AND {fire_m}) AS __icebreaker_fired "
-            f"FROM {tview} {ta} LEFT JOIN {sview} {sa} ON {on}"
-        )
-        obs = Observation()
-        survivors = (
-            spark.sql(transpiler.to_spark(surv_sql))
-            .observe(obs, F.sum(F.col("__icebreaker_fired").cast("long")).alias("n_fired"))
-            .filter(~F.col("__icebreaker_del"))
-            .drop("__icebreaker_del", "__icebreaker_fired")
-        )
-    else:
-        survivors = tgt
 
     if u_clauses:
         def ins_value(cl: WhenClause, col: str) -> str:
@@ -871,21 +693,95 @@ def _general_merge_plan(
             f"SELECT {', '.join(isel)} FROM {sview} {sa} "
             f"LEFT ANTI JOIN {tview} {ta} ON {on} WHERE {fire_u}"
         )
-        iobs = Observation()
-        inserts = spark.sql(transpiler.to_spark(ins_sql)).observe(
-            iobs, F.count(F.lit(1)).alias("n_ins")
-        )
-        new = survivors.unionByName(inserts)
-    else:
-        iobs = None
-        new = survivors
+        inserts = spark.sql(transpiler.to_spark(ins_sql))
+    if not m_clauses:
+        # no WHEN MATCHED clause: every target row stays as it is, so
+        # the inserts append and write_table's count is the answer
+        return {
+            "table": spec.target,
+            "rows_affected": write_table(spark, inserts, spec.target, "append"),
+        }
 
-    _staged_overwrite(spark, new, spec.target)
-    n_matched = obs.get["n_fired"] if obs is not None else 0
-    n_inserted = iobs.get["n_ins"] if iobs is not None else 0
+    def upd_value(cl: WhenClause, col: str) -> str:
+        if cl.action == "delete":
+            return f"{ta}.{col}"  # row is filtered; keep type stable
+        if cl.sets is None:  # SET *
+            return f"{sa}.{col}"
+        for c2, e in cl.sets:
+            if c2.lower() == col.lower():
+                return f"({e})"
+        return f"{ta}.{col}"
+
+    sel = []
+    for col in tcols:
+        branches = "".join(
+            f" WHEN ({cl.condition or 'TRUE'}) THEN {upd_value(cl, col)}"
+            for cl in m_clauses
+        )
+        sel.append(
+            f"CAST(CASE WHEN NOT ({matched}) THEN {ta}.{col}"
+            f"{branches} ELSE {ta}.{col} END AS {ttypes[col]}) AS {col}"
+        )
+    del_cascade = "".join(
+        f" WHEN ({cl.condition or 'TRUE'}) "
+        f"THEN {'TRUE' if cl.action == 'delete' else 'FALSE'}"
+        for cl in m_clauses
+    )
+    fire_m = "CASE" + "".join(
+        f" WHEN ({cl.condition or 'TRUE'}) THEN TRUE" for cl in m_clauses
+    ) + " ELSE FALSE END"
+    # the target scan feeding the join counts its rows (n_t); the
+    # joined frame counts its rows (n_j) and sums the fired flag, all
+    # during the write action — no second join pass, no guard query.
+    # The delete flag drives the survivor filter.
+    tobs, obs = Observation(), Observation()
+    tgt.observe(tobs, F.count(F.lit(1)).alias("n_t")).createOrReplaceTempView(jview)
+    surv_sql = (
+        f"SELECT {', '.join(sel)}, "
+        f"(({matched}) AND CASE{del_cascade} ELSE FALSE END) "
+        f"AS __icebreaker_del, "
+        f"(({matched}) AND {fire_m}) AS __icebreaker_fired "
+        f"FROM {jview} {ta} LEFT JOIN {sview} {sa} ON {on}"
+    )
+    new = (
+        spark.sql(transpiler.to_spark(surv_sql))
+        .observe(
+            obs,
+            F.sum(F.col("__icebreaker_fired").cast("long")).alias("n_fired"),
+            F.count(F.lit(1)).alias("n_j"),
+        )
+        .filter(~F.col("__icebreaker_del"))
+        .drop("__icebreaker_del", "__icebreaker_fired")
+    )
+    if u_clauses:
+        iobs = Observation()
+        new = new.unionByName(
+            inserts.observe(iobs, F.count(F.lit(1)).alias("n_ins"))
+        )
+
+    def refuse_duplicates() -> None:
+        # matches are counted per TARGET ROW under the FULL ON (extras
+        # included): several source rows per key of which at most one
+        # survives a non-equi conjunct — only-update-if-newer over
+        # late duplicates — merge fine. An empty join output holds no
+        # duplicate; and with an empty target AQE prunes the join,
+        # taking the target-scan observation with it, so n_t is read
+        # only past that case.
+        n_j = obs.get["n_j"]
+        if n_j and n_j > tobs.get["n_t"]:
+            raise TranspileError(
+                "MERGE INTO: nondeterministic merge — a target row's "
+                "join key matches more than one source row. "
+                "Deduplicate the USING source on the join keys (e.g. "
+                "QUALIFY ROW_NUMBER() OVER (PARTITION BY keys "
+                "ORDER BY ...) = 1)."
+            )
+
+    _staged_overwrite(spark, new, spec.target, check=refuse_duplicates)
+    n_inserted = iobs.get["n_ins"] if u_clauses else 0
     return {
         "table": spec.target,
-        "rows_affected": int(n_matched or 0) + int(n_inserted or 0),
+        "rows_affected": int(obs.get["n_fired"] or 0) + int(n_inserted or 0),
     }
 
 
@@ -1076,69 +972,73 @@ def parse_update(sql: str) -> Optional["UpdateSpec | MergeSpec"]:
     return UpdateSpec(target=target, alias=alias, sets=sets, where_sql=where_sql)
 
 
+def _flagged_rewrite(
+    spark: SparkSession, transpiler, target: str, alias: str,
+    sel: list[str], cond: Optional[str], delete: bool,
+) -> dict:
+    """Staged rewrite of ``target`` as ``SELECT sel FROM target alias``
+    whose rows_affected is the number of rows where ``cond`` (None =
+    every row) is TRUE; ``delete`` drops those rows instead of keeping
+    them. The count is a flag column summed by an observation on the
+    staged write — no counting job of its own. The observation sits
+    between the flag's projection and the DELETE filter, so a constant
+    predicate (DELETE with no WHERE) cannot fold that filter to false,
+    which would prune the observation along with the scan."""
+    import uuid
+
+    from pyspark.sql import Observation, functions as F
+
+    from .incremental import _staged_overwrite
+
+    view = f"__icebreaker_dml_{uuid.uuid4().hex[:8]}"
+    spark.table(target).createOrReplaceTempView(view)
+    try:
+        flagged = spark.sql(transpiler.to_spark(
+            f"SELECT {', '.join(sel)}, COALESCE(({cond or 'TRUE'}), FALSE) "
+            f"AS __icebreaker_hit FROM {view} `{alias.replace('`', '``')}`"
+        ))
+        obs = Observation()
+        hit = F.col("__icebreaker_hit")
+        new = flagged.observe(obs, F.sum(hit.cast("long")).alias("n"))
+        if delete:
+            new = new.filter(~hit)
+        _staged_overwrite(spark, new.drop("__icebreaker_hit"), target)
+    finally:
+        spark.catalog.dropTempView(view)
+    return {"table": target, "rows_affected": int(obs.get["n"] or 0)}
+
+
 def run_delete_statement(spark: SparkSession, spec: DeleteSpec, transpiler) -> dict:
     """DELETE on a parquet table = staged overwrite keeping the rows
     where the predicate is NOT TRUE (false or NULL — SQL DELETE only
     removes TRUE matches)."""
-    from .incremental import _staged_overwrite
-
-    tgt = spark.table(spec.target)
-    before = tgt.count()
-    if spec.where_sql is None:
-        kept = tgt.filter("false")  # DELETE all, schema preserved
-    else:
-        view = f"__icebreaker_del_{abs(hash(spec.target)) % 10**8}"
-        tgt.createOrReplaceTempView(view)
-        alias = f"`{spec.alias.replace('`', '``')}`"
-        pred = transpiler.to_spark(
-            f"SELECT * FROM {view} {alias} "
-            f"WHERE NOT COALESCE(({spec.where_sql}), FALSE)"
-        )
-        kept = spark.sql(pred)
-    # materialize the count before the swap drops the source
-    rows = before - kept.count()
-    _staged_overwrite(spark, kept, spec.target)
-    return {"table": spec.target, "rows_affected": rows}
+    return _flagged_rewrite(
+        spark, transpiler, spec.target, spec.alias, ["*"], spec.where_sql,
+        delete=True,
+    )
 
 
 def run_update_statement(spark: SparkSession, spec: UpdateSpec, transpiler) -> dict:
     """UPDATE on a parquet table = staged overwrite with per-column
     CASE WHEN <cond> THEN <expr> ELSE <col> END — every RHS evaluates
     against PRE-update values, matching SQL UPDATE semantics."""
-    from .incremental import _staged_overwrite
-
-    tgt = spark.table(spec.target)
-    updated_cols = {c.lower() for c, _ in spec.sets}
-    missing = [c for c, _ in spec.sets if c.lower() not in {x.lower() for x in tgt.columns}]
+    cols = spark.table(spec.target).columns
+    cols_lower = {c.lower() for c in cols}
+    missing = [c for c, _ in spec.sets if c.lower() not in cols_lower]
     if missing:
         raise TranspileError(f"UPDATE: unknown column(s) {missing} on {spec.target}")
     cond = spec.where_sql if spec.where_sql is not None else "TRUE"
-    view = f"__icebreaker_upd_{abs(hash(spec.target)) % 10**8}"
-    tgt.createOrReplaceTempView(view)
-    sel = []
     set_map = {c.lower(): e for c, e in spec.sets}
-    for col in tgt.columns:
-        if col.lower() in updated_cols:
-            e = set_map[col.lower()]
-            sel.append(
-                f"CASE WHEN COALESCE(({cond}), FALSE) THEN ({e}) "
-                f"ELSE {col} END AS {col}"
-            )
-        else:
-            sel.append(col)
-    alias = f"`{spec.alias.replace('`', '``')}`"
-    sf_sql = f"SELECT {', '.join(sel)} FROM {view} {alias}"
-    new = spark.sql(transpiler.to_spark(sf_sql))
-    n_view = f"{view}_m"
-    tgt.createOrReplaceTempView(n_view)
-    rows = spark.sql(
-        transpiler.to_spark(
-            f"SELECT COUNT(*) AS n FROM {n_view} {alias} "
-            f"WHERE COALESCE(({cond}), FALSE)"
-        )
-    ).collect()[0].n
-    _staged_overwrite(spark, new, spec.target)
-    return {"table": spec.target, "rows_affected": rows}
+    sel = [
+        f"CASE WHEN COALESCE(({cond}), FALSE) THEN ({set_map[col.lower()]}) "
+        f"ELSE {col} END AS {col}"
+        if col.lower() in set_map else col
+        for col in cols
+    ]
+    return _flagged_rewrite(
+        spark, transpiler, spec.target, spec.alias, sel, spec.where_sql,
+        delete=False,
+    )
 
 
 @dataclass

@@ -4924,7 +4924,8 @@ def _x_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_merge_statement(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Literal MERGE INTO statement through IcebreakerEngine.execute:
     parsed (materializations/merge_stmt.parse_merge) and lowered onto
-    the crash-safe incremental rewrite — the parquet-table rendering of
+    the CASE-cascade rewrite behind the crash-safe staged swap
+    (merge_stmt._run_general_merge) — the parquet-table rendering of
     ref incremental.sql:161-190. Oracle reproduces the UPDATE-all /
     INSERT-all semantics declaratively."""
     import tempfile

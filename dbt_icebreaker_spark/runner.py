@@ -1870,7 +1870,8 @@ class IcebreakerEngine:
             merge_spec = parse_merge(raw)
             if merge_spec is not None:
                 # parquet tables have no row-level MERGE; lower onto the
-                # incremental rewrite (same routing pattern as COPY INTO)
+                # CASE-cascade staged rewrite (same routing pattern as
+                # COPY INTO)
                 try:
                     stats = run_merge_statement(self.spark, merge_spec, self.transpiler)
                 except (ValueError, TranspileError):

@@ -397,9 +397,9 @@ def main() -> None:
     )
     # round-6: the general (conditional) MERGE path at 1× and N×. The
     # staged rewrite is ONE target LEFT JOIN source with per-column
-    # CASE cascades plus the required duplicate-source pre-check
-    # (map-agg + semi-join) — wall-time must track input size and the
-    # join must stay an equi-join; the pre-check must not dominate.
+    # CASE cascades; the duplicate-match guard is two counts observed
+    # on the same write — wall-time must track input size and the
+    # join must stay an equi-join.
     import tempfile
     import uuid
 

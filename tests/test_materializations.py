@@ -1439,7 +1439,8 @@ class TestSeedColumnTypesTypo:
 
 class TestMergeStatement:
     """Literal MERGE INTO through IcebreakerEngine.execute, lowered
-    onto the incremental rewrite (materializations/merge_stmt.py)."""
+    onto the CASE-cascade staged rewrite
+    (materializations/merge_stmt.py)."""
 
     def _seed(self, spark, eng, name):
         spark.sql(f"DROP TABLE IF EXISTS mat_test.{name}")
@@ -1622,6 +1623,95 @@ class TestMergeStatement:
             )
         # target untouched after the refused merge
         assert spark.table("mat_test.mg12").count() == 3
+
+    @pytest.mark.parametrize(
+        "insert", ["", " WHEN NOT MATCHED THEN INSERT *"],
+        ids=["update_only", "upsert"],
+    )
+    def test_duplicate_source_set_star_refused(self, spark, engine, insert):
+        # an unconditional UPDATE SET * refuses two source rows for one
+        # target row like every other shape; the guard fires after the
+        # staging write, so the refusal must drop the staging table and
+        # leave the target's rows as they were
+        from dbt_icebreaker_spark.transpiler.core import TranspileError
+
+        self._seed(spark, engine, "mg22")
+        before = sorted(spark.table("mat_test.mg22").collect())
+        spark.createDataFrame(
+            [(1, "x", 1.0), (1, "y", 2.0), (4, "d", 40.0)],
+            "k int, s string, v double",
+        ).createOrReplaceTempView("mg22_src")
+        with pytest.raises(TranspileError, match="nondeterministic"):
+            engine.execute(
+                "MERGE INTO mat_test.mg22 t USING mg22_src s ON t.k = s.k "
+                "WHEN MATCHED THEN UPDATE SET *" + insert
+            )
+        assert sorted(spark.table("mat_test.mg22").collect()) == before
+        assert not spark.catalog.tableExists("mat_test.mg22__icebreaker_stage")
+
+    @pytest.mark.parametrize(
+        "when,affected,expect",
+        [
+            ("WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+             2, {2: "B", 4: "d"}),
+            ("WHEN MATCHED THEN UPDATE SET *", 0, {}),
+            ("WHEN NOT MATCHED THEN INSERT *", 2, {2: "B", 4: "d"}),
+        ],
+        ids=["upsert", "update_only", "insert_only"],
+    )
+    def test_empty_target(self, spark, engine, when, affected, expect):
+        # an empty target lets AQE prune the join (and the target-scan
+        # observation with it): nothing matches, nothing refuses
+        spark.sql("DROP TABLE IF EXISTS mat_test.mg23")
+        spark.sql(
+            "CREATE TABLE mat_test.mg23 (k int, s string, v double) USING parquet"
+        )
+        spark.createDataFrame(
+            [(2, "B", 22.0), (4, "d", 40.0)], "k int, s string, v double"
+        ).createOrReplaceTempView("mg23_src")
+        res = engine.execute(
+            f"MERGE INTO mat_test.mg23 t USING mg23_src s ON t.k = s.k {when}"
+        ).collect()
+        assert res[0].rows_affected == affected
+        assert {r.k: r.s for r in spark.table("mat_test.mg23").collect()} == expect
+
+    def test_empty_target_duplicate_source_inserts_both(self, spark, engine):
+        # no target row exists to be matched twice, so the duplicate
+        # source keys are not a nondeterministic merge: both insert
+        spark.sql("DROP TABLE IF EXISTS mat_test.mg24")
+        spark.sql(
+            "CREATE TABLE mat_test.mg24 (k int, s string, v double) USING parquet"
+        )
+        spark.createDataFrame(
+            [(1, "x", 1.0), (1, "y", 2.0)], "k int, s string, v double"
+        ).createOrReplaceTempView("mg24_src")
+        res = engine.execute(
+            "MERGE INTO mat_test.mg24 t USING mg24_src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+        ).collect()
+        assert res[0].rows_affected == 2
+        assert sorted(r.s for r in spark.table("mat_test.mg24").collect()) == ["x", "y"]
+
+    @pytest.mark.parametrize(
+        "when",
+        [
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+            "WHEN MATCHED THEN DELETE",
+            "WHEN NOT MATCHED THEN INSERT *",
+        ],
+        ids=["upsert", "delete", "insert_only"],
+    )
+    def test_empty_source(self, spark, engine, when):
+        self._seed(spark, engine, "mg25")
+        before = sorted(spark.table("mat_test.mg25").collect())
+        spark.createDataFrame(
+            [], "k int, s string, v double"
+        ).createOrReplaceTempView("mg25_src")
+        res = engine.execute(
+            f"MERGE INTO mat_test.mg25 t USING mg25_src s ON t.k = s.k {when}"
+        ).collect()
+        assert res[0].rows_affected == 0
+        assert sorted(spark.table("mat_test.mg25").collect()) == before
 
     def test_case_expression_in_set_and_condition(self, spark, engine):
         # r5 review: unparenthesized CASE carries WHEN/THEN at paren
@@ -2125,6 +2215,41 @@ class TestDeleteUpdateStatements:
         engine.execute("UPDATE mat_test.dm11 AS u SET v = 0 WHERE u.k = 1")
         got = {r.k: r.v for r in spark.table("mat_test.dm11").collect()}
         assert got[1] == 0.0 and got[2] == 20.0
+
+    def test_constant_predicates_count_rows(self, spark, engine):
+        # the count is a flag observed on the write; a constant-true
+        # predicate must not fold the DELETE filter away with it
+        self._seed(spark, "dm14")
+        res = engine.execute("DELETE FROM mat_test.dm14 WHERE 1 = 1").collect()
+        assert res[0].rows_affected == 4
+        assert spark.table("mat_test.dm14").count() == 0
+        self._seed(spark, "dm15")
+        res = engine.execute("DELETE FROM mat_test.dm15 WHERE 1 = 0").collect()
+        assert res[0].rows_affected == 0
+        assert spark.table("mat_test.dm15").count() == 4
+        res = engine.execute("UPDATE mat_test.dm15 SET v = 1 WHERE TRUE").collect()
+        assert res[0].rows_affected == 4
+
+    def test_dml_leaves_no_temp_views(self, spark, engine):
+        self._seed(spark, "dm16")
+        spark.createDataFrame(
+            [(1, "x", 1.0)], "k int, s string, v double"
+        ).createOrReplaceTempView("dm16_src")
+        before = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        for stmt in (
+            "DELETE FROM mat_test.dm16 WHERE k = 4",
+            "DELETE FROM mat_test.dm16",
+            "UPDATE mat_test.dm16 SET v = 0 WHERE k = 1",
+            "UPDATE mat_test.dm16 t SET v = s.v FROM dm16_src s WHERE t.k = s.k",
+            "MERGE INTO mat_test.dm16 t USING dm16_src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+            "MERGE INTO mat_test.dm16 t USING dm16_src s ON t.k = s.k "
+            "WHEN NOT MATCHED THEN INSERT *",
+        ):
+            engine.execute(stmt)
+        after = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        leaked = {n for n in after - before if n.startswith("__icebreaker_")}
+        assert not leaked, leaked
 
 
 class TestDynamicPivot:
@@ -2872,7 +2997,7 @@ class TestMergeRenamedKeys:
             "WHEN MATCHED THEN DELETE"
         )
         assert spec is not None
-        assert not spec.key_pairs and not spec.keys
+        assert not spec.key_pairs
         assert spec.extra_conditions
 
     def test_renamed_key_duplicate_source_refused(self, spark, engine):
@@ -3044,7 +3169,7 @@ class TestNullKeyDmlR7:
         assert spark.table(f"{sch}.nk_d").count() == 2
 
     def test_same_name_key_merge_null_keys(self, spark, engine):
-        # the same-name fast path (spec.keys) must also null-reject
+        # a same-named key (ON t.k = s.k) must also null-reject
         sch = engine.effective_schema
         spark.sql(f"DROP TABLE IF EXISTS {sch}.nk_s")
         spark.sql(

@@ -99,9 +99,9 @@ class TestJoinStrategy:
         captured = {}
         real = incremental._staged_overwrite
 
-        def capture(spark_, df, target):
+        def capture(spark_, df, target, check=None):
             captured["plan"] = _executed_plan(df)
-            return real(spark_, df, target)
+            return real(spark_, df, target, check=check)
 
         incremental._staged_overwrite = capture
         try:
@@ -429,14 +429,19 @@ class TestMaterializationJobFloor:
     """Every materialization call learns its row count from its own
     write (ddl.write_table observes count(1) on the written frame), so
     none re-scans the table it just wrote — such a recount costs two
-    jobs per call. Jobs per call, counted in one job group, stay at or
-    under the measured floor."""
+    jobs per call. MERGE, UPDATE … FROM, DELETE and UPDATE statements
+    likewise count affected rows, and MERGE checks for duplicate
+    matches, with observations on their one write. Jobs per call,
+    counted in one job group, stay at or under the measured floor."""
 
     # call → most jobs allowed
     FLOOR = {
         "seed": 3, "table": 1, "incremental_create": 1, "merge": 3,
         "delete_insert": 3, "append": 3, "snapshot_first": 2,
         "snapshot_update": 6,
+        "merge_upsert": 3, "merge_update": 2, "merge_update_partial": 2,
+        "merge_delete": 2, "merge_delete_insert": 3, "merge_insert": 2,
+        "update_from": 2, "delete": 1, "update": 1,
     }
 
     def test_jobs_per_call(self, spark, tmp_path):
@@ -469,6 +474,19 @@ class TestMaterializationJobFloor:
                 strategy="check", check_cols=["c_acctbal"],
                 now=datetime.datetime(2026, 4, day))
 
+        def statement(name, sql):
+            """Create the target now; return the statement's call."""
+            spark.sql(f"DROP TABLE IF EXISTS job_floor.{name}")
+            spark.sql(f"CREATE TABLE job_floor.{name} AS "
+                      + orders + "o_orderkey < 1000")
+            return lambda: eng.execute(sql.format(t=f"job_floor.{name} t"))
+
+        def merge(name, when):
+            return statement(name, (
+                "MERGE INTO {t} USING (" + orders + "o_orderkey >= 500 "
+                "AND o_orderkey < 1400) s ON t.o_orderkey = s.o_orderkey "
+                + when))
+
         calls = {
             "seed": lambda: eng.seed_csv("jf_seed", str(seed)),
             "table": lambda: eng.run_model("jf_table", orders + "true"),
@@ -480,6 +498,27 @@ class TestMaterializationJobFloor:
             "append": inc("jf_append", "append"),
             "snapshot_first": snapshot(1),
             "snapshot_update": snapshot(2),
+            "merge_upsert": merge(
+                "jf_mu", "WHEN MATCHED THEN UPDATE SET * "
+                "WHEN NOT MATCHED THEN INSERT *"),
+            "merge_update": merge("jf_mup", "WHEN MATCHED THEN UPDATE SET *"),
+            "merge_update_partial": merge(
+                "jf_mpp", "WHEN MATCHED THEN UPDATE SET "
+                "t.o_totalprice = s.o_totalprice"),
+            "merge_delete": merge("jf_md", "WHEN MATCHED THEN DELETE"),
+            "merge_delete_insert": merge(
+                "jf_mdi", "WHEN MATCHED THEN DELETE "
+                "WHEN NOT MATCHED THEN INSERT *"),
+            "merge_insert": merge("jf_mi", "WHEN NOT MATCHED THEN INSERT *"),
+            "update_from": statement("jf_uf", (
+                "UPDATE {t} SET o_totalprice = s.o_totalprice * 2 FROM ("
+                + orders + "o_orderkey >= 500) s "
+                "WHERE t.o_orderkey = s.o_orderkey")),
+            "delete": statement(
+                "jf_del", "DELETE FROM {t} WHERE o_totalprice > 100000"),
+            "update": statement(
+                "jf_upd", "UPDATE {t} SET o_totalprice = 0 "
+                "WHERE o_totalprice > 100000"),
         }
         got = {}
         for label, call in calls.items():
