@@ -217,17 +217,12 @@ def cmd_verify(args) -> int:
 def cmd_compact(args) -> int:
     """Small-file compaction (maintenance.compact_table) — scale
     extension; every incremental/streaming table fragments over
-    time."""
+    time. The table keeps its partitioning and bucketing."""
     from .materializations.maintenance import compact_table
     from .session import get_spark
 
     spark = get_spark(app_name="compact")
-    stats = compact_table(
-        spark,
-        args.table,
-        target_file_mb=args.target_mb,
-        partition_by=args.partition_by,
-    )
+    stats = compact_table(spark, args.table, target_file_mb=args.target_mb)
     print(json.dumps(stats))
     return 0
 
@@ -547,10 +542,11 @@ def main(argv: list[str] | None = None) -> int:
     dt.add_argument("--store-failures-schema", default=None)
     dt.set_defaults(fn=cmd_test)
 
-    cm = sub.add_parser("compact", help="small-file compaction for a table")
+    cm = sub.add_parser(
+        "compact", help="small-file compaction for a table (keeps its "
+        "partitioning and bucketing)")
     cm.add_argument("table")
     cm.add_argument("--target-mb", type=int, default=128)
-    cm.add_argument("--partition-by", default=None)
     cm.set_defaults(fn=cmd_compact)
 
     vp = sub.add_parser("verify", help="row-count compare two tables")

@@ -34,7 +34,9 @@ import re
 from dataclasses import dataclass, field
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
+
+from .ddl import write_table
 
 _COPY_RE = re.compile(
     r"^\s*COPY\s+INTO\s+(?P<table>[\w.]+)\s+FROM\s+(?P<src>@?'[^']*'|@[\w.$/]+)"
@@ -322,23 +324,10 @@ def run_transform_copy(
             cols.append(
                 (e.cast(f_.dataType) if e is not None
                  else F.lit(None).cast(f_.dataType)).alias(f_.name))
-        n = _insert_counted(out.select(*cols), spec.table)
+        n = write_table(spark, out.select(*cols), spec.table, "append")
     finally:
         spark.catalog.dropTempView(FILES_VIEW)
     return {"table": spec.table, "rows_loaded": n, "format": spec.fmt}
-
-
-def _insert_counted(df: DataFrame, table: str) -> int:
-    """Append ``df`` to ``table`` by position and return the rows
-    loaded: a count(1) observed on the insert itself — one source
-    scan, one job, no cached copy of the frame."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-        "append").insertInto(table)
-    return obs.get["n"]
 
 
 def _pattern_paths(root: str, pattern: str) -> list[str]:
@@ -403,5 +392,5 @@ def run_copy_into(spark: SparkSession, spec: CopySpec) -> dict:
                 )
             cols.append(df[src_name].cast(f_.dataType).alias(f_.name))
         df = df.select(*cols)
-    n = _insert_counted(df, spec.table)
+    n = write_table(spark, df, spec.table, "append")
     return {"table": spec.table, "rows_loaded": n, "format": spec.fmt}

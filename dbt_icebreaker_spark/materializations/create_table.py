@@ -317,10 +317,11 @@ def run_create_or_replace_table(spark, spec, transpiler, execute_fn) -> dict:
                    .sortWithinPartitions(*spec.cluster_by)
         # staged write + rename swap: survives a crash mid-write and
         # allows the Snowflake rebuild-in-place pattern (SELECT ... FROM
-        # the table being replaced). CLUSTER BY just established a
-        # range layout — the writer's size-targeted coalesce must not
-        # merge those files back
-        n = _staged_overwrite(spark, df, spec.target,
+        # the table being replaced). It declares a new table, so the
+        # old one's partitioning and bucketing do not carry over.
+        # CLUSTER BY just established a range layout — the writer's
+        # size-targeted coalesce must not merge those files back
+        n = _staged_overwrite(spark, df, spec.target, replace=True,
                               size_coalesce=not spec.cluster_by)
         _apply_table_comment(spark, spec)
         return {"table": spec.target, "rows_affected": n}

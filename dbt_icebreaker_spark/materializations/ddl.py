@@ -93,37 +93,81 @@ class Ddl:
         return self.spark.catalog.tableExists(f"{schema}.{identifier}")
 
 
+def table_layout(
+    spark: SparkSession, target: str
+) -> tuple[list[str], list[str], Optional[int]]:
+    """``(partition_cols, bucket_cols, num_buckets)`` of a cataloged
+    table; ``([], [], None)`` when the table is missing. The one place
+    the engine reads a table's layout: one catalog metadata call, no
+    Spark job. A layout is declared when a table is created and every
+    later write keeps it — appends through the catalog itself, staged
+    rewrites by asking here (incremental._staged_overwrite)."""
+
+    def seq(s) -> list[str]:
+        return [s.apply(i) for i in range(s.size())]
+
+    ss = spark._jsparkSession.sessionState()
+    parser, catalog = ss.sqlParser(), ss.catalog()
+    names = seq(parser.parseMultipartIdentifier(target))
+    if len(names) == 3 and names[0].lower() == "spark_catalog":
+        names = names[1:]
+    if len(names) > 2:
+        return [], [], None  # not a session-catalog table
+    ident = parser.parseTableIdentifier(
+        ".".join("`" + n.replace("`", "``") + "`" for n in names))
+    if not catalog.tableExists(ident):
+        return [], [], None
+    meta = catalog.getTableMetadata(ident)
+    parts = seq(meta.partitionColumnNames())
+    if meta.bucketSpec().isEmpty():
+        return parts, [], None
+    spec = meta.bucketSpec().get()
+    return parts, seq(spec.bucketColumnNames()), spec.numBuckets()
+
+
 def write_table(
     spark: SparkSession,
     df: DataFrame,
     target: str,
     mode: str = "overwrite",
-    partition_by: Optional[str] = None,
+    partition_by: str | Sequence[str] | None = None,
     clustered_by: str | Sequence[str] | None = None,
     buckets: Optional[int] = None,
 ) -> int:
-    """The one table writer of the materializations: ``saveAsTable``
-    of ``df`` into ``target`` (``overwrite`` or ``append``), returning
-    the rows written. Observe-once invariant: the count is a count(1)
-    observed on ``df`` by the write itself, which evaluates ``df``
-    exactly once — no job of its own, and no caller re-scans
-    ``target`` to learn it. Partitioning and bucketing are re-declared
-    on every write, so a bucketed table keeps its zero-Exchange joins
-    through every rewrite (and Spark accepts the append). An overwrite
-    first clears an orphaned location."""
+    """The one table writer of the materializations: writes ``df``
+    into ``target`` and returns the rows written. Observe-once
+    invariant: the count is a count(1) observed on ``df`` by the write
+    itself, which evaluates ``df`` exactly once — no job of its own,
+    and no caller re-scans ``target`` to learn it.
+
+    ``overwrite`` (re)creates ``target`` with the partitioning and
+    bucketing given here (first clearing an orphaned location): a
+    table's layout is declared when the table is created. ``append``
+    inserts into the existing table by column name, and Spark applies
+    the layout its catalog records — exactly, bucket sort columns
+    included — so the caller passes none."""
     from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    obs = Observation()
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    if mode == "append":
+        # insertInto is positional: line the columns up with the table's
+        df.select(*spark.table(target).columns).write.mode(
+            "append").insertInto(target)
+        return obs.get["n"]
     if bool(clustered_by) != bool(buckets):
         raise ValueError("clustered_by and buckets must be set together")
-    if mode == "overwrite":
-        clear_orphaned_location(spark, target)
-    obs = Observation()
-    writer = df.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(mode)
+    clear_orphaned_location(spark, target)
+    writer = df.write.mode(mode)
     if partition_by:
-        writer = writer.partitionBy(partition_by)
+        writer = writer.partitionBy(*_as_list(partition_by))
     if clustered_by:
-        cols = [clustered_by] if isinstance(clustered_by, str) else list(clustered_by)
+        cols = _as_list(clustered_by)
         writer = writer.bucketBy(buckets, *cols).sortBy(*cols)
     writer.saveAsTable(target)
     return obs.get["n"]
+
+
+def _as_list(cols: str | Sequence[str]) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols)

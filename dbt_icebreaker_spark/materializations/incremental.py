@@ -32,7 +32,7 @@ from typing import Callable, Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .ddl import clear_orphaned_location, write_table
+from .ddl import clear_orphaned_location, table_layout, write_table
 
 
 def _normalize_keys(unique_key: str | Sequence[str] | None) -> list[str]:
@@ -58,21 +58,6 @@ def _sync_partitions(spark: SparkSession, table: str) -> None:
 
 def _swap_names(target: str) -> tuple[str, str]:
     return f"{target}__icebreaker_stage", f"{target}__icebreaker_old"
-
-
-def _is_partitioned(spark: SparkSession, table: str) -> Optional[bool]:
-    """Whether the catalog records partition columns for ``table`` —
-    True/False when it answers, None when the lookup fails (callers
-    then fall back to the blind MSCK). One metadata round trip (~2 ms
-    measured) against ~90 ms for an MSCK REPAIR failing with
-    NOT_A_PARTITIONED_TABLE on the unpartitioned common case."""
-    try:
-        ss = spark._jsparkSession.sessionState()
-        ti = ss.sqlParser().parseTableIdentifier(table)
-        cols = ss.catalog().getTableMetadata(ti).partitionColumnNames()
-        return cols.size() > 0
-    except Exception:
-        return None
 
 
 def _size_coalesced(df: DataFrame) -> DataFrame:
@@ -134,11 +119,9 @@ def _staged_overwrite(
     spark: SparkSession,
     df: DataFrame,
     target: str,
-    partition_by: Optional[str] = None,
-    clustered_by: str | Sequence[str] | None = None,
-    buckets: Optional[int] = None,
     size_coalesce: bool = True,
     check: Optional[Callable[[], None]] = None,
+    replace: bool = False,
 ) -> int:
     """Replace `target` with `df` even when df reads from target:
     write to a staging table first, then swap. Avoids Spark's
@@ -146,6 +129,13 @@ def _staged_overwrite(
     the whole result in memory. Returns the row count write_table
     observed on the staging write — the rows of the new target, with
     no scan of the swapped-in table.
+
+    The rewrite keeps the target's layout: its partitioning and
+    bucketing are read from the catalog once (ddl.table_layout),
+    before the staging write, and the staging table is written with
+    them — no caller restates them. ``replace`` declares a new table
+    instead (CREATE OR REPLACE TABLE … AS SELECT): the result is
+    unpartitioned and unbucketed.
 
     ``check`` runs after the staging write and before the swap, so it
     can read Observations the write filled (MERGE's duplicate-match
@@ -155,11 +145,10 @@ def _staged_overwrite(
     Crash safety: the old table is renamed aside (not dropped) before
     the staging table takes its name, and only dropped once the swap
     completed — a crash mid-swap leaves the data in either the backup
-    or staging table instead of losing the target entirely. Partition
-    layout is preserved via ``partition_by`` (a partitioned table would
-    otherwise silently become unpartitioned after the first rewrite);
-    each rename is followed by a partition-metadata sync BEFORE the
-    backup is dropped — see _sync_partitions."""
+    or staging table instead of losing the target entirely. Each
+    rename of a partitioned table is followed by a partition-metadata
+    sync BEFORE the backup is dropped — see _sync_partitions; the same
+    layout read says which of the two tables need it."""
     staging, backup = _swap_names(target)
     for t in (staging, backup):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
@@ -167,7 +156,9 @@ def _staged_overwrite(
     if size_coalesce:
         # callers that already sized their output (compaction) opt out
         df = _size_coalesced(df)
-    n = write_table(spark, df, staging, "overwrite", partition_by, clustered_by, buckets)
+    layout = table_layout(spark, target)
+    new_layout = ([], [], None) if replace else layout
+    n = write_table(spark, df, staging, "overwrite", *new_layout)
     if check is not None:
         try:
             check()
@@ -176,17 +167,10 @@ def _staged_overwrite(
             raise
     if spark.catalog.tableExists(target):
         spark.sql(f"ALTER TABLE {target} RENAME TO {backup}")
-        # the OLD table's layout is unknown to the caller — ask the
-        # catalog instead of always paying the blind-MSCK round trip;
-        # None (lookup failed) keeps the conservative sync
-        if _is_partitioned(spark, backup) is not False:
+        if layout[0]:
             _sync_partitions(spark, backup)
     spark.sql(f"ALTER TABLE {staging} RENAME TO {target}")
-    if partition_by:
-        # the staging table is partitioned only when WE just wrote it
-        # partitioned — the old table's layout is unknown (hence the
-        # unconditional backup sync above), but this one is known, so
-        # the unpartitioned common case skips a catalog round trip
+    if new_layout[0]:
         _sync_partitions(spark, target)
     spark.sql(f"DROP TABLE IF EXISTS {backup}")
     return n
@@ -334,6 +318,13 @@ def run_incremental(
     there under ``collect_stats=False``, whose callers loop many
     batches and skip that scan.
 
+    ``partition_by``/``clustered_by``/``buckets`` declare the table's
+    layout when a run creates it (first run or ``full_refresh``);
+    every later batch keeps the layout the catalog records, whatever
+    the config says, so changing an existing table's layout needs
+    ``full_refresh`` (dbt-spark's contract). ``partition_by`` also
+    names what ``delete+insert`` and ``insert_overwrite`` replace.
+
     ``incremental_predicates`` (dbt contract) bound which TARGET rows
     are eligible for matching: rows outside every predicate are
     carried through untouched and never join against the batch. On
@@ -372,10 +363,7 @@ def run_incremental(
     schema_widened = list(final_cols) != list(spark.table(target).columns)
     if schema_widened and strategy == "append":
         # append can't widen in place on plain parquet — rewrite once
-        n = _staged_overwrite(
-            spark, old.unionByName(new_aligned), target,
-            partition_by, clustered_by, buckets,
-        )
+        n = _staged_overwrite(spark, old.unionByName(new_aligned), target)
         return {
             "strategy": "append(schema-change rewrite)",
             "rows": n,
@@ -385,7 +373,7 @@ def run_incremental(
 
     if strategy == "append":
         # incremental.sql:120-128
-        n = write_table(spark, new_aligned, target, "append", None, clustered_by, buckets)
+        n = write_table(spark, new_aligned, target, "append")
         return _in_place("append", rows_appended=n)
 
     def _scope_split(frame: DataFrame):
@@ -453,10 +441,7 @@ def run_incremental(
             raise ValueError("delete+insert needs unique_key or partition_by")
         if carried is not None:
             kept = kept.unionByName(carried)
-        n = _staged_overwrite(
-            spark, kept.unionByName(new_aligned), target,
-            partition_by, clustered_by, buckets,
-        )
+        n = _staged_overwrite(spark, kept.unionByName(new_aligned), target)
         return {"strategy": "delete+insert", "rows": n, **extra}
 
     update_cols: Optional[list[str]] = None
@@ -526,7 +511,7 @@ def run_incremental(
             return _in_place("merge(sql)")
         if not keys:
             # reference merge without unique_key degenerates to append
-            n = write_table(spark, new_aligned, target, "append", None, clustered_by, buckets)
+            n = write_table(spark, new_aligned, target, "append")
             return _in_place("merge(append)", rows_appended=n)
         # AQE picks broadcast vs shuffle from the batch's runtime size
         # (see delete+insert note — a forced hint OOMs on backfills)
@@ -572,20 +557,14 @@ def run_incremental(
             kept = merged
             if carried is not None:
                 kept = kept.unionByName(carried.select(*final_cols))
-            n = _staged_overwrite(
-                spark, kept.unionByName(new_only), target,
-                partition_by, clustered_by, buckets,
-            )
+            n = _staged_overwrite(spark, kept.unionByName(new_only), target)
             return {"strategy": "merge(partial-update)", "rows": n, **extra}
         kept = scoped.join(
             new_aligned.select(keys).distinct(), on=keys, how="left_anti"
         )
         if carried is not None:
             kept = kept.unionByName(carried)
-        n = _staged_overwrite(
-            spark, kept.unionByName(new_aligned), target,
-            partition_by, clustered_by, buckets,
-        )
+        n = _staged_overwrite(spark, kept.unionByName(new_aligned), target)
         return {"strategy": "merge", "rows": n, **extra}
 
     raise ValueError(f"unknown incremental strategy: {strategy}")

@@ -8,7 +8,8 @@ table accumulating thousands of KB-sized files pays per-file open
 cost, footer reads, and scheduler overhead on every scan. Compaction
 rewrites the table into ~target-sized files through the SAME
 crash-safe staged swap the incremental engine uses (backup rename →
-staging rename → drop), preserving partition/bucket layout.
+staging rename → drop), which keeps the table's partitioning and
+bucketing as the catalog records them (ddl.table_layout).
 
 Sizing note: the file count target derives from the MEASURED table
 bytes (catalog location walk), not row counts — the same
@@ -22,6 +23,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import SparkSession
 
+from .ddl import table_layout
 from .incremental import _staged_overwrite
 
 
@@ -38,48 +40,6 @@ def table_location(spark: SparkSession, target: str) -> Optional[str]:
             # file:/p, file:///p — os.path tolerates repeated slashes
             return loc[5:] if loc.startswith("file:") else loc
     return None
-
-
-def table_layout(
-    spark: SparkSession, target: str
-) -> tuple[list[str], list[str], Optional[int]]:
-    """(partition_cols, bucket_cols, num_buckets) from the catalog —
-    so maintenance rewrites can PRESERVE layout without the caller
-    restating it (a compaction that silently unpartitions a table is
-    data-loss-adjacent: the next insert_overwrite run would
-    dynamic-overwrite the whole table)."""
-    import re as _re
-
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {target}").collect()
-    except Exception:
-        return [], [], None
-    part_cols: list[str] = []
-    bucket_cols: list[str] = []
-    buckets: Optional[int] = None
-    in_part = False
-    for r in rows:
-        name = (r.col_name or "").strip()
-        if name == "# Partition Information":
-            in_part = True
-            continue
-        if in_part:
-            if name == "# col_name" or name == "":
-                in_part = name != ""
-                continue
-            if name.startswith("#"):
-                in_part = False
-            else:
-                part_cols.append(name)
-                continue
-        if name == "Num Buckets":
-            try:
-                buckets = int(r.data_type)
-            except (TypeError, ValueError):
-                buckets = None
-        elif name == "Bucket Columns":
-            bucket_cols = _re.findall(r"`([^`]+)`", r.data_type or "")
-    return part_cols, bucket_cols, buckets
 
 
 def _scan_files(path: str) -> tuple[int, int]:
@@ -152,9 +112,6 @@ def compact_table(
     spark: SparkSession,
     target: str,
     target_file_mb: int = 128,
-    partition_by: Optional[str] = None,
-    clustered_by: str | Sequence[str] | None = None,
-    buckets: Optional[int] = None,
     min_files: int = 2,
 ) -> dict:
     """Rewrite ``target`` into ~``target_file_mb``-sized files.
@@ -162,30 +119,14 @@ def compact_table(
     Skips (no-op stats) when the table already has fewer than
     ``min_files`` files or is already at/under the target count —
     compaction must be safe to run on a schedule without rewriting
-    healthy tables. Bucketed tables keep their bucket spec (the file
-    count is then buckets-driven; pass the original ``buckets`` /
-    ``clustered_by``); partitioned tables compact per-partition via
-    a partition-keyed repartition.
+    healthy tables. The rewrite keeps the layout the catalog records:
+    a bucketed table keeps its bucket spec (the file count is then
+    buckets-driven); a partitioned table compacts per partition via a
+    partition-keyed repartition.
     """
     loc = table_location(spark, target)
     if loc is None or not os.path.exists(loc):
         raise ValueError(f"table {target} has no scannable location")
-    # preserve catalog layout unless explicitly overridden — the
-    # docstring's promise must not depend on the caller restating it
-    cat_parts, cat_bucket_cols, cat_buckets = table_layout(spark, target)
-    if partition_by is None and cat_parts:
-        partition_by = cat_parts if len(cat_parts) > 1 else cat_parts[0]
-    # adopt the catalog bucket spec only when it is COMPLETE and the
-    # caller supplied no bucket opinion at all — a half-parsed spec
-    # (cols without a count) must not abort the rewrite, and explicit
-    # caller values are never clobbered
-    if (
-        clustered_by is None
-        and buckets is None
-        and cat_bucket_cols
-        and cat_buckets
-    ):
-        clustered_by, buckets = cat_bucket_cols, cat_buckets
     files_before, total_bytes = _scan_files(loc)
     target_files = max(1, int(total_bytes // (target_file_mb * 1024 * 1024)) + 1)
     if files_before < min_files or files_before <= target_files:
@@ -196,16 +137,14 @@ def compact_table(
             "bytes": total_bytes,
         }
     df = spark.table(target)
-    if buckets and clustered_by:
-        # bucket spec dictates layout; staged writer re-applies it
+    parts, _, buckets = table_layout(spark, target)
+    if buckets:
+        # bucket spec dictates layout; the staged write re-applies it
         compacted = df
-    elif partition_by:
-        pcols = [partition_by] if isinstance(partition_by, str) else list(partition_by)
-        compacted = df.repartition(target_files, *pcols)
     else:
-        compacted = df.repartition(target_files)
+        compacted = df.repartition(target_files, *parts)
     _staged_overwrite(
-        spark, compacted, target, partition_by, clustered_by, buckets,
+        spark, compacted, target,
         # compaction sized its own output above (target_file_mb) — the
         # writer's estimate-based coalesce must not second-guess it
         size_coalesce=False,

@@ -1111,7 +1111,10 @@ def parse_alter_columns(sql: str) -> Optional[AlterColumnsSpec]:
 def run_alter_columns(spark: SparkSession, spec: AlterColumnsSpec) -> dict:
     """Column rename/drop on a parquet table = staged overwrite with
     the reshaped projection (Spark V1 parquet has no in-place column
-    DDL; the swap preserves crash safety like every other rewrite)."""
+    DDL; the swap preserves crash safety like every other rewrite, and
+    keeps the table's layout). A partition or bucket column refuses
+    before any write."""
+    from .ddl import table_layout
     from .incremental import _staged_overwrite
 
     tgt = spark.table(spec.target)
@@ -1134,6 +1137,18 @@ def run_alter_columns(spark: SparkSession, spec: AlterColumnsSpec) -> dict:
                 )
     if not spec.renames and not drops:
         return {"table": spec.target, "rows_affected": 0}  # IF EXISTS no-op
+    parts, bucket_cols, _ = table_layout(spark, spec.target)
+    layout_cols = {c.lower() for c in parts + bucket_cols}
+    hit = [c for c in [o for o, _ in spec.renames] + drops
+           if c.lower() in layout_cols]
+    if hit:
+        raise TranspileError(
+            f"ALTER {spec.target}: column {hit[0]!r} is a partition or "
+            "bucket column; renaming or dropping it would change the "
+            "table's layout. Rebuild the table instead (CREATE OR "
+            "REPLACE TABLE ... AS SELECT, or a full_refresh run of its "
+            "model)."
+        )
     new = tgt
     for old, newname in spec.renames:
         new = new.withColumnRenamed(old, newname)

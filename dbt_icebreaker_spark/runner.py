@@ -495,6 +495,22 @@ def _coerce_day_intervals(df: DataFrame | None) -> DataFrame | None:
 _RUN_SEQ = itertools.count()
 
 
+def _affected_frame(spark: SparkSession, stats: dict) -> DataFrame:
+    """The one-row ``(table, rows_affected)`` result of a DDL/DML
+    statement. Built from an Arrow table it plans as a LocalRelation,
+    so collecting it runs no Spark job; a Python-list frame plans as
+    an RDD scan and costs one job per collect."""
+    import pyarrow as pa
+
+    return spark.createDataFrame(
+        pa.table({
+            "table": pa.array([stats["table"]], pa.string()),
+            "rows_affected": pa.array([stats["rows_affected"]], pa.int64()),
+        }),
+        "table string, rows_affected long",
+    )
+
+
 @dataclass
 class RunResult:
     model: str
@@ -1777,10 +1793,7 @@ class IcebreakerEngine:
                     raise
                 except Exception as e:
                     raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
+                result = _affected_frame(self.spark, stats)
                 continue
             from .materializations.insert_all import (
                 parse_insert_all,
@@ -1797,10 +1810,7 @@ class IcebreakerEngine:
                     raise
                 except Exception as e:
                     raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
+                result = _affected_frame(self.spark, stats)
                 continue
             # CREATE OR REPLACE TABLE: Spark's REPLACE TABLE needs a
             # DSv2 catalog — lower onto the overwrite-write staged swap
@@ -1820,10 +1830,7 @@ class IcebreakerEngine:
                     raise
                 except Exception as e:
                     raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
+                result = _affected_frame(self.spark, stats)
                 continue
             alter_spec = parse_alter_columns(raw)
             if alter_spec is not None:
@@ -1833,10 +1840,7 @@ class IcebreakerEngine:
                     raise
                 except Exception as e:
                     raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
+                result = _affected_frame(self.spark, stats)
                 continue
             # row-level DML on parquet tables lowers onto the staged
             # rewrite (DELETE/UPDATE/MERGE all share the swap machinery)
@@ -1859,10 +1863,7 @@ class IcebreakerEngine:
                     raise
                 except Exception as e:
                     raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
+                result = _affected_frame(self.spark, stats)
                 dml_handled = True
                 break
             if dml_handled:
@@ -1878,10 +1879,7 @@ class IcebreakerEngine:
                     raise  # already actionable
                 except Exception as e:
                     raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_affected"])],
-                    "table string, rows_affected long",
-                )
+                result = _affected_frame(self.spark, stats)
                 continue
             # COPY INTO … FROM @stage resolves the stage to its local
             # directory (r13, stages.py) and rides the path-form

@@ -879,9 +879,7 @@ class TestCompaction:
         df.withColumn("status", F.col("o_orderstatus")).repartition(20).write \
             .partitionBy("status").saveAsTable("compact_t.part")
         n = spark.table("compact_t.part").count()
-        stats = compact_table(
-            spark, "compact_t.part", target_file_mb=128, partition_by="status"
-        )
+        stats = compact_table(spark, "compact_t.part", target_file_mb=128)
         assert stats["action"] == "compacted"
         assert spark.table("compact_t.part").count() == n
         loc = table_location(spark, "compact_t.part")
@@ -1096,9 +1094,9 @@ class TestCompactionLayoutFromCatalog:
         # catalog, not depend on the caller restating it
         import os
 
+        from dbt_icebreaker_spark.materializations.ddl import table_layout
         from dbt_icebreaker_spark.materializations.maintenance import (
             compact_table,
-            table_layout,
             table_location,
         )
         from dbt_icebreaker_spark.sources import read_parquet
@@ -1115,6 +1113,162 @@ class TestCompactionLayoutFromCatalog:
         loc = table_location(spark, "compact_t.autolayout")
         subdirs = [d for d in os.listdir(loc) if d.startswith("status=")]
         assert len(subdirs) >= 2, "partition layout lost"
+
+
+# layout → (its CREATE TABLE clause, what ddl.table_layout reads back)
+_LAYOUTS = {
+    "partitioned": ("PARTITIONED BY (g)", (["g"], [], None)),
+    "bucketed": ("CLUSTERED BY (k) INTO 4 BUCKETS", ([], ["k"], 4)),
+}
+_BASE = {k: ("a" if k % 2 else "b", float(k)) for k in range(20)}
+_SRC = {k: ("a" if k % 2 else "b", float(k * 10)) for k in range(15, 25)}
+
+
+def _upd(rows, keys, f):
+    return {k: f(k, r) if k in keys else r for k, r in rows.items()}
+
+
+# statement on target {t} (source mat_test.lay_src s) → expected rows
+_LAYOUT_DML = {
+    "delete": ("DELETE FROM {t} WHERE k < 5",
+               {k: r for k, r in _BASE.items() if k >= 5}),
+    "update": ("UPDATE {t} SET v = v + 1 WHERE k < 5",
+               _upd(_BASE, range(5), lambda k, r: (r[0], r[1] + 1))),
+    "update_from": ("UPDATE {t} t SET v = s.v FROM mat_test.lay_src s "
+                    "WHERE t.k = s.k",
+                    _upd(_BASE, _SRC, lambda k, r: _SRC[k])),
+    "merge_upsert": ("MERGE INTO {t} t USING mat_test.lay_src s ON t.k = s.k "
+                     "WHEN MATCHED THEN UPDATE SET * "
+                     "WHEN NOT MATCHED THEN INSERT *", {**_BASE, **_SRC}),
+    "merge_delete": ("MERGE INTO {t} t USING mat_test.lay_src s ON t.k = s.k "
+                     "WHEN MATCHED THEN DELETE",
+                     {k: r for k, r in _BASE.items() if k not in _SRC}),
+    "merge_insert": ("MERGE INTO {t} t USING mat_test.lay_src s ON t.k = s.k "
+                     "WHEN NOT MATCHED THEN INSERT *", {**_SRC, **_BASE}),
+    "alter_rename": ("ALTER TABLE {t} RENAME COLUMN v TO w", _BASE),
+    "alter_drop": ("ALTER TABLE {t} DROP COLUMN v", _BASE),
+}
+
+
+class TestLayoutKept:
+    """A table's partitioning and bucketing are declared when it is
+    created and kept by every later write: DML, ALTER and incremental
+    batches rewrite or append through the layout the catalog records
+    (ddl.table_layout), with no caller restating it."""
+
+    @staticmethod
+    def _make(spark, name, layout):
+        t = f"mat_test.{name}"
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        spark.sql(f"CREATE TABLE {t} (k INT, g STRING, v DOUBLE) USING parquet "
+                  + _LAYOUTS[layout][0])
+        spark.createDataFrame(
+            [(k, g, v) for k, (g, v) in _BASE.items()], "k int, g string, v double"
+        ).select(*spark.table(t).columns).write.insertInto(t)
+        return t
+
+    @staticmethod
+    def _rows(spark, t):
+        return sorted(tuple(sorted(r.asDict().items()))
+                      for r in spark.table(t).collect())
+
+    @staticmethod
+    def _no_swap_debris(spark, t):
+        return not any(spark.catalog.tableExists(t + sfx) for sfx in
+                       ("__icebreaker_stage", "__icebreaker_old"))
+
+    @pytest.mark.parametrize("layout", sorted(_LAYOUTS))
+    @pytest.mark.parametrize("stmt", list(_LAYOUT_DML))
+    def test_dml_and_alter_keep_layout(self, spark, engine, stmt, layout):
+        from dbt_icebreaker_spark.materializations.ddl import table_layout
+
+        spark.sql("DROP TABLE IF EXISTS mat_test.lay_src")
+        spark.createDataFrame(
+            [(k, g, v) for k, (g, v) in _SRC.items()], "k int, g string, v double"
+        ).write.saveAsTable("mat_test.lay_src")
+        t = self._make(spark, f"lay_{stmt}_{layout}", layout)
+        assert table_layout(spark, t) == _LAYOUTS[layout][1]
+        sql, expected = _LAYOUT_DML[stmt]
+        engine.execute(sql.format(t=t))
+        assert table_layout(spark, t) == _LAYOUTS[layout][1]
+        col = {"alter_rename": "w", "alter_drop": None}.get(stmt, "v")
+        want = sorted(
+            tuple(sorted({"k": k, "g": g, **({col: v} if col else {})}.items()))
+            for k, (g, v) in expected.items()
+        )
+        assert self._rows(spark, t) == want
+        assert self._no_swap_debris(spark, t)
+
+    @pytest.mark.parametrize("kw", [
+        dict(incremental_strategy="append"),
+        dict(incremental_strategy="merge"),  # no unique_key: an append
+    ], ids=["append", "merge_no_key"])
+    def test_incremental_append_keeps_partitioning(self, spark, engine, kw):
+        from dbt_icebreaker_spark.materializations.ddl import table_layout
+
+        name = f"lay_inc_{kw['incremental_strategy']}"
+        sql = "SELECT event_id AS k, event_type AS g, value AS v FROM events"
+        t = f"{engine.effective_schema}.{name}"
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        for _ in range(2):  # the second run appends to the partitioned table
+            engine.run_model(name, sql + " WHERE event_id < 50", "incremental",
+                             partition_by="g", **kw)
+        assert table_layout(spark, t) == (["g"], [], None)
+        assert spark.table(t).count() == 2 * spark.table("events").filter(
+            "event_id < 50").count()
+
+    def test_layout_change_needs_full_refresh(self, spark, engine):
+        from dbt_icebreaker_spark.materializations.ddl import table_layout
+
+        t = f"{engine.effective_schema}.lay_refresh"
+        sql = ("SELECT event_id AS k, event_type AS g, value AS v FROM events "
+               "WHERE event_id < {}")
+        kw = dict(unique_key="k", incremental_strategy="merge")
+        engine.run_model("lay_refresh", sql.format(50), "incremental",
+                         partition_by="g", full_refresh=True, **kw)
+        assert table_layout(spark, t) == (["g"], [], None)
+        # a merge batch whose config no longer partitions keeps the table's
+        engine.run_model("lay_refresh", sql.format(80), "incremental", **kw)
+        n = spark.table("events").filter("event_id < 80").count()
+        assert table_layout(spark, t) == (["g"], [], None)
+        assert spark.table(t).count() == n
+        # full_refresh re-declares the layout from the config
+        engine.run_model("lay_refresh", sql.format(80), "incremental",
+                         full_refresh=True, **kw)
+        assert table_layout(spark, t) == ([], [], None)
+        assert spark.table(t).count() == n
+
+    @pytest.mark.parametrize("layout,sql", [
+        ("partitioned", "ALTER TABLE {t} RENAME COLUMN g TO h"),
+        ("bucketed", "ALTER TABLE {t} DROP COLUMN k"),
+    ], ids=["partition_column", "bucket_column"])
+    def test_alter_of_layout_column_refused(self, spark, engine, layout, sql):
+        from dbt_icebreaker_spark.materializations.ddl import table_layout
+        from dbt_icebreaker_spark.transpiler.core import TranspileError
+
+        t = self._make(spark, f"lay_refuse_{layout}", layout)
+        before = table_layout(spark, t), self._rows(spark, t)
+        with pytest.raises(TranspileError, match="partition or bucket column"):
+            engine.execute(sql.format(t=t))
+        assert (table_layout(spark, t), self._rows(spark, t)) == before
+        assert self._no_swap_debris(spark, t)
+
+    def test_table_layout_launches_no_job(self, spark):
+        from dbt_icebreaker_spark.materializations.ddl import table_layout
+
+        tables = [self._make(spark, f"lay_jobs_{lay}", lay) for lay in _LAYOUTS]
+        sc = spark.sparkContext
+        sc.setJobGroup("table-layout", "table_layout")
+        try:
+            got = [table_layout(spark, t) for t in tables + [
+                "spark_catalog." + tables[0], "mat_test.lay_missing", "nodb.t"]]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("table-layout") == []
+        layouts = [want for _, want in _LAYOUTS.values()]
+        assert got == layouts + layouts[:1] + [([], [], None)] * 2
 
 
 class TestDataTests:
@@ -1236,18 +1390,6 @@ class TestDataTestsReviewFixes:
         b = _default_name({"test": "relationships", "table": "orders",
                            "column": "o_custkey", "to_table": "cust_archive"})
         assert a != b
-
-
-class TestCompactionBucketAdoption:
-    def test_half_parsed_bucket_spec_does_not_abort(self, spark, monkeypatch):
-        from dbt_icebreaker_spark.materializations import maintenance
-
-        target, _ = TestCompaction()._make_fragmented(spark, "halfspec")
-        monkeypatch.setattr(
-            maintenance, "table_layout", lambda s, t: ([], ["id"], None)
-        )
-        stats = maintenance.compact_table(spark, target, target_file_mb=128)
-        assert stats["action"] == "compacted"  # no ValueError
 
 
 class TestCopyInto:

@@ -99,9 +99,9 @@ class TestJoinStrategy:
         captured = {}
         real = incremental._staged_overwrite
 
-        def capture(spark_, df, target, check=None):
+        def capture(spark_, df, target, **kw):
             captured["plan"] = _executed_plan(df)
-            return real(spark_, df, target, check=check)
+            return real(spark_, df, target, **kw)
 
         incremental._staged_overwrite = capture
         try:
@@ -442,6 +442,7 @@ class TestMaterializationJobFloor:
         "merge_upsert": 3, "merge_update": 2, "merge_update_partial": 2,
         "merge_delete": 2, "merge_delete_insert": 3, "merge_insert": 2,
         "update_from": 2, "delete": 1, "update": 1,
+        "delete_partitioned": 1, "merge_upsert_bucketed": 3,
     }
 
     def test_jobs_per_call(self, spark, tmp_path):
@@ -474,18 +475,20 @@ class TestMaterializationJobFloor:
                 strategy="check", check_cols=["c_acctbal"],
                 now=datetime.datetime(2026, 4, day))
 
-        def statement(name, sql):
-            """Create the target now; return the statement's call."""
+        def statement(name, sql, create="AS " + orders):
+            """Create the target now (``create``: the CREATE TABLE tail
+            before its WHERE); return the statement's call, which
+            also collects the one-row result."""
             spark.sql(f"DROP TABLE IF EXISTS job_floor.{name}")
-            spark.sql(f"CREATE TABLE job_floor.{name} AS "
-                      + orders + "o_orderkey < 1000")
-            return lambda: eng.execute(sql.format(t=f"job_floor.{name} t"))
+            spark.sql(f"CREATE TABLE job_floor.{name} {create}o_orderkey < 1000")
+            return lambda: eng.execute(
+                sql.format(t=f"job_floor.{name} t")).collect()
 
-        def merge(name, when):
+        def merge(name, when, **kw):
             return statement(name, (
                 "MERGE INTO {t} USING (" + orders + "o_orderkey >= 500 "
                 "AND o_orderkey < 1400) s ON t.o_orderkey = s.o_orderkey "
-                + when))
+                + when), **kw)
 
         calls = {
             "seed": lambda: eng.seed_csv("jf_seed", str(seed)),
@@ -516,6 +519,16 @@ class TestMaterializationJobFloor:
                 "WHERE t.o_orderkey = s.o_orderkey")),
             "delete": statement(
                 "jf_del", "DELETE FROM {t} WHERE o_totalprice > 100000"),
+            "delete_partitioned": statement(
+                "jf_delp", "DELETE FROM {t} WHERE o_totalprice > 100000",
+                create="USING parquet PARTITIONED BY (o_orderstatus) AS "
+                "SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders "
+                "WHERE "),
+            "merge_upsert_bucketed": merge(
+                "jf_mub", "WHEN MATCHED THEN UPDATE SET * "
+                "WHEN NOT MATCHED THEN INSERT *",
+                create="USING parquet CLUSTERED BY (o_orderkey) INTO 4 "
+                "BUCKETS AS " + orders),
             "update": statement(
                 "jf_upd", "UPDATE {t} SET o_totalprice = 0 "
                 "WHERE o_totalprice > 100000"),
