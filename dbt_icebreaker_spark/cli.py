@@ -254,7 +254,8 @@ def cmd_catalog(args) -> int:
     """Schema catalog as JSON: per table name, columns/types, row
     count, data bytes and file count (ref catalog_scanner's stats
     cache, computed live from the metastore + file listing)."""
-    from .materializations.maintenance import _scan_files, table_location
+    from .materializations.ddl import table_location
+    from .materializations.maintenance import _scan_files
     from .session import get_spark
 
     spark = get_spark(app_name="catalog")

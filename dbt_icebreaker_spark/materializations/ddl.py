@@ -93,36 +93,56 @@ class Ddl:
         return self.spark.catalog.tableExists(f"{schema}.{identifier}")
 
 
-def table_layout(
-    spark: SparkSession, target: str
-) -> tuple[list[str], list[str], Optional[int]]:
-    """``(partition_cols, bucket_cols, num_buckets)`` of a cataloged
-    table; ``([], [], None)`` when the table is missing. The one place
-    the engine reads a table's layout: one catalog metadata call, no
-    Spark job. A layout is declared when a table is created and every
-    later write keeps it — appends through the catalog itself, staged
-    rewrites by asking here (incremental._staged_overwrite)."""
-
-    def seq(s) -> list[str]:
-        return [s.apply(i) for i in range(s.size())]
-
+def _catalog_table(spark: SparkSession, target: str):
+    """The session catalog's metadata (a JVM ``CatalogTable``) of
+    ``target``, or None when it is missing or not a session-catalog
+    table: one catalog call, no Spark job."""
     ss = spark._jsparkSession.sessionState()
     parser, catalog = ss.sqlParser(), ss.catalog()
-    names = seq(parser.parseMultipartIdentifier(target))
+    names = _seq(parser.parseMultipartIdentifier(target))
     if len(names) == 3 and names[0].lower() == "spark_catalog":
         names = names[1:]
     if len(names) > 2:
-        return [], [], None  # not a session-catalog table
+        return None
     ident = parser.parseTableIdentifier(
         ".".join("`" + n.replace("`", "``") + "`" for n in names))
-    if not catalog.tableExists(ident):
-        return [], [], None
-    meta = catalog.getTableMetadata(ident)
-    parts = seq(meta.partitionColumnNames())
+    return catalog.getTableMetadata(ident) if catalog.tableExists(ident) else None
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def table_layout(
+    spark: SparkSession, target: str
+) -> tuple[list[str], list[str], Optional[int], list[str]]:
+    """``(partition_cols, bucket_cols, num_buckets, sort_cols)`` of a
+    cataloged table — its partitioning and its full bucket spec;
+    ``([], [], None, [])`` when the table is missing. The one place
+    the engine reads a table's layout. A layout is declared when a
+    table is created and every later write keeps it — appends through
+    the catalog itself, staged rewrites by asking here
+    (incremental._staged_overwrite)."""
+    meta = _catalog_table(spark, target)
+    if meta is None:
+        return [], [], None, []
+    parts = _seq(meta.partitionColumnNames())
     if meta.bucketSpec().isEmpty():
-        return parts, [], None
+        return parts, [], None, []
     spec = meta.bucketSpec().get()
-    return parts, seq(spec.bucketColumnNames()), spec.numBuckets()
+    return (parts, _seq(spec.bucketColumnNames()), spec.numBuckets(),
+            _seq(spec.sortColumnNames()))
+
+
+def table_location(spark: SparkSession, target: str) -> Optional[str]:
+    """Filesystem path of a cataloged table, read from the same
+    catalog metadata as table_layout; None for a missing table or a
+    table without a location (a view)."""
+    meta = _catalog_table(spark, target)
+    if meta is None or meta.storage().locationUri().isEmpty():
+        return None
+    uri = meta.storage().locationUri().get()
+    return uri.getPath() if uri.getScheme() in (None, "file") else uri.toString()
 
 
 def write_table(
@@ -133,6 +153,7 @@ def write_table(
     partition_by: str | Sequence[str] | None = None,
     clustered_by: str | Sequence[str] | None = None,
     buckets: Optional[int] = None,
+    sorted_by: Sequence[str] | None = None,
 ) -> int:
     """The one table writer of the materializations: writes ``df``
     into ``target`` and returns the rows written. Observe-once
@@ -142,7 +163,9 @@ def write_table(
 
     ``overwrite`` (re)creates ``target`` with the partitioning and
     bucketing given here (first clearing an orphaned location): a
-    table's layout is declared when the table is created. ``append``
+    table's layout is declared when the table is created. Buckets are
+    sorted by ``sorted_by``, by default by ``clustered_by`` (a staged
+    rewrite passes the sort columns table_layout read). ``append``
     inserts into the existing table by column name, and Spark applies
     the layout its catalog records — exactly, bucket sort columns
     included — so the caller passes none."""
@@ -164,7 +187,10 @@ def write_table(
         writer = writer.partitionBy(*_as_list(partition_by))
     if clustered_by:
         cols = _as_list(clustered_by)
-        writer = writer.bucketBy(buckets, *cols).sortBy(*cols)
+        writer = writer.bucketBy(buckets, *cols)
+        sort = cols if sorted_by is None else list(sorted_by)
+        if sort:
+            writer = writer.sortBy(*sort)
     writer.saveAsTable(target)
     return obs.get["n"]
 

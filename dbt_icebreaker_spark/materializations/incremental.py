@@ -11,7 +11,8 @@ key, no row-at-a-time updates):
 - ``delete+insert`` — incremental.sql:130-159 (DELETE partitions/keys
                       present in the new batch, then insert the batch)
 - ``merge``         — incremental.sql:161-190 (DELETE matching keys,
-                      INSERT ALL new rows == upsert by key)
+                      INSERT ALL new rows == upsert by key; without
+                      ``unique_key`` an append)
 
 ``unique_key`` may be a single column or a list
 (incremental.sql:27-34). First run / full refresh ⇒ CTAS
@@ -19,17 +20,17 @@ key, no row-at-a-time updates):
 
 Scale notes (100 TB): the rewrite pattern reads old+new and overwrites
 — on a real lake this should be Iceberg/Delta ``MERGE INTO`` which
-rewrites only matched files; `use_sql_merge` switches to literal MERGE
-when the target catalog supports it. The anti-join is a shuffle on
-the unique key; AQE handles skew. The new batch is usually small ⇒
-broadcast the *new* side of the anti-join.
+rewrites only matched files; no such catalog ships with this engine,
+so every batch takes the rewrite. The anti-join is a shuffle on the
+unique key; AQE handles skew and broadcasts a small batch.
 """
 
 from __future__ import annotations
 
+import threading
 from typing import Callable, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .ddl import clear_orphaned_location, table_layout, write_table
@@ -138,9 +139,9 @@ def _staged_overwrite(
     unpartitioned and unbucketed.
 
     ``check`` runs after the staging write and before the swap, so it
-    can read Observations the write filled (MERGE's duplicate-match
-    guard); if it raises, the staging table is dropped and the target
-    stays untouched.
+    can read Observations the write filled (the duplicate-match guard
+    of MERGE and of the partial update); if it raises, the staging
+    table is dropped and the target stays untouched.
 
     Crash safety: the old table is renamed aside (not dropped) before
     the staging table takes its name, and only dropped once the swap
@@ -157,7 +158,7 @@ def _staged_overwrite(
         # callers that already sized their output (compaction) opt out
         df = _size_coalesced(df)
     layout = table_layout(spark, target)
-    new_layout = ([], [], None) if replace else layout
+    new_layout = ([], [], None, []) if replace else layout
     n = write_table(spark, df, staging, "overwrite", *new_layout)
     if check is not None:
         try:
@@ -242,55 +243,134 @@ def _apply_schema_change(
     return old, new_a, old_cols
 
 
-def _dest_pred(pred: str, alias: str | None = None) -> str:
-    """Normalize a dbt incremental_predicate: the conventional
-    DBT_INTERNAL_DEST / DBT_INTERNAL_SOURCE aliases map to the
-    target/batch relation (SQL-merge path) or to bare target columns
-    (rewrite path, alias=None)."""
-    out = pred
-    if alias is None:
-        out = out.replace("DBT_INTERNAL_DEST.", "").replace(
-            "DBT_INTERNAL_SOURCE.", "")
-    else:
-        out = out.replace("DBT_INTERNAL_DEST", alias).replace(
-            "DBT_INTERNAL_SOURCE", "s")
-    return out
+def _fans_out(scan, joined) -> bool:
+    """True when a left join emitted more rows (``joined``'s observed
+    ``n_j``) than the target scan fed it (``scan``'s ``n_t``): a
+    target row matched more than one batch row — SQL MERGE's
+    cardinality rule. An empty join output holds no duplicate; and
+    with an empty target AQE prunes the join, taking the scan's
+    observation with it, so ``n_t`` is read only past that case."""
+    n_j = joined.get["n_j"]
+    return bool(n_j) and n_j > scan.get["n_t"]
 
 
-def merge_into_sql(
-    target: str,
-    batch_view: str,
+def _scope_split(
+    old: DataFrame, predicates: Optional[Sequence[str]]
+) -> tuple[DataFrame, Optional[DataFrame]]:
+    """(in_scope, out_of_scope) target rows under dbt's
+    incremental_predicates: out-of-scope rows (every predicate false
+    or NULL) are carried through untouched and never join the batch.
+    The predicates are evaluated on the target only."""
+    if not predicates:
+        return old, None
+    if any("DBT_INTERNAL_SOURCE" in p for p in predicates):
+        raise ValueError(
+            "incremental_predicates cannot reference DBT_INTERNAL_SOURCE: "
+            "they are evaluated on the TARGET rows only, so a batch-side "
+            "predicate would silently bind to target columns."
+        )
+    pred = F.lit(True)
+    for p in predicates:
+        p = p.replace("DBT_INTERNAL_DEST.", "")
+        pred = pred & F.coalesce(F.expr(p), F.lit(False))
+    return old.filter(pred), old.filter(~pred)
+
+
+def _update_columns(
     keys: list[str],
-    predicates: Optional[Sequence[str]] = None,
-    update_columns: Optional[Sequence[str]] = None,
-) -> str:
-    """The literal MERGE INTO statement for catalogs with row-level
-    DML (Delta/Iceberg): rewrites only matched files instead of the
-    whole table — the preferred shape at 100 TB. Mirrors the
-    reference's DELETE-matching + INSERT-all semantics
-    (incremental.sql:161-190) as UPDATE SET * / INSERT *.
+    final_cols: list[str],
+    update: Optional[Sequence[str]],
+    exclude: Optional[Sequence[str]],
+) -> Optional[list[str]]:
+    """The columns a matched row takes from the batch under dbt's
+    merge_update_columns / merge_exclude_columns; None when neither is
+    set (the batch row replaces the whole row). Keys never change on
+    a match."""
+    if update:
+        cols = [c for c in update if c not in keys]
+        if not cols:
+            raise ValueError(
+                "merge_update_columns contains only unique_key columns "
+                "— nothing to update (keys never change on a match)."
+            )
+        return cols
+    if exclude:
+        cols = [c for c in final_cols if c not in exclude and c not in keys]
+        if not cols:
+            raise ValueError(
+                "merge_exclude_columns excludes every non-key column "
+                "— nothing to update."
+            )
+        return cols
+    return None
 
-    Divergence from the rewrite path: a batch with MULTIPLE rows per
-    unique_key inserts them all under the rewrite (reference
-    INSERT-all), but SQL MERGE raises MERGE_CARDINALITY_VIOLATION —
-    run_incremental converts that into an actionable error rather
-    than silently changing semantics."""
-    cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
-    for p in predicates or ():
-        # extra ON conjuncts — on Delta/Iceberg these prune the
-        # TARGET-side file scan (the dbt incremental_predicates
-        # contract: rows outside the predicate are never matched)
-        cond += f" AND ({_dest_pred(p, 't')})"
-    if update_columns:
-        sets = ", ".join(f"t.{c} = s.{c}" for c in update_columns)
-        update = f"UPDATE SET {sets}"
-    else:
-        update = "UPDATE SET *"
-    return (
-        f"MERGE INTO {target} t USING {batch_view} s ON {cond} "
-        f"WHEN MATCHED THEN {update} "
-        "WHEN NOT MATCHED THEN INSERT *"
+
+def _partial_update(
+    spark: SparkSession,
+    target: str,
+    scoped: DataFrame,
+    carried: Optional[DataFrame],
+    batch: DataFrame,
+    keys: list[str],
+    update_cols: list[str],
+    final_cols: list[str],
+) -> int:
+    """``merge`` with merge_update_columns/merge_exclude_columns, as
+    one staged rewrite: a matched in-scope target row takes only
+    ``update_cols`` from its batch row (UPDATE SET), a batch row that
+    matches none inserts whole (INSERT *). A target row matched by
+    more than one batch row refuses before the swap, checked on
+    count(1) observations the write fills on the scoped target scan
+    and the joined rows; duplicate batch keys that match no target
+    row all insert, as under MERGE INTO."""
+    b = batch.select(
+        *[F.col(k).alias(f"__bk_{k}") for k in keys],
+        *[F.col(c).alias(f"__bv_{c}") for c in update_cols],
     )
+    scan, joined = Observation(), Observation()
+    t = scoped.observe(scan, F.count(F.lit(1)).alias("n_t"))
+    # when(matched).otherwise(old) — NOT coalesce: a matched batch row
+    # carrying an explicit NULL must write the NULL (UPDATE SET
+    # semantics), not fall back to the old value
+    matched = F.col(f"__bk_{keys[0]}").isNotNull()
+    merged = (
+        t.join(b, [t[k] == b[f"__bk_{k}"] for k in keys], "left")
+        .observe(joined, F.count(F.lit(1)).alias("n_j"))
+        .select(*[
+            F.when(matched, F.col(f"__bv_{c}")).otherwise(F.col(c)).alias(c)
+            if c in update_cols else F.col(c)
+            for c in final_cols
+        ])
+    )
+    # anti-join against the SCOPED slice: a batch row whose key
+    # matches only an out-of-scope target row is not matched and
+    # therefore inserts
+    new_only = batch.join(
+        scoped.select(keys).distinct(), on=keys, how="left_anti"
+    ).select(*final_cols)
+    if carried is not None:
+        merged = merged.unionByName(carried.select(*final_cols))
+
+    def refuse_fan_out() -> None:
+        if _fans_out(scan, joined):
+            raise ValueError(
+                "merge_update_columns/merge_exclude_columns need at most "
+                f"one batch row per unique_key {keys} matching a target "
+                "row; dedupe the batch first."
+            )
+
+    return _staged_overwrite(
+        spark, merged.unionByName(new_only), target, check=refuse_fan_out
+    )
+
+
+# spark.sql.sources.partitionOverwriteMode is session-wide and
+# ProjectRunner runs models on several threads against one session:
+# unserialized, one insert_overwrite restores another's DYNAMIC (which
+# then leaks into later INSERT OVERWRITEs) or resets STATIC under
+# another's write. Writer options do not reach these V1 tables, so the
+# flip, the write and the restore hold one lock.
+_OVERWRITE_MODE_LOCK = threading.Lock()
 
 
 def run_incremental(
@@ -304,19 +384,33 @@ def run_incremental(
     on_schema_change: str = "ignore",
     clustered_by: str | Sequence[str] | None = None,
     buckets: Optional[int] = None,
-    use_sql_merge: bool = False,
     incremental_predicates: Optional[Sequence[str]] = None,
     merge_update_columns: Optional[Sequence[str]] = None,
     merge_exclude_columns: Optional[Sequence[str]] = None,
     collect_stats: bool = True,
 ) -> dict:
-    """Apply one incremental batch. Returns a stats dict whose
-    ``rows`` is the row count of ``target`` after the call: the count
-    write_table observed wherever the write replaced the whole table,
-    one table count on the in-place paths (``append``,
-    ``merge(append)``, ``insert_overwrite``, ``merge(sql)``) — None
-    there under ``collect_stats=False``, whose callers loop many
-    batches and skip that scan.
+    """Apply one incremental batch in one of four ways:
+
+    - **append** — ``append``, and ``merge`` without ``unique_key``,
+      which degenerates to it (incremental.sql:120-128): the batch is
+      inserted into the table; a batch that widens the schema
+      rewrites the table once instead;
+    - **keyed replace** — ``merge`` and ``delete+insert``
+      (incremental.sql:130-190): target rows whose key is in the
+      batch — for ``delete+insert`` with ``partition_by``, whose
+      partition is — are dropped and every batch row is inserted, as
+      one staged rewrite;
+    - **partial update** — ``merge`` with ``merge_update_columns`` or
+      ``merge_exclude_columns`` (see _partial_update);
+    - **insert_overwrite** — dynamic overwrite of the batch's
+      partitions.
+
+    Returns a stats dict whose ``rows`` is the row count of ``target``
+    after the call: the count write_table observed wherever the write
+    replaced the whole table, one table count on the in-place paths
+    (``append``, ``merge(append)``, ``insert_overwrite``) — None there
+    under ``collect_stats=False``, whose callers loop many batches and
+    skip that scan.
 
     ``partition_by``/``clustered_by``/``buckets`` declare the table's
     layout when a run creates it (first run or ``full_refresh``);
@@ -327,13 +421,10 @@ def run_incremental(
 
     ``incremental_predicates`` (dbt contract) bound which TARGET rows
     are eligible for matching: rows outside every predicate are
-    carried through untouched and never join against the batch. On
-    the SQL-merge path the predicates become ON-clause conjuncts
-    (Delta/Iceberg prune target files with them — the 100 TB shape);
-    on the rewrite path out-of-scope rows bypass the anti-join's
-    exchange entirely, so only the predicate's slice shuffles. The
-    caller promises the predicates cover every row the batch could
-    match — the same promise dbt requires."""
+    carried through untouched and bypass the join's exchange, so only
+    the predicate's slice shuffles. The caller promises the
+    predicates cover every row the batch could match — the same
+    promise dbt requires."""
     keys = _normalize_keys(unique_key)
     if merge_update_columns and merge_exclude_columns:
         raise ValueError(
@@ -343,13 +434,12 @@ def run_incremental(
     # surfaced on EVERY return path: operators must learn a crash-
     # recovery event happened no matter which strategy then ran
     extra = {"recovered_swap": recovered} if recovered else {}
-    exists = spark.catalog.tableExists(target)
 
     def _in_place(strategy_name: str, **more) -> dict:
         rows = spark.table(target).count() if collect_stats else None
         return {"strategy": strategy_name, "rows": rows, **more, **extra}
 
-    if not exists or full_refresh:
+    if not spark.catalog.tableExists(target) or full_refresh:
         # incremental.sql:73-94 — first run / --full-refresh ⇒ CTAS
         n = write_table(
             spark, new_rows, target, "overwrite", partition_by, clustered_by, buckets
@@ -357,214 +447,78 @@ def run_incremental(
         return {"strategy": "create", "rows": n, **extra}
 
     old = spark.table(target)
+    target_cols = old.columns
     old, new_aligned, final_cols = _apply_schema_change(
         spark, target, old, new_rows, on_schema_change
     )
-    schema_widened = list(final_cols) != list(spark.table(target).columns)
-    if schema_widened and strategy == "append":
-        # append can't widen in place on plain parquet — rewrite once
-        n = _staged_overwrite(spark, old.unionByName(new_aligned), target)
-        return {
-            "strategy": "append(schema-change rewrite)",
-            "rows": n,
-            "schema_change": on_schema_change,
-            **extra,
-        }
 
-    if strategy == "append":
-        # incremental.sql:120-128
+    if strategy == "append" or (strategy == "merge" and not keys):
+        if final_cols != target_cols:
+            # plain parquet cannot widen a table in place — rewrite once
+            n = _staged_overwrite(spark, old.unionByName(new_aligned), target)
+            return {
+                "strategy": "append(schema-change rewrite)",
+                "rows": n,
+                "schema_change": on_schema_change,
+                **extra,
+            }
         n = write_table(spark, new_aligned, target, "append")
-        return _in_place("append", rows_appended=n)
-
-    def _scope_split(frame: DataFrame):
-        """(in_scope, out_of_scope) under incremental_predicates —
-        out-of-scope rows (predicate false OR NULL) skip the join."""
-        if not incremental_predicates:
-            return frame, None
-        for p in incremental_predicates:
-            if "DBT_INTERNAL_SOURCE" in p:
-                raise ValueError(
-                    "incremental_predicates referencing "
-                    "DBT_INTERNAL_SOURCE need use_sql_merge=True (the "
-                    "rewrite path evaluates predicates on the TARGET "
-                    "only; a batch-side predicate would silently bind "
-                    "to target columns)."
-                )
-        pred = F.lit(True)
-        for p in incremental_predicates:
-            pred = pred & F.coalesce(F.expr(_dest_pred(p)), F.lit(False))
-        return frame.filter(pred), frame.filter(~pred)
+        label = "append" if strategy == "append" else "merge(append)"
+        return _in_place(label, rows_appended=n)
 
     if strategy == "insert_overwrite":
         # dbt-spark's at-scale strategy for partitioned tables:
         # dynamic partition overwrite rewrites ONLY the partitions
         # present in the batch — untouched partitions' files are never
-        # read or rewritten (delete+insert's staged rewrite touches
-        # the whole table; at 100 TB with daily partitions that is the
-        # difference between rewriting one day and rewriting three
-        # years). No unique_key involved: the partition IS the
-        # replacement unit, per the dbt contract.
+        # read or rewritten (a keyed replace rewrites the whole table;
+        # at 100 TB with daily partitions that is the difference
+        # between rewriting one day and rewriting three years). No
+        # unique_key involved: the partition IS the replacement unit,
+        # per the dbt contract.
         if not partition_by:
             raise ValueError("insert_overwrite needs partition_by")
-        prev_mode = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "STATIC"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-        try:
-            # insertInto is positional — align to the target's column
-            # order (partition columns last in Spark's layout)
-            cols = spark.table(target).columns
-            new_aligned.select(*cols).write.mode("overwrite").insertInto(target)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+        mode_key = "spark.sql.sources.partitionOverwriteMode"
+        with _OVERWRITE_MODE_LOCK:
+            prev_mode = spark.conf.get(mode_key, "STATIC")
+            spark.conf.set(mode_key, "DYNAMIC")
+            try:
+                # insertInto is positional — align to the target's
+                # column order (partition columns last in Spark's layout)
+                new_aligned.select(*target_cols).write.mode(
+                    "overwrite").insertInto(target)
+            finally:
+                spark.conf.set(mode_key, prev_mode)
         return _in_place("insert_overwrite")
 
-    if strategy == "delete+insert":
-        # incremental.sql:130-159: with partition_by, delete whole
-        # partitions present in the batch; else delete by key tuple
-        scoped, carried = _scope_split(old)
-        if partition_by:
-            # distinct partition values are tiny by construction —
-            # broadcasting is always safe here
-            parts = new_aligned.select(partition_by).distinct()
-            kept = scoped.join(F.broadcast(parts), on=partition_by, how="left_anti")
-        elif keys:
-            # no forced broadcast of the key set: a backfill-sized
-            # batch force-broadcast past autoBroadcastJoinThreshold
-            # must be collected to the driver (OOM). AQE's runtime
-            # join selection broadcasts small batches anyway and
-            # shuffle-joins big ones.
-            kept = scoped.join(
-                new_aligned.select(keys).distinct(), on=keys, how="left_anti"
-            )
-        else:
-            raise ValueError("delete+insert needs unique_key or partition_by")
-        if carried is not None:
-            kept = kept.unionByName(carried)
-        n = _staged_overwrite(spark, kept.unionByName(new_aligned), target)
-        return {"strategy": "delete+insert", "rows": n, **extra}
-
-    update_cols: Optional[list[str]] = None
-    if merge_update_columns:
-        update_cols = [c for c in merge_update_columns if c not in keys]
-        if not update_cols:
-            raise ValueError(
-                "merge_update_columns contains only unique_key columns "
-                "— nothing to update (keys never change on a match)."
-            )
-    elif merge_exclude_columns:
-        excl = set(merge_exclude_columns)
-        update_cols = [
-            c for c in final_cols if c not in excl and c not in keys
-        ]
-        if not update_cols:
-            raise ValueError(
-                "merge_exclude_columns excludes every non-key column "
-                "— nothing to update."
-            )
-
+    if strategy not in ("merge", "delete+insert"):
+        raise ValueError(f"unknown incremental strategy: {strategy}")
+    scoped, carried = _scope_split(old, incremental_predicates)
     if strategy == "merge":
-        # incremental.sql:161-190: DELETE WHERE EXISTS(key match) then
-        # INSERT ALL tmp rows ⇒ old rows not in batch ∪ batch
-        if use_sql_merge and keys:
-            # row-level DML path (Delta/Iceberg): only matched files
-            # rewrite. Spark's built-in parquet tables lack MERGE —
-            # surface that as an actionable error, never a silent
-            # fallback that hides a misconfigured catalog.
-            view = "__icebreaker_merge_batch"
-            new_aligned.createOrReplaceTempView(view)
-            try:
-                spark.sql(merge_into_sql(target, view, keys, incremental_predicates, update_cols))
-            except Exception as e:
-                # classify by Spark's error condition, NOT substring-
-                # matching "MERGE" (every failure of a MERGE statement
-                # mentions MERGE in its plan dump — a typo'd column
-                # would be misreported as a catalog limitation)
-                cond = e.getCondition() if hasattr(e, "getCondition") else ""
-                cond = cond or ""
-                if cond.startswith("UNSUPPORTED_FEATURE"):
-                    raise ValueError(
-                        f"use_sql_merge=True but {target}'s catalog does "
-                        "not support MERGE INTO (Spark built-in parquet "
-                        "tables have no row-level DML). Use the default "
-                        "rewrite path, or store the table in a Delta/"
-                        "Iceberg catalog."
-                    ) from e
-                if cond.startswith("AMBIGUOUS_REFERENCE"):
-                    raise ValueError(
-                        "MERGE predicate references an unqualified "
-                        "column that exists on both sides; qualify "
-                        "incremental_predicates with DBT_INTERNAL_DEST "
-                        "(target) or DBT_INTERNAL_SOURCE (batch)."
-                    ) from e
-                if "MERGE_CARDINALITY_VIOLATION" in cond:
-                    raise ValueError(
-                        "SQL MERGE requires at most one batch row per "
-                        f"unique_key, but this batch has duplicates "
-                        f"(keys: {keys}). Dedupe the batch first, or use "
-                        "the default rewrite path, which keeps ALL batch "
-                        "rows (reference DELETE+INSERT-all semantics)."
-                    ) from e
-                raise
-            finally:
-                spark.catalog.dropTempView(view)
-            return _in_place("merge(sql)")
-        if not keys:
-            # reference merge without unique_key degenerates to append
-            n = write_table(spark, new_aligned, target, "append")
-            return _in_place("merge(append)", rows_appended=n)
-        # AQE picks broadcast vs shuffle from the batch's runtime size
-        # (see delete+insert note — a forced hint OOMs on backfills)
-        scoped, carried = _scope_split(old)
+        update_cols = _update_columns(
+            keys, final_cols, merge_update_columns, merge_exclude_columns)
         if update_cols is not None:
-            # partial update: matched rows take only update_cols from
-            # the batch; a batch with duplicate keys would fan the
-            # join out — same cardinality contract as SQL MERGE
-            if new_aligned.select(keys).distinct().count() != new_aligned.count():
-                raise ValueError(
-                    "merge_update_columns/merge_exclude_columns need "
-                    f"at most one batch row per unique_key {keys}; "
-                    "dedupe the batch first."
-                )
-            b = new_aligned.select(
-                *[F.col(k).alias(f"__bk_{k}") for k in keys],
-                *[F.col(c).alias(f"__bv_{c}") for c in update_cols],
-            )
-            join_cond = None
-            for k in keys:
-                c = scoped[k] == b[f"__bk_{k}"]
-                join_cond = c if join_cond is None else (join_cond & c)
-            # when(matched).otherwise(old) — NOT coalesce: a matched
-            # batch row carrying an explicit NULL must write the NULL
-            # (UPDATE SET semantics), not fall back to the old value
-            matched = F.col(f"__bk_{keys[0]}").isNotNull()
-            merged = scoped.join(b, join_cond, "left").select(
-                *[
-                    F.when(matched, F.col(f"__bv_{c}"))
-                    .otherwise(scoped[c]).alias(c)
-                    if c in update_cols
-                    else scoped[c].alias(c)
-                    for c in final_cols
-                ]
-            )
-            # anti-join against the SCOPED slice: a batch row whose
-            # key matches only an out-of-scope target row is NOT
-            # matched (same as the SQL merge's predicate-qualified ON)
-            # and therefore INSERTs
-            new_only = new_aligned.join(
-                scoped.select(keys).distinct(), on=keys, how="left_anti"
-            ).select(*final_cols)
-            kept = merged
-            if carried is not None:
-                kept = kept.unionByName(carried.select(*final_cols))
-            n = _staged_overwrite(spark, kept.unionByName(new_only), target)
+            n = _partial_update(spark, target, scoped, carried, new_aligned,
+                                keys, update_cols, final_cols)
             return {"strategy": "merge(partial-update)", "rows": n, **extra}
+    # keyed replace (incremental.sql:130-190): DELETE the target rows
+    # whose key — or partition — the batch holds, then INSERT every
+    # batch row ⇒ old rows not in the batch ∪ batch
+    if strategy == "delete+insert" and partition_by:
+        # distinct partition values are tiny by construction —
+        # broadcasting is always safe here
+        parts = new_aligned.select(partition_by).distinct()
+        kept = scoped.join(F.broadcast(parts), on=partition_by, how="left_anti")
+    elif keys:
+        # no forced broadcast of the key set: a backfill-sized batch
+        # force-broadcast past autoBroadcastJoinThreshold must be
+        # collected to the driver (OOM). AQE's runtime join selection
+        # broadcasts small batches anyway and shuffle-joins big ones.
         kept = scoped.join(
             new_aligned.select(keys).distinct(), on=keys, how="left_anti"
         )
-        if carried is not None:
-            kept = kept.unionByName(carried)
-        n = _staged_overwrite(spark, kept.unionByName(new_aligned), target)
-        return {"strategy": "merge", "rows": n, **extra}
-
-    raise ValueError(f"unknown incremental strategy: {strategy}")
+    else:
+        raise ValueError("delete+insert needs unique_key or partition_by")
+    if carried is not None:
+        kept = kept.unionByName(carried)
+    n = _staged_overwrite(spark, kept.unionByName(new_aligned), target)
+    return {"strategy": strategy, "rows": n, **extra}

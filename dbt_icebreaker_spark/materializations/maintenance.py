@@ -19,27 +19,12 @@ payload-not-rows principle as multimodal.repartition_for_payloads.
 from __future__ import annotations
 
 import os
-from typing import Optional, Sequence
+from typing import Sequence
 
 from pyspark.sql import SparkSession
 
-from .ddl import table_layout
+from .ddl import table_layout, table_location
 from .incremental import _staged_overwrite
-
-
-def table_location(spark: SparkSession, target: str) -> Optional[str]:
-    """Filesystem path of a cataloged table (None for non-path
-    tables)."""
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {target}").collect()
-    except Exception:
-        return None
-    for r in rows:
-        if (r.col_name or "").strip() == "Location":
-            loc = r.data_type
-            # file:/p, file:///p — os.path tolerates repeated slashes
-            return loc[5:] if loc.startswith("file:") else loc
-    return None
 
 
 def _scan_files(path: str) -> tuple[int, int]:
@@ -137,7 +122,7 @@ def compact_table(
             "bytes": total_bytes,
         }
     df = spark.table(target)
-    parts, _, buckets = table_layout(spark, target)
+    parts, _, buckets, _ = table_layout(spark, target)
     if buckets:
         # bucket spec dictates layout; the staged write re-applies it
         compacted = df

@@ -651,7 +651,7 @@ def _general_merge_plan(
     from pyspark.sql import Observation, functions as F
 
     from .ddl import write_table
-    from .incremental import _staged_overwrite
+    from .incremental import _fans_out, _staged_overwrite
 
     if spec.key_pairs:
         on = " AND ".join(f"{ta}.{tk} = {sa}.{sk}" for tk, sk in spec.key_pairs)
@@ -763,12 +763,8 @@ def _general_merge_plan(
         # matches are counted per TARGET ROW under the FULL ON (extras
         # included): several source rows per key of which at most one
         # survives a non-equi conjunct — only-update-if-newer over
-        # late duplicates — merge fine. An empty join output holds no
-        # duplicate; and with an empty target AQE prunes the join,
-        # taking the target-scan observation with it, so n_t is read
-        # only past that case.
-        n_j = obs.get["n_j"]
-        if n_j and n_j > tobs.get["n_t"]:
+        # late duplicates — merge fine
+        if _fans_out(tobs, obs):
             raise TranspileError(
                 "MERGE INTO: nondeterministic merge — a target row's "
                 "join key matches more than one source row. "
@@ -1137,8 +1133,8 @@ def run_alter_columns(spark: SparkSession, spec: AlterColumnsSpec) -> dict:
                 )
     if not spec.renames and not drops:
         return {"table": spec.target, "rows_affected": 0}  # IF EXISTS no-op
-    parts, bucket_cols, _ = table_layout(spark, spec.target)
-    layout_cols = {c.lower() for c in parts + bucket_cols}
+    parts, bucket_cols, _, sort_cols = table_layout(spark, spec.target)
+    layout_cols = {c.lower() for c in parts + bucket_cols + sort_cols}
     hit = [c for c in [o for o, _ in spec.renames] + drops
            if c.lower() in layout_cols]
     if hit:

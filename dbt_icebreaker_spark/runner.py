@@ -74,9 +74,10 @@ def _retry_prone(stmt: str) -> bool:
     """Cheap text gate for statements that MIGHT take the
     analyze-fail-rewrite path: string subscripts (``expr[i]``),
     FLATTEN/explode over JSON-text columns, TO_JSON over already-JSON
-    values. Only these shapes pay the pre-flight analysis probe; a
-    false positive costs one extra (quiet) analysis pass, a false
-    negative falls back to the in-session retry loop."""
+    values. Only these shapes pay the pre-flight analysis probe, and
+    only the probe rewrites them: a false positive costs one extra
+    (quiet) analysis pass, a false negative raises the analyzer's
+    error unrewritten."""
     import re as _re
 
     return (
@@ -103,7 +104,7 @@ def _probe_analyze(spark, stmt: str):
     analyzes clean, ``(False, exc)`` with the converted
     AnalysisException on failure, and ``(True, None)`` when the py4j
     plumbing is unavailable (test doubles) — the caller then just runs
-    the statement for real and the in-session retry loop covers it."""
+    the statement for real."""
     try:
         jss = spark._jsparkSession
         probe = jss.cloneSession()
@@ -2034,32 +2035,7 @@ class IcebreakerEngine:
                     with _quiet_query_context_logs():
                         result = self.spark.sql(stmt)
                 except Exception as e:
-                    # FLATTEN over a JSON-TEXT column: the transpiler
-                    # wraps statically-known JSON text (T37) but a
-                    # plain column ref is assumed a native array — when
-                    # the analyzer proves it a STRING, retry with the
-                    # from_json wrap (the same contract T37 uses), one
-                    # offending site per pass so native-array FLATTENs
-                    # in the same statement stay unwrapped
-                    attempt, err, retried = stmt, e, None
-                    for _ in range(8):
-                        retry_sql = (_wrap_string_explode(attempt, err)
-                                     or _wrap_string_subscript(
-                                         attempt, err)
-                                     or _unwrap_string_tojson(
-                                         attempt, err))
-                        if retry_sql is None:
-                            break
-                        try:
-                            with _quiet_query_context_logs():
-                                retried = self.spark.sql(retry_sql)
-                            break
-                        except Exception as e2:
-                            attempt, err = retry_sql, e2
-                    if retried is None:
-                        raise_classified(e, stmt)  # the ORIGINAL error
-                    result = retried
-                    continue
+                    raise_classified(e, stmt)
         return _coerce_day_intervals(result)
 
     def _maybe_sample(self, df: DataFrame, sql: str) -> DataFrame:
@@ -2084,7 +2060,6 @@ class IcebreakerEngine:
         on_schema_change: str = "ignore",
         clustered_by: str | Sequence[str] | None = None,
         buckets: Optional[int] = None,
-        use_sql_merge: bool = False,
         incremental_predicates: Optional[Sequence[str]] = None,
         merge_update_columns: Optional[Sequence[str]] = None,
         merge_exclude_columns: Optional[Sequence[str]] = None,
@@ -2136,7 +2111,6 @@ class IcebreakerEngine:
                         merge_exclude_columns=merge_exclude_columns,
                         clustered_by=clustered_by,
                         buckets=buckets,
-                        use_sql_merge=use_sql_merge,
                     )
                     rows = details["rows"]
                 else:

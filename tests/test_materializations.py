@@ -392,6 +392,20 @@ class TestOnSchemaChange:
         assert t.count() == 2
         assert "schema-change" in res.details["strategy"]
 
+    def test_keyless_merge_with_widen_rewrites(self, spark, engine):
+        """merge without unique_key is an append, widening included."""
+        self._fresh(spark, engine, "osc_nokey", "SELECT 1 AS k, 'a' AS v")
+        res = engine.run_model(
+            "osc_nokey", "SELECT 2 AS k, 'b' AS v, 'NEW' AS extra",
+            "incremental", unique_key=None, incremental_strategy="merge",
+            on_schema_change="append_new_columns",
+        )
+        t = spark.table(f"{engine.effective_schema}.osc_nokey")
+        assert t.columns == ["k", "v", "extra"]
+        assert {r.k: (r.v, r.extra) for r in t.collect()} == {
+            1: ("a", None), 2: ("b", "NEW")}
+        assert res.details["strategy"] == "append(schema-change rewrite)"
+
 
 class TestStagedOverwriteSafety:
     """Regression tests for the staged-swap rewrite path: partition
@@ -579,53 +593,7 @@ class TestSwapCrashRecovery:
         assert not spark.catalog.tableExists(f"{tgt}__icebreaker_old")
 
 
-class TestSqlMerge:
-    def test_merge_into_statement_shape(self):
-        from dbt_icebreaker_spark.materializations.incremental import merge_into_sql
-
-        sql = merge_into_sql("db.tgt", "batch", ["id", "ts"])
-        assert sql == (
-            "MERGE INTO db.tgt t USING batch s ON t.id = s.id AND t.ts = s.ts "
-            "WHEN MATCHED THEN UPDATE SET * "
-            "WHEN NOT MATCHED THEN INSERT *"
-        )
-
-    def test_parquet_catalog_raises_actionable(self, spark, engine):
-        from dbt_icebreaker_spark.materializations.incremental import run_incremental
-
-        sch = engine.effective_schema
-        spark.sql(f"DROP TABLE IF EXISTS {sch}.sqlmerge_t")
-        base = spark.createDataFrame([(1, "a")], ["k", "v"])
-        run_incremental(spark, f"{sch}.sqlmerge_t", base, unique_key="k")
-        batch = spark.createDataFrame([(1, "b")], ["k", "v"])
-        with pytest.raises(ValueError, match="MERGE INTO"):
-            run_incremental(
-                spark, f"{sch}.sqlmerge_t", batch, unique_key="k",
-                use_sql_merge=True,
-            )
-
-
 class TestSqlMergeClassifier:
-    def test_unresolved_column_not_misreported(self, spark, engine):
-        """A typo'd column inside MERGE must surface as the real
-        analysis error, not 'catalog does not support MERGE INTO'."""
-        from dbt_icebreaker_spark.materializations.incremental import run_incremental
-
-        sch = engine.effective_schema
-        spark.sql(f"DROP TABLE IF EXISTS {sch}.smc_t")
-        run_incremental(
-            spark, f"{sch}.smc_t",
-            spark.createDataFrame([(1, "a")], ["k", "v"]), unique_key="k",
-        )
-        bad = spark.createDataFrame([(1, "b")], ["kk", "v"])
-        with pytest.raises(Exception) as ei:
-            run_incremental(
-                spark, f"{sch}.smc_t", bad, unique_key="kk",
-                use_sql_merge=True, on_schema_change="append_new_columns",
-            )
-        assert "does not support MERGE INTO" not in str(ei.value) or \
-            "UNSUPPORTED_FEATURE" in str(getattr(ei.value, "__cause__", ""))
-
     def test_recovered_swap_surfaced_on_merge_path(self, spark, engine):
         sch = engine.effective_schema
         tgt = f"{sch}.recstat"
@@ -696,14 +664,6 @@ class TestIncrementalPredicates:
         assert rows == [(1, "a"), (2, "a"), (3, "b")]
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-    def test_merge_sql_predicate_in_on_clause(self):
-        from dbt_icebreaker_spark.materializations.incremental import merge_into_sql
-        sql = merge_into_sql(
-            "db.t", "batch", ["k"],
-            predicates=["DBT_INTERNAL_DEST.ts > '2024-01-01'"],
-        )
-        assert "AND (t.ts > '2024-01-01')" in sql
-
 
 class TestMergePartialUpdate:
     """dbt merge_update_columns / merge_exclude_columns: matched rows
@@ -752,18 +712,50 @@ class TestMergePartialUpdate:
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
     def test_duplicate_batch_keys_refused(self, spark, engine):
+        """A target row matched by two batch rows refuses on the write,
+        before the swap: the target is unchanged, no staging left."""
         import uuid, pytest as _p
         t = f"{engine.schema}.mdup_{uuid.uuid4().hex[:6]}"
         from dbt_icebreaker_spark.materializations.incremental import run_incremental
-        base = spark.createDataFrame([(1, "a")], "k long, v string")
+        base = spark.createDataFrame([(1, "a"), (2, "a")], "k long, v string")
         run_incremental(spark, t, base, strategy="merge", unique_key="k")
-        batch = spark.createDataFrame([(1, "b"), (1, "c")], "k long, v string")
+        batch = spark.createDataFrame(
+            [(1, "b"), (1, "c"), (3, "d")], "k long, v string")
         with _p.raises(ValueError, match="one batch row per unique_key"):
             run_incremental(
                 spark, t, batch, strategy="merge", unique_key="k",
                 merge_update_columns=["v"],
             )
+        assert sorted(tuple(r) for r in spark.table(t).collect()) == [
+            (1, "a"), (2, "a")]
+        assert not spark.catalog.tableExists(f"{t}__icebreaker_stage")
         spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+    def test_unmatched_duplicate_keys_insert_like_merge_into(self, spark, engine):
+        """Duplicate batch keys that match no target row are no
+        cardinality violation: both rows insert, as MERGE INTO does."""
+        import uuid
+        from dbt_icebreaker_spark.materializations.incremental import run_incremental
+        t, m = (f"{engine.schema}.{p}_{uuid.uuid4().hex[:6]}"
+                for p in ("mudk", "mudk_sql"))
+        base = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
+        batch = spark.createDataFrame(
+            [(1, "b"), (7, "x"), (7, "y")], "k long, v string")
+        for name in (t, m):
+            run_incremental(spark, name, base, strategy="merge", unique_key="k")
+        run_incremental(spark, t, batch, strategy="merge", unique_key="k",
+                        merge_update_columns=["v"])
+        batch.createOrReplaceTempView("mudk_batch")
+        engine.execute(
+            f"MERGE INTO {m} t USING mudk_batch s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v "
+            "WHEN NOT MATCHED THEN INSERT *").collect()
+        got, want = (sorted(tuple(r) for r in spark.table(x).collect())
+                     for x in (t, m))
+        assert got == want == [(1, "b"), (2, "b"), (7, "x"), (7, "y")]
+        spark.catalog.dropTempView("mudk_batch")
+        for name in (t, m):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
     def test_mutually_exclusive(self, spark, engine):
         import pytest as _p
@@ -806,7 +798,7 @@ class TestPredicatePartialUpdateInteraction:
         from dbt_icebreaker_spark.materializations.incremental import run_incremental
         base = spark.createDataFrame([(1, "a")], "k long, v string")
         run_incremental(spark, t, base, strategy="merge", unique_key="k")
-        with _p.raises(ValueError, match="DBT_INTERNAL_SOURCE.*use_sql_merge"):
+        with _p.raises(ValueError, match="DBT_INTERNAL_SOURCE.*TARGET rows only"):
             run_incremental(
                 spark, t, base, strategy="merge", unique_key="k",
                 incremental_predicates=["DBT_INTERNAL_SOURCE.v = 'a'"],
@@ -1022,6 +1014,47 @@ class TestInsertOverwrite:
         with _pytest.raises(ValueError, match="partition_by"):
             run_incremental(spark, "iow_t.nopart", df, strategy="insert_overwrite")
 
+    def test_concurrent_runs_restore_overwrite_mode(self, spark):
+        """The session-wide partitionOverwriteMode flip is serialized:
+        concurrent runs leave the session's prior mode in place and
+        never overwrite a partition outside their batch."""
+        import threading
+
+        from dbt_icebreaker_spark.materializations.incremental import (
+            run_incremental,
+        )
+
+        key = "spark.sql.sources.partitionOverwriteMode"
+        prior = spark.conf.get(key)
+        t = "iow_t.concurrent"
+        spark.sql("CREATE DATABASE IF NOT EXISTS iow_t")
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        schema = "r int, p int"
+        run_incremental(spark, t, spark.createDataFrame(
+            [(0, p) for p in range(4)], schema),
+            strategy="insert_overwrite", partition_by="p")
+        rounds, errors = 6, []
+
+        def overwrite(p):
+            try:
+                for r in range(1, rounds + 1):
+                    run_incremental(
+                        spark, t, spark.createDataFrame([(r, p)], schema),
+                        strategy="insert_overwrite", partition_by="p",
+                        collect_stats=False)
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+        threads = [threading.Thread(target=overwrite, args=(p,)) for p in (0, 1)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+        assert errors == []
+        assert spark.conf.get(key) == prior
+        assert sorted((r.p, r.r) for r in spark.table(t).collect()) == [
+            (0, rounds), (1, rounds), (2, 0), (3, 0)]
+
 
 class TestMicrobatch:
     """Microbatch incremental (dbt 1.9 contract): event-time windows
@@ -1106,7 +1139,7 @@ class TestCompactionLayoutFromCatalog:
         df = read_parquet(spark, "/root/testdata/sf0.001/orders.parquet")
         df.withColumn("status", F.col("o_orderstatus")).repartition(20).write \
             .partitionBy("status").saveAsTable("compact_t.autolayout")
-        parts, bcols, nb = table_layout(spark, "compact_t.autolayout")
+        parts, bcols, nb, _ = table_layout(spark, "compact_t.autolayout")
         assert parts == ["status"]
         stats = compact_table(spark, "compact_t.autolayout", target_file_mb=128)
         assert stats["action"] == "compacted"
@@ -1117,8 +1150,11 @@ class TestCompactionLayoutFromCatalog:
 
 # layout → (its CREATE TABLE clause, what ddl.table_layout reads back)
 _LAYOUTS = {
-    "partitioned": ("PARTITIONED BY (g)", (["g"], [], None)),
-    "bucketed": ("CLUSTERED BY (k) INTO 4 BUCKETS", ([], ["k"], 4)),
+    "partitioned": ("PARTITIONED BY (g)", (["g"], [], None, [])),
+    # declared without SORTED BY: a rewrite must not add one
+    "bucketed": ("CLUSTERED BY (k) INTO 4 BUCKETS", ([], ["k"], 4, [])),
+    "bucketed_sorted": ("CLUSTERED BY (k) SORTED BY (k) INTO 4 BUCKETS",
+                        ([], ["k"], 4, ["k"])),
 }
 _BASE = {k: ("a" if k % 2 else "b", float(k)) for k in range(20)}
 _SRC = {k: ("a" if k % 2 else "b", float(k * 10)) for k in range(15, 25)}
@@ -1213,7 +1249,7 @@ class TestLayoutKept:
         for _ in range(2):  # the second run appends to the partitioned table
             engine.run_model(name, sql + " WHERE event_id < 50", "incremental",
                              partition_by="g", **kw)
-        assert table_layout(spark, t) == (["g"], [], None)
+        assert table_layout(spark, t) == (["g"], [], None, [])
         assert spark.table(t).count() == 2 * spark.table("events").filter(
             "event_id < 50").count()
 
@@ -1226,16 +1262,16 @@ class TestLayoutKept:
         kw = dict(unique_key="k", incremental_strategy="merge")
         engine.run_model("lay_refresh", sql.format(50), "incremental",
                          partition_by="g", full_refresh=True, **kw)
-        assert table_layout(spark, t) == (["g"], [], None)
+        assert table_layout(spark, t) == (["g"], [], None, [])
         # a merge batch whose config no longer partitions keeps the table's
         engine.run_model("lay_refresh", sql.format(80), "incremental", **kw)
         n = spark.table("events").filter("event_id < 80").count()
-        assert table_layout(spark, t) == (["g"], [], None)
+        assert table_layout(spark, t) == (["g"], [], None, [])
         assert spark.table(t).count() == n
         # full_refresh re-declares the layout from the config
         engine.run_model("lay_refresh", sql.format(80), "incremental",
                          full_refresh=True, **kw)
-        assert table_layout(spark, t) == ([], [], None)
+        assert table_layout(spark, t) == ([], [], None, [])
         assert spark.table(t).count() == n
 
     @pytest.mark.parametrize("layout,sql", [
@@ -1253,6 +1289,29 @@ class TestLayoutKept:
         assert (table_layout(spark, t), self._rows(spark, t)) == before
         assert self._no_swap_debris(spark, t)
 
+    def test_table_location_reads_catalog(self, spark, engine):
+        import os
+
+        from dbt_icebreaker_spark.materializations.ddl import table_location
+
+        t = self._make(spark, "lay_loc", "partitioned")
+        spark.sql("CREATE OR REPLACE VIEW mat_test.lay_loc_v AS SELECT 1 AS a")
+        sc = spark.sparkContext
+        sc.setJobGroup("table-location", "table_location")
+        try:
+            locs = [table_location(spark, x) for x in (
+                t, "spark_catalog." + t, "mat_test.lay_loc_v",
+                "mat_test.lay_missing", "nodb.t")]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup("table-location") == []
+        assert locs[0] == locs[1] and locs[0].endswith("lay_loc")
+        assert sorted(d for d in os.listdir(locs[0]) if d.startswith("g=")) == [
+            "g=a", "g=b"]
+        assert locs[2:] == [None] * 3  # a view, a missing table, a missing db
+
     def test_table_layout_launches_no_job(self, spark):
         from dbt_icebreaker_spark.materializations.ddl import table_layout
 
@@ -1268,7 +1327,7 @@ class TestLayoutKept:
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert sc.statusTracker().getJobIdsForGroup("table-layout") == []
         layouts = [want for _, want in _LAYOUTS.values()]
-        assert got == layouts + layouts[:1] + [([], [], None)] * 2
+        assert got == layouts + layouts[:1] + [([], [], None, [])] * 2
 
 
 class TestDataTests:

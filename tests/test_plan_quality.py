@@ -443,6 +443,7 @@ class TestMaterializationJobFloor:
         "merge_delete": 2, "merge_delete_insert": 3, "merge_insert": 2,
         "update_from": 2, "delete": 1, "update": 1,
         "delete_partitioned": 1, "merge_upsert_bucketed": 3,
+        "merge_partial": 3,
     }
 
     def test_jobs_per_call(self, spark, tmp_path):
@@ -499,6 +500,8 @@ class TestMaterializationJobFloor:
             "merge": inc("jf_merge", "merge", unique_key="o_orderkey"),
             "delete_insert": inc("jf_di", "delete+insert", unique_key="o_orderkey"),
             "append": inc("jf_append", "append"),
+            "merge_partial": inc("jf_mpart", "merge", unique_key="o_orderkey",
+                                 merge_update_columns=["o_totalprice"]),
             "snapshot_first": snapshot(1),
             "snapshot_update": snapshot(2),
             "merge_upsert": merge(
