@@ -34,6 +34,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from .session import driver_frame
+
 _NAME = r"\"[^\"]+\"|[\w.$]+"
 _CREATE_RE = re.compile(
     rf"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?"
@@ -86,10 +88,6 @@ def _registry(engine) -> dict:
     return engine._file_formats_registry
 
 
-def _df(engine, rows, schema) -> DataFrame:
-    return engine.spark.createDataFrame(rows, schema)
-
-
 def _parse_options(rest: str) -> tuple[str, str]:
     """Validate the option tail → (inline_text, type). Unknown keys
     refuse; quoted values keep their quotes."""
@@ -138,9 +136,10 @@ def create_format(engine, raw: str) -> DataFrame:
     reg = _registry(engine)
     if name in reg:
         if m.group("ine"):
-            return _df(engine, [(f"File format {name.upper()} already "
-                                 "exists, statement skipped.",)],
-                       "status string")
+            return driver_frame(engine.spark,
+                                [(f"File format {name.upper()} already "
+                                  "exists, statement skipped.",)],
+                                "status string")
         if not m.group("replace"):
             raise ValueError(
                 f"CREATE FILE FORMAT: {name!r} already exists — use "
@@ -149,9 +148,10 @@ def create_format(engine, raw: str) -> DataFrame:
     inline, fmt_type = _parse_options(m.group("rest") or "")
     reg[name] = FileFormat(name=name, options=inline,
                            fmt_type=fmt_type, created_on=time.time())
-    return _df(engine,
-               [(f"File format {name.upper()} successfully created.",)],
-               "status string")
+    return driver_frame(engine.spark,
+                        [(f"File format {name.upper()} successfully "
+                          "created.",)],
+                        "status string")
 
 
 def drop_format(engine, raw: str) -> DataFrame:
@@ -171,7 +171,7 @@ def drop_format(engine, raw: str) -> DataFrame:
             f"DROP FILE FORMAT: unknown format {name!r} (session "
             f"formats: {known}) — use IF EXISTS"
         )
-    return _df(engine, [(msg,)], "status string")
+    return driver_frame(engine.spark, [(msg,)], "status string")
 
 
 def show_formats(engine) -> DataFrame:
@@ -181,9 +181,9 @@ def show_formats(engine) -> DataFrame:
          time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(f.created_on)))
         for f in sorted(reg.values(), key=lambda f: f.name)
     ]
-    return _df(engine, rows,
-               "name string, type string, options string, "
-               "created_on string")
+    return driver_frame(engine.spark, rows,
+                        "name string, type string, options string, "
+                        "created_on string")
 
 
 def describe_format(engine, raw: str) -> DataFrame:
@@ -199,7 +199,7 @@ def describe_format(engine, raw: str) -> DataFrame:
         )
     f = reg[name]
     rows = [("TYPE", f.fmt_type.upper()), ("OPTIONS", f.options)]
-    return _df(engine, rows, "property string, value string")
+    return driver_frame(engine.spark, rows, "property string, value string")
 
 
 def resolve_format_name(engine, sql: str) -> str:

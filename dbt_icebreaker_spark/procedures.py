@@ -16,6 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from typing import Optional
 
+from .session import driver_frame
 from .transpiler.tokenizer import (
     COMMENT,
     STRING,
@@ -807,7 +808,7 @@ def show_procedures(engine):
          "TABLE" if p.returns_table else (p.returns_type or ""))
         for bucket in engine._procedures.values() for p in bucket
     ]
-    return engine.spark.createDataFrame(
-        rows,
+    return driver_frame(
+        engine.spark, rows,
         "name string, arity int, arguments string, returns string",
     )

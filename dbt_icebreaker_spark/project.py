@@ -213,15 +213,13 @@ class ProjectRunner:
         results: dict[str, RunResult] = {}
         failed: set[str] = set()
         for lv in sorted(levels):
-            runnable = [
-                by_name[n]
-                for n in levels[lv]
-                if not any(d in failed or d not in results and deps[n] and d in failed
-                           for d in deps[n])
-                and not (set(deps[n]) & failed)
-            ]
-            skipped = [n for n in levels[lv] if set(deps[n]) & failed]
-            for n in skipped:
+            # a level's models never depend on each other, so marking a
+            # skipped one failed cannot change its neighbours' test
+            runnable = []
+            for n in levels[lv]:
+                if failed.isdisjoint(deps[n]):
+                    runnable.append(by_name[n])
+                    continue
                 failed.add(n)
                 self.summary.record(n, by_name[n].materialization, 0.0, -1,
                                     status="skipped", reason="upstream failed")

@@ -22,11 +22,14 @@ from typing import Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .errors import raise_classified
+from . import file_formats, procedures, sequences, stages
+from .errors import IcebreakerError, raise_classified
+from .materializations import copy_into, create_table, insert_all, merge_stmt
 from .materializations.ddl import Ddl, generate_schema_name, write_table
 from .materializations.incremental import run_incremental
 from .materializations.snapshot import run_snapshot
 from .observability.telemetry import TelemetryStore, harvest_run, newest_execution_id
+from .session import driver_frame
 from .transpiler import Transpiler
 from .transpiler.core import TranspileError
 
@@ -498,18 +501,9 @@ _RUN_SEQ = itertools.count()
 
 def _affected_frame(spark: SparkSession, stats: dict) -> DataFrame:
     """The one-row ``(table, rows_affected)`` result of a DDL/DML
-    statement. Built from an Arrow table it plans as a LocalRelation,
-    so collecting it runs no Spark job; a Python-list frame plans as
-    an RDD scan and costs one job per collect."""
-    import pyarrow as pa
-
-    return spark.createDataFrame(
-        pa.table({
-            "table": pa.array([stats["table"]], pa.string()),
-            "rows_affected": pa.array([stats["rows_affected"]], pa.int64()),
-        }),
-        "table string, rows_affected long",
-    )
+    statement."""
+    return driver_frame(spark, [(stats["table"], stats["rows_affected"])],
+                        "table string, rows_affected long")
 
 
 @dataclass
@@ -689,18 +683,15 @@ class IcebreakerEngine:
             idx += 1
         return render(out).strip()
 
-    def _maybe_set_session_var(self, raw: str):
+    def _set_session_var(self, raw: str, head) -> DataFrame | None:
         """Handle ``SET name = <expr>`` / ``UNSET name`` (Snowflake
         session variables). Dotted names (spark.sql.*) fall through to
         Spark's conf SET. Returns a status DataFrame or None."""
         from .transpiler.tokenizer import WORD, next_code, render, tokenize
 
         toks = tokenize(raw)
-        i = next_code(toks, 0)
-        if i >= len(toks) or not toks[i].is_word("SET", "UNSET"):
-            return None
-        unset = toks[i].is_word("UNSET")
-        i = next_code(toks, i + 1)
+        unset = head[0] == "UNSET"
+        i = next_code(toks, next_code(toks, 0) + 1)
         if i >= len(toks) or toks[i].kind != WORD or toks[i].text.startswith("$"):
             return None
         name = toks[i].text
@@ -709,22 +700,23 @@ class IcebreakerEngine:
             if j < len(toks) and not toks[j].is_op(";"):
                 return None
             self._session_vars.pop(name.lower(), None)
-            return self.spark.createDataFrame(
-                [(name, "unset")], "variable string, value string"
-            )
+            return driver_frame(self.spark, [(name, "unset")],
+                                "variable string, value string")
         if j >= len(toks) or not toks[j].is_op("="):
             return None  # Spark conf form (dotted) or SHOW-style SET
         expr = render(toks[j + 1:]).strip().rstrip(";")
         if not expr:
             return None
-        val = self.spark.sql(
-            self.transpiler.to_spark(f"SELECT {expr}")
-        ).collect()[0][0]
+        # over a one-row VALUES, which folds to a local relation: a bare
+        # SELECT plans an RDD scan and costs a Spark job per SET
+        val = self.spark.sql(self.transpiler.to_spark(
+            f"SELECT {expr}\n"
+            "FROM (VALUES (0)) AS __icebreaker_one(__icebreaker_c)"
+        )).collect()[0][0]
         lit = self._render_literal(val)
         self._session_vars[name.lower()] = lit
-        return self.spark.createDataFrame(
-            [(name, lit)], "variable string, value string"
-        )
+        return driver_frame(self.spark, [(name, lit)],
+                            "variable string, value string")
 
     # -------------------------------------------------------- execute
     def sql_to_spark(self, sql: str) -> str:
@@ -1081,7 +1073,7 @@ class IcebreakerEngine:
             return None  # engine internals never enter retention
         return db.lower(), tbl.lower(), k
 
-    def _maybe_drop_table(self, raw: str):
+    def _drop_table(self, raw: str, head) -> DataFrame | None:
         """``DROP TABLE [IF EXISTS] name [CASCADE|RESTRICT]`` on an
         existing managed/external table → rename into the hidden
         retention namespace (metadata-only) + ledger entry, so UNDROP
@@ -1091,10 +1083,9 @@ class IcebreakerEngine:
         from .transpiler.tokenizer import next_code, tokenize
 
         toks = tokenize(raw)
-        i = next_code(toks, 0)
-        if i >= len(toks) or not toks[i].is_word("DROP"):
-            return None
-        j = next_code(toks, i + 1)
+        # the token, not the head: DROP MATERIALIZED VIEW arrives here
+        # rewritten to DROP TABLE
+        j = next_code(toks, next_code(toks, 0) + 1)
         if j >= len(toks) or not toks[j].is_word("TABLE"):
             return None
         k = next_code(toks, j + 1)
@@ -1142,14 +1133,12 @@ class IcebreakerEngine:
                     f"DROP TABLE IF EXISTS `{odb}`.`{otrash}`")
             if not stack:
                 self._drop_ledger.pop(old_key, None)
-        return self.spark.createDataFrame(
-            [(key, "dropped (retained for UNDROP TABLE; retention is "
-              f"engine-session scoped, last {self._drop_retention} "
-              "drops)")],
-            "table string, status string",
-        )
+        return _status_frame(
+            self.spark, key, "dropped (retained for UNDROP TABLE; "
+            "retention is engine-session scoped, last "
+            f"{self._drop_retention} drops)", "table")
 
-    def _maybe_undrop(self, raw: str):
+    def _undrop(self, raw: str, head) -> DataFrame:
         """``UNDROP TABLE name`` → restore the most recently dropped
         version from the retention ledger (Snowflake semantics: fails
         if a live table of that name exists; LIFO across repeated
@@ -1159,10 +1148,7 @@ class IcebreakerEngine:
         from .transpiler.tokenizer import next_code, tokenize
 
         toks = tokenize(raw)
-        i = next_code(toks, 0)
-        if i >= len(toks) or not toks[i].is_word("UNDROP"):
-            return None
-        j = next_code(toks, i + 1)
+        j = next_code(toks, next_code(toks, 0) + 1)
         if j >= len(toks) or not toks[j].is_word(
             "TABLE", "SCHEMA", "DATABASE"
         ):
@@ -1228,9 +1214,7 @@ class IcebreakerEngine:
         self.spark.sql(
             f"ALTER TABLE `{tdb}`.`{trash}` RENAME TO `{db}`.`{tbl}`"
         )
-        return self.spark.createDataFrame(
-            [(key, "restored")], "table string, status string"
-        )
+        return _status_frame(self.spark, key, "restored", "table")
 
     def _describe_result(self, raw: str) -> DataFrame:
         """``DESC[RIBE] RESULT '<qid>' | LAST_QUERY_ID([n])`` → the
@@ -1257,786 +1241,134 @@ class IcebreakerEngine:
                 f"DESCRIBE RESULT: unknown query id {qid!r} (ids are "
                 "engine-session scoped; use LAST_QUERY_ID([n]))"
             )
-        return self.spark.createDataFrame(
-            [(f.name, f.dataType.simpleString(),
-              "Y" if f.nullable else "N")
+        return driver_frame(
+            self.spark,
+            [(f.name, f.dataType.simpleString(), "Y" if f.nullable else "N")
              for f in match[0].schema.fields],
             "name string, type string, `null?` string",
         )
 
     def _execute_one(self, raw: str) -> DataFrame | None:
-        """Dispatch ONE statement (already session-var substituted)."""
-        from .materializations.copy_into import parse_copy_into, run_copy_into
-        from .materializations.merge_stmt import (
-            parse_alter_columns,
-            parse_delete,
-            parse_merge,
-            parse_update,
-            run_alter_columns,
-            run_delete_statement,
-            run_merge_statement,
-            run_update_statement,
-        )
+        """Run ONE statement (already session-var substituted).
 
-        if "MATERIALIZED" in raw.upper():
-            # CREATE [OR REPLACE] MATERIALIZED VIEW → TABLE before the
-            # CORT/table dispatch below, so the REPLACE form rides the
-            # staged swap (the transpiler PIPELINE also carries this
-            # transform for bare-transpiler users; here it must run
-            # BEFORE parse_create_or_replace_table sees the text)
-            from .transpiler.tokenizer import render as _rd
-            from .transpiler.tokenizer import tokenize as _tk
-            from .transpiler.transforms import (
-                rewrite_create_view_modifiers,
-                rewrite_materialized_view,
+        The statement's head words pick its handlers from `_HANDLERS`;
+        the first that returns a frame answers. A statement none of
+        them takes, and every head with no entry (SELECT, WITH, VALUES,
+        CREATE VIEW, EXPLAIN, …), takes the transpile path
+        (`_run_query`) without meeting a statement parser. Failures
+        are classified here, once: engine errors, refusals and
+        ValueErrors pass unchanged — a nested ``execute`` (CALL, INSERT
+        ALL, CREATE TABLE AS) has already classified its own."""
+        head = _statement_head(raw)
+        try:
+            if head[0] in ("CREATE", "DROP") and "MATERIALIZED" in head:
+                # [CREATE OR REPLACE | DROP] MATERIALIZED VIEW → TABLE
+                # before the handlers, so the REPLACE form rides the
+                # staged swap and DROP the UNDROP retention (the
+                # transpiler PIPELINE also carries this transform for
+                # bare-transpiler users)
+                from .transpiler.tokenizer import render, tokenize
+                from .transpiler.transforms import (
+                    rewrite_create_view_modifiers,
+                    rewrite_materialized_view,
+                )
+
+                raw = render(rewrite_materialized_view(
+                    rewrite_create_view_modifiers(tokenize(raw))))
+            if head[0] in ("WITH", "SELECT", "INSERT", "CREATE", "MERGE") \
+                    and _STAGE_FROM.search(raw):
+                # staged-file queries (SELECT $1 … FROM @stage, also
+                # INSERT…SELECT / CTAS / MERGE USING over staged files):
+                # the stage ref becomes a temp view over the files
+                raw = stages.rewrite_select_from_stage(self, raw) or raw
+            for handler in _HANDLERS.get(head[0], ()):
+                result = handler(self, raw, head)
+                if result is not None:
+                    break
+            else:
+                result = self._run_query(raw)
+        except (IcebreakerError, TranspileError, ValueError):
+            raise
+        except Exception as e:
+            raise_classified(e, raw)
+        return _coerce_day_intervals(result)
+
+    def _run_query(self, raw: str) -> DataFrame | None:
+        """The transpile path, after the resolvers that need the live
+        session: MATCH_RECOGNIZE, dynamic PIVOT and time travel."""
+        if "MATCH_RECOGNIZE" in raw.upper():
+            # no Spark SQL clause exists — parse the spec and run the
+            # applyInPandas pattern automaton
+            from .transpiler.match_recognize_sql import (
+                parse_match_recognize,
+                resolve_nested_match_recognize,
+                run_match_recognize_statement,
             )
 
-            raw = _rd(rewrite_materialized_view(
-                rewrite_create_view_modifiers(_tk(raw))))
-        result: DataFrame | None = None
-        # single-iteration loop: the dispatch arms `continue` out once
-        # they have produced this statement's result
-        for _ in (0,):
-            sv = self._maybe_set_session_var(raw)
-            if sv is not None:
-                result = sv
-                continue
-            # local internal stages (r13): CREATE/DROP STAGE, SHOW
-            # STAGES, PUT/GET/LIST/REMOVE @stage, COPY INTO @stage
-            # unload — session registry of managed directories
-            # (stages.py); COPY INTO … FROM @stage resolves to the
-            # path-form loader further down
-            _up0 = raw.lstrip()[:8].upper()
-            # named FILE FORMAT objects (r13): session registry;
-            # references inline into COPY INTO / CREATE STAGE below
-            if re.search(r"\bFILE\s+FORMATS?\b", raw, re.IGNORECASE):
-                from . import file_formats as _ff
-
-                ff_result = _ff.dispatch(self, raw)
-                if ff_result is not None:
-                    result = ff_result
-                    continue
-            if ("STAGE" in raw.upper()
-                    or _up0.startswith(("PUT ", "LIST ", "LS ",
-                                        "REMOVE ", "RM "))
-                    or (_up0.startswith("GET ")
-                        and "@" in raw.split("\n", 1)[0])
-                    or re.match(r"^\s*COPY\s+INTO\s+@", raw,
-                                re.IGNORECASE)):
-                from . import file_formats as _ff
-                from . import stages as _stages
-
-                st_raw = raw
-                if re.search(r"\bFILE_FORMAT\b", raw, re.IGNORECASE):
-                    st_raw = _ff.resolve_format_name(self, raw)
-                st_result = _stages.dispatch(self, st_raw)
-                if st_result is not None:
-                    result = st_result
-                    continue
-            # direct staged-file queries (r13): SELECT $1 … FROM
-            # @stage [(FILE_FORMAT => …)] — also INSERT…SELECT/CTAS/
-            # MERGE USING over staged files — rewrite the stage ref
-            # to a temp view over the files, then continue normal
-            # dispatch on the clean SQL
-            if (re.match(r"^\s*(WITH|SELECT|INSERT|CREATE|MERGE)\b",
-                         raw, re.IGNORECASE)
-                    and re.search(
-                        r"\bFROM\s+('?@|DIRECTORY\s*\(\s*'?@)", raw,
-                        re.IGNORECASE)):
-                from . import stages as _stages
-
-                rewritten = _stages.rewrite_select_from_stage(
-                    self, raw)
-                if rewritten is not None:
-                    raw = rewritten
-            # CREATE/DROP SEQUENCE + SHOW SEQUENCES (r11): session
-            # registry; NEXTVAL substitution happened in execute()
-            up_head = raw.upper().split(None, 4)
-            if "SEQUENCE" in raw.upper() or "SEQUENCES" in raw.upper():
-                from .sequences import (
-                    create_sequence,
-                    parse_create_sequence,
-                    parse_drop_sequence,
-                    show_sequences,
-                )
-
-                cs = parse_create_sequence(raw)
-                if cs is not None:
-                    name, start, inc, replace, ine = cs
-                    created = create_sequence(
-                        self, name, start, inc, replace, ine)
-                    status = (f"Sequence {name.upper()} successfully "
-                              "created." if created
-                              else f"Sequence {name.upper()} already "
-                              "exists, statement skipped.")
-                    result = self.spark.createDataFrame(
-                        [(status,)], "status string")
-                    continue
-                ds = parse_drop_sequence(raw)
-                if ds is not None:
-                    name, if_exists = ds
-                    if name in self._sequences:
-                        del self._sequences[name]
-                        msg = f"{name.upper()} successfully dropped."
-                    elif if_exists:
-                        msg = (f"Drop statement executed successfully "
-                               f"({name.upper()} already dropped).")
-                    else:
-                        raise ValueError(
-                            f"DROP SEQUENCE: unknown sequence "
-                            f"{name!r} — use IF EXISTS")
-                    result = self.spark.createDataFrame(
-                        [(msg,)], "status string")
-                    continue
-                if up_head[:2] == ["SHOW", "SEQUENCES"]:
-                    result = show_sequences(self)
-                    continue
-                if (up_head and up_head[0] in ("DESC", "DESCRIBE")
-                        and len(up_head) > 2
-                        and up_head[1] == "SEQUENCE"):
-                    nm = up_head[2].strip('"').lower().rstrip(";")
-                    sq = self._sequences.get(nm)
-                    if sq is None:
-                        raise ValueError(
-                            f"DESCRIBE SEQUENCE: unknown sequence "
-                            f"{nm!r} (session sequences: "
-                            f"{', '.join(sorted(self._sequences)) or 'none'})")
-                    result = self.spark.createDataFrame(
-                        [(sq.name, sq.start, sq.increment, sq.next)],
-                        "name string, start bigint, increment bigint,"
-                        " next_value bigint")
-                    continue
-            # stored procedures: CREATE/DROP/SHOW PROCEDURE + CALL
-            from .procedures import (
-                parse_call,
-                parse_create_procedure,
-                parse_drop_procedure,
-                drop_procedure,
-                register_procedure,
-                run_call,
-                show_procedures,
-            )
-
-            proc = parse_create_procedure(raw)
-            if proc is not None:
-                register_procedure(self, proc, proc.replace)
-                result = self.spark.createDataFrame(
-                    [(proc.name,
-                      f"Procedure {proc.name} successfully created.")],
-                    "name string, status string",
-                )
-                continue
-            dp = parse_drop_procedure(raw)
-            if dp is not None:
-                dropped = drop_procedure(self, *dp)
-                result = self.spark.createDataFrame(
-                    [(dp[0], "dropped" if dropped else "skipped (not found)")],
-                    "name string, status string",
-                )
-                continue
-            call = parse_call(raw)
-            if call is not None:
-                result = run_call(self, *call)
-                continue
-            hw0 = raw.split(None, 2)[:2]
-            if [w.upper().rstrip(";") for w in hw0] == ["SHOW", "PROCEDURES"]:
-                result = show_procedures(self)
-                continue
-            # transaction statements: Spark has no multi-statement
-            # transactions; dbt wraps runs in BEGIN/COMMIT, so accept
-            # and no-op rather than fail the whole script
-            # four head words: three-word heads (SHOW FUTURE GRANTS,
-            # CREATE OR REPLACE ROLE) must be dispatchable too; every
-            # check below slices what it needs
-            head = raw.split(None, 4)[:4]
-            hw = [w.upper().rstrip(";") for w in head]
-            if hw and hw[0] in ("BEGIN", "COMMIT", "ROLLBACK") and (
-                len(hw) == 1 or hw[1] in ("TRANSACTION", "WORK", "NAME")
-            ):
-                result = self.spark.createDataFrame(
-                    [(hw[0].lower(), "noop: Spark has no transactions; "
-                      "writes are per-statement atomic via staged swap")],
-                    "statement string, status string",
-                )
-                continue
-            # GRANT/REVOKE: dbt projects routinely run grant post-hooks;
-            # Spark's session catalog has no grant model (access control
-            # lives in the lakehouse catalog / storage layer) — accept
-            # and no-op like BEGIN/COMMIT rather than fail the script
-            # DROP TABLE → rename-based retention; UNDROP restores
-            if hw and hw[0] == "UNDROP":
-                r = self._maybe_undrop(raw)
-                if r is not None:
-                    result = r
-                    continue
-            if hw and hw[0] == "DROP":
-                r = self._maybe_drop_table(raw)
-                if r is not None:
-                    result = r
-                    continue
-            if hw and hw[0] in ("GRANT", "REVOKE"):
-                result = self.spark.createDataFrame(
-                    [(hw[0].lower(), "noop: Spark's session catalog has "
-                      "no grant model; manage access in the lakehouse "
-                      "catalog or storage layer")],
-                    "statement string, status string",
-                )
-                continue
-            # role/user lifecycle (r9 verdict #7 sweep): the grant
-            # model is a documented no-op, so the principals it would
-            # attach to are too — CREATE/DROP/ALTER ROLE|USER no-op
-            # with the same status rather than dying in Spark's parser
-            # (setup scripts run these before their GRANT post-hooks)
-            hw_n = (["CREATE"] + hw[3:]
-                    if hw[:3] == ["CREATE", "OR", "REPLACE"] else hw)
-            if (len(hw_n) > 1 and hw_n[0] in ("CREATE", "DROP", "ALTER")
-                    and hw_n[1] in ("ROLE", "USER")):
-                result = self.spark.createDataFrame(
-                    [(f"{hw_n[0].lower()} {hw_n[1].lower()}",
-                      "noop: Spark's session catalog has no "
-                      "role/user principals; manage identities in "
-                      "the lakehouse catalog or storage layer")],
-                    "statement string, status string",
-                )
-                continue
-            # USE WAREHOUSE/ROLE: no local warehouses or roles — accept
-            # and no-op like GRANT so session-setup scripts run
-            # (USE [SCHEMA|DATABASE] x falls through: Spark owns it)
-            if hw and hw[0] == "USE" and len(hw) > 1 and hw[1] in (
-                "WAREHOUSE", "ROLE", "SECONDARY"
-            ):
-                result = self.spark.createDataFrame(
-                    [("use " + hw[1].lower(), "noop: Spark has no "
-                      "warehouse/role objects; compute comes from the "
-                      "cluster, access from the lakehouse catalog")],
-                    "statement string, status string",
-                )
-                continue
-            # ALTER SESSION SET/UNSET for the parameters with a
-            # faithful Spark mapping: TIMEZONE → the session timezone
-            # conf (affects CURRENT_TIMESTAMP, TO_TIMESTAMP renders…),
-            # QUERY_TAG → recorded (observability tag, no semantics).
-            # Every OTHER parameter keeps the transpiler's actionable
-            # refusal — silently accepting e.g. WEEK_START would
-            # CHANGE answers (r9 batch 3)
-            if hw[:2] == ["ALTER", "SESSION"]:
-                import re as _re
-
-                m = _re.match(
-                    r"(?is)\s*ALTER\s+SESSION\s+SET\s+(\w+)\s*=\s*"
-                    r"(?:'([^']*)'|(\S+))\s*;?\s*$", raw)
-                mu = _re.match(
-                    r"(?is)\s*ALTER\s+SESSION\s+UNSET\s+(\w+)\s*;?\s*$",
-                    raw)
-                pname = (m.group(1) if m else
-                         mu.group(1) if mu else "").upper()
-                if pname == "TIMEZONE":
-                    if m:
-                        tz = m.group(2) or m.group(3)
-                        self.spark.conf.set(
-                            "spark.sql.session.timeZone", tz)
-                    else:
-                        self.spark.conf.unset(
-                            "spark.sql.session.timeZone")
-                    result = self.spark.createDataFrame(
-                        [("timezone", self.spark.conf.get(
-                            "spark.sql.session.timeZone"))],
-                        "parameter string, value string",
-                    )
-                    continue
-                if pname == "QUERY_TAG":
-                    tag = (m.group(2) if m and m.group(2) is not None
-                           else m.group(3) if m else None)
-                    if tag is None:
-                        self._session_vars.pop("query_tag", None)
-                    else:
-                        self._session_vars["query_tag"] = \
-                            self._render_literal(tag)
-                    result = self.spark.createDataFrame(
-                        [("query_tag", tag or "")],
-                        "parameter string, value string",
-                    )
-                    continue
-                # fall through → the transpiler's named refusal, now
-                # mentioning the two parameters that DO work
-            # CREATE/ALTER/DROP WAREHOUSE: compute objects with no
-            # local counterpart — setup scripts create then USE them,
-            # so the whole family no-ops consistently (governance
-            # objects — tags, policies, shares — REFUSE instead: a
-            # no-op there would change data visibility)
-            if (hw and len(hw) > 1 and hw[1] == "WAREHOUSE"
-                    and hw[0] in ("CREATE", "ALTER", "DROP")):
-                result = self.spark.createDataFrame(
-                    [(f"{hw[0].lower()} warehouse", "noop: Spark has "
-                      "no warehouse objects; compute is the cluster "
-                      "itself")],
-                    "statement string, status string",
-                )
-                continue
-            # ALTER TABLE … SUSPEND|RESUME RECLUSTER: Snowflake's
-            # background reclustering toggle — locally reclustering is
-            # the explicit maintenance op, so the toggle no-ops
-            if hw[:2] == ["ALTER", "TABLE"]:
-                tail_words = raw.upper().replace(";", " ").split()
-                if (len(tail_words) >= 2
-                        and tail_words[-1] == "RECLUSTER"
-                        and tail_words[-2] in ("SUSPEND", "RESUME")):
-                    result = self.spark.createDataFrame(
-                        [(tail_words[-2].lower() + " recluster",
-                          "noop: no background reclustering service — "
-                          "recluster explicitly via materializations."
-                          "maintenance (Z-order / CLUSTER BY layout)")],
-                        "statement string, status string",
-                    )
-                    continue
-                # ALTER TABLE t SET <snowflake parameter> = <value>
-                # (r9 batch 4): COMMENT maps to Spark's table property,
-                # DATA_RETENTION_TIME_IN_DAYS no-ops naming the
-                # engine's own retention, CHANGE_TRACKING refuses
-                # naming streaming (it backs STREAM objects), anything
-                # else refuses naming the supported set — the Spark
-                # grammar forms (SET TBLPROPERTIES/SERDE…) never match
-                # this name-=-value shape and fall through untouched
-                import re as _re
-
-                m = _re.match(
-                    r"(?is)\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+SET\s+"
-                    r"([A-Z_]+)\s*=\s*(?:'((?:[^']|'')*)'|(\S+))"
-                    r"\s*;?\s*$",
-                    raw)
-                if m and m.group(2).upper() not in (
-                    "TBLPROPERTIES", "SERDEPROPERTIES", "LOCATION",
-                ):
-                    tname, pname = m.group(1), m.group(2).upper()
-                    val = (m.group(3).replace("''", "'")
-                           if m.group(3) is not None else m.group(4))
-                    if pname == "COMMENT":
-                        esc = val.replace("'", "''")
-                        self.spark.sql(
-                            f"ALTER TABLE {tname} SET TBLPROPERTIES "
-                            f"('comment' = '{esc}')")
-                        result = self.spark.createDataFrame(
-                            [("comment", val)],
-                            "parameter string, value string")
-                        continue
-                    if pname == "DATA_RETENTION_TIME_IN_DAYS":
-                        result = self.spark.createDataFrame(
-                            [(pname.lower(), "noop: retention here is "
-                              "the engine's session-scoped UNDROP "
-                              f"ledger (last {self._drop_retention} "
-                              "drops), not a per-table time window")],
-                            "statement string, status string")
-                        continue
-                    if pname == "CHANGE_TRACKING":
-                        raise ValueError(
-                            "ALTER TABLE … SET CHANGE_TRACKING: "
-                            "change tracking backs STREAM objects, "
-                            "which have no Spark equivalent — use "
-                            "Structured Streaming (streaming.stream_"
-                            "incremental_append) for change capture"
-                        )
-                    raise ValueError(
-                        f"ALTER TABLE … SET {pname}: unsupported "
-                        "table parameter — COMMENT (mapped to the "
-                        "table property) and DATA_RETENTION_TIME_IN_"
-                        "DAYS (no-op; see UNDROP retention) are "
-                        "handled; Spark-native forms (SET "
-                        "TBLPROPERTIES …) pass through"
-                    )
-            # SHOW PARAMETERS [LIKE 'p'] [IN …] → Spark's conf listing
-            # (SET -v shape: key, value, meaning); the IN scope is
-            # dropped — one engine, one scope
-            if hw[:2] == ["SHOW", "PARAMETERS"]:
-                import re as _re
-
-                df = self.spark.sql("SET -v")
-                m = _re.search(r"(?i)\bLIKE\s+'([^']*)'", raw)
-                if m:
-                    from pyspark.sql import functions as F
-
-                    df = df.filter(
-                        F.lower(F.col("key")).like(m.group(1).lower())
-                    )
-                result = df
-                continue
-            # DESCRIBE RESULT '<qid>' | LAST_QUERY_ID([n]) — schema of
-            # a recorded statement result (the RESULT_SCAN family)
-            if (hw and hw[0] in ("DESC", "DESCRIBE")
-                    and len(hw) > 1 and hw[1] == "RESULT"):
-                result = self._describe_result(raw)
-                continue
-            # SHOW GRANTS: the grant surface is a documented no-op, so
-            # the listing is shaped-but-empty (not an error — scripts
-            # inspect it after their GRANT post-hooks)
-            # TERSE is a column-subset hint — same listings here
-            shw = (["SHOW"] + hw[2:]
-                   if hw[:2] == ["SHOW", "TERSE"] else hw)
-            if (shw[:2] == ["SHOW", "GRANTS"]
-                    or shw[:3] == ["SHOW", "FUTURE", "GRANTS"]):
-                from pyspark.sql.types import (
-                    StringType, StructField, StructType,
-                )
-
-                result = self.spark.createDataFrame(
-                    [],
-                    StructType([
-                        StructField(c, StringType())
-                        for c in ("privilege", "granted_on", "name",
-                                  "granted_to", "grantee_name")
-                    ]),
-                )
-                continue
-            # SHOW ROLES / SHOW USERS: principals are a documented
-            # no-op (see CREATE ROLE) — shaped-but-empty listings so
-            # inspection scripts keep running. Same rule for the other
-            # NOOP families (warehouses, transactions/locks): CREATE
-            # no-ops, so the listing is honestly empty. VARIABLES is
-            # the exception — session variables genuinely EXIST (SET
-            # var = …), so the listing shows them.
-            _SHOW_EMPTY = {
-                "ROLES": ("name", "comment", "owner"),
-                "USERS": ("name", "login_name", "display_name",
-                          "disabled"),
-                "WAREHOUSES": ("name", "state", "size", "comment"),
-                "TRANSACTIONS": ("id", "session", "name", "state"),
-                "LOCKS": ("resource", "type", "transaction", "status"),
-            }
-            if shw[0] == "SHOW" and len(shw) > 1 and shw[1] in _SHOW_EMPTY:
-                from pyspark.sql.types import (
-                    StringType, StructField, StructType,
-                )
-
-                result = self.spark.createDataFrame(
-                    [],
-                    StructType([StructField(c, StringType())
-                                for c in _SHOW_EMPTY[shw[1]]]),
-                )
-                continue
-            if shw[:2] == ["SHOW", "VARIABLES"]:
-                from pyspark.sql.types import (
-                    StringType, StructField, StructType,
-                )
-
-                schema = StructType([
-                    StructField("name", StringType()),
-                    StructField("value", StringType()),
-                ])
-                def _display(v: str) -> str:
-                    # stored as literal TEXT for substitution; display
-                    # string literals unquoted like Snowflake does
-                    if len(v) >= 2 and v[0] == v[-1] == "'":
-                        return v[1:-1].replace("''", "'")
-                    return v
-
-                result = self.spark.createDataFrame(
-                    [(k, _display(v))
-                     for k, v in sorted(self._session_vars.items())],
-                    schema,
-                )
-                continue
-            # SHOW over object families whose CREATE refuses (streams,
-            # tasks, pipes, stages, alerts, sequences): refuse with
-            # the same pointer — an empty listing would imply the
-            # object family exists here
-            _SHOW_REFUSE = {
-                "STREAMS": "Structured Streaming "
-                           "(streaming.stream_incremental_append) for "
-                           "change capture — Spark has no stream "
-                           "objects",
-                "TASKS": "an external scheduler (cron/Airflow) driving "
-                         "the CLI — Spark has no task objects",
-                "PIPES": "a Structured Streaming file source for "
-                         "continuous loading — Spark has no pipe "
-                         "objects",
-                "STAGES": "direct filesystem/object-store paths — "
-                          "Spark has no stage objects",
-                "ALERTS": "external monitoring over the telemetry "
-                          "store — Spark has no alert objects",
-            }
-            if shw[0] == "SHOW" and len(shw) > 1 and shw[1] in _SHOW_REFUSE:
-                raise TranspileError(
-                    f"SHOW {shw[1]}: Spark has no "
-                    f"{shw[1].lower().rstrip('s')} objects. Use "
-                    f"{_SHOW_REFUSE[shw[1]]}."
-                )
-            # DESCRIBE over the same families: the bare fallthrough
-            # parsed `DESC STAGE s` as DESCRIBE TABLE and blamed a
-            # missing table named 'STAGE' — misleading
-            if (hw and hw[0] in ("DESC", "DESCRIBE") and len(hw) > 1
-                    and hw[1] in ("STAGE", "STREAM", "TASK", "PIPE",
-                                  "ALERT", "INTEGRATION",
-                                  "SHARE")):
-                raise TranspileError(
-                    f"DESCRIBE {hw[1]}: Spark has no "
-                    f"{hw[1].lower()} objects (their CREATE refuses "
-                    "with the idiomatic replacement); there is "
-                    "nothing to describe."
-                )
-            if (hw and hw[0] in ("DESC", "DESCRIBE") and len(hw) > 1
-                    and hw[1] in ("WAREHOUSE", "USER", "ROLE")):
-                result = self.spark.createDataFrame(
-                    [(hw[1].lower(),
-                      "noop: no local compute/principal objects — "
-                      "the CREATE/USE family no-ops by design")],
-                    "object string, status string",
-                )
-                continue
-            from .materializations.create_table import (
-                parse_swap_with,
-                run_swap_with,
-            )
-
-            swap = parse_swap_with(raw)
-            if swap is not None:
-                try:
-                    stats = run_swap_with(self.spark, *swap)
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = _affected_frame(self.spark, stats)
-                continue
-            from .materializations.insert_all import (
-                parse_insert_all,
-                run_insert_all,
-            )
-
-            mti = parse_insert_all(raw)
-            if mti is not None:
-                try:
-                    stats = run_insert_all(
-                        self.spark, mti, self.transpiler, self.execute
-                    )
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = _affected_frame(self.spark, stats)
-                continue
-            # CREATE OR REPLACE TABLE: Spark's REPLACE TABLE needs a
-            # DSv2 catalog — lower onto the overwrite-write staged swap
-            # the table materialization uses (create_table.py)
-            from .materializations.create_table import (
-                parse_create_or_replace_table,
-                run_create_or_replace_table,
-            )
-
-            cort_spec = parse_create_or_replace_table(raw)
-            if cort_spec is not None:
-                try:
-                    stats = run_create_or_replace_table(
-                        self.spark, cort_spec, self.transpiler, self.execute
-                    )
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = _affected_frame(self.spark, stats)
-                continue
-            alter_spec = parse_alter_columns(raw)
-            if alter_spec is not None:
-                try:
-                    stats = run_alter_columns(self.spark, alter_spec)
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = _affected_frame(self.spark, stats)
-                continue
-            # row-level DML on parquet tables lowers onto the staged
-            # rewrite (DELETE/UPDATE/MERGE all share the swap machinery)
-            dml_handled = False
-            for parse_fn, run_fn in (
-                (parse_delete, run_delete_statement),
-                (parse_update, run_update_statement),
-            ):
-                dml_spec = parse_fn(raw)
-                if dml_spec is None:
-                    continue
-                from .materializations.merge_stmt import MergeSpec
-
-                if isinstance(dml_spec, MergeSpec):
-                    # UPDATE ... FROM lowered onto the merge machinery
-                    run_fn = run_merge_statement
-                try:
-                    stats = run_fn(self.spark, dml_spec, self.transpiler)
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = _affected_frame(self.spark, stats)
-                dml_handled = True
-                break
-            if dml_handled:
-                continue
-            merge_spec = parse_merge(raw)
-            if merge_spec is not None:
-                # parquet tables have no row-level MERGE; lower onto the
-                # CASE-cascade staged rewrite (same routing pattern as
-                # COPY INTO)
-                try:
-                    stats = run_merge_statement(self.spark, merge_spec, self.transpiler)
-                except (ValueError, TranspileError):
-                    raise  # already actionable
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = _affected_frame(self.spark, stats)
-                continue
-            # COPY INTO … FROM @stage resolves the stage to its local
-            # directory (r13, stages.py) and rides the path-form
-            # loader; statements with no stage FROM pass unchanged
-            copy_raw = raw
-            if re.search(
-                    r"\bFORMAT_NAME\b|FILE_FORMAT\s*=\s*(?!\()", raw,
-                    re.IGNORECASE):
-                from . import file_formats as _ff
-
-                copy_raw = _ff.resolve_format_name(self, copy_raw)
-            if re.search(r"\bFROM\s+'?@", copy_raw, re.IGNORECASE):
-                from . import stages as _stages
-
-                resolved = _stages.resolve_copy_into_stage(
-                    self, copy_raw)
-                if resolved is not None:
-                    copy_raw = resolved
-            # transformation COPY (r13): COPY INTO t [(cols)] FROM
-            # (SELECT $1, … FROM @stage|'<path>') — positional file
-            # read + transpiled SELECT (copy_into.py)
-            from .materializations.copy_into import (
-                parse_transform_copy,
-                run_transform_copy,
-            )
-
-            tspec = parse_transform_copy(copy_raw)
-            if tspec is not None:
-                src = tspec.src.strip("'")
-                if src.startswith("@"):
-                    from . import stages as _stages
-
-                    stage, sub = _stages._resolve_ref(self, src)
-                    path = (os.path.join(stage.path, sub)
-                            if sub else stage.path)
-                else:
-                    path = src
-                try:
-                    stats = run_transform_copy(
-                        self.spark, tspec, self.transpiler, path)
-                except (ValueError, TranspileError):
-                    raise  # already actionable
-                except Exception as e:
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_loaded"],
-                      stats["format"])],
-                    "table string, rows_loaded long, format string",
-                )
-                continue
-            spec = parse_copy_into(copy_raw)
-            if spec is not None:
-                try:
-                    stats = run_copy_into(self.spark, spec)
-                except ValueError:
-                    raise  # already actionable
-                except Exception as e:  # same error surface as spark.sql
-                    raise_classified(e, raw)
-                result = self.spark.createDataFrame(
-                    [(stats["table"], stats["rows_loaded"], stats["format"])],
-                    "table string, rows_loaded long, format string",
-                )
-                continue
-            # MATCH_RECOGNIZE: no Spark SQL clause exists — parse the
-            # spec and run the applyInPandas pattern automaton (same
-            # engine-layer routing as COPY INTO / MERGE)
-            if "MATCH_RECOGNIZE" in raw.upper():
-                from .transpiler.match_recognize_sql import (
-                    parse_match_recognize,
-                    resolve_nested_match_recognize,
-                    run_match_recognize_statement,
-                )
-
-                try:
-                    mr = parse_match_recognize(raw)
-                except TranspileError:
-                    # top-level shape the fast path doesn't take (e.g.
-                    # INSERT INTO … SELECT … MATCH_RECOGNIZE) — the
-                    # nested resolver below handles the general case;
-                    # body errors re-raise identically from it
-                    mr = None
-                if mr is not None:
-                    try:
-                        result = run_match_recognize_statement(
-                            self.spark, mr, self.transpiler
-                        )
-                    except (ValueError, TranspileError):
-                        raise
-                    except Exception as e:
-                        raise_classified(e, raw)
-                    continue
-                # MATCH_RECOGNIZE inside a CTE / subquery / non-SELECT
-                # statement: evaluate each clause into a temp view and
-                # continue down the normal pipeline with the rewritten
-                # statement (r8 VERDICT Missing #4)
-                try:
-                    raw = resolve_nested_match_recognize(
-                        self.spark, raw, self.transpiler
-                    )
-                except (ValueError, TranspileError):
-                    raise
-                except Exception as e:
-                    raise_classified(e, raw)
+            try:
+                mr = parse_match_recognize(raw)
+            except TranspileError:
+                # top-level shape the fast path doesn't take (e.g.
+                # INSERT INTO … SELECT … MATCH_RECOGNIZE) — the nested
+                # resolver below handles the general case; body errors
+                # re-raise identically from it
+                mr = None
+            if mr is not None:
+                return run_match_recognize_statement(
+                    self.spark, mr, self.transpiler)
+            # inside a CTE / subquery / non-SELECT statement: each
+            # clause is evaluated into a temp view and the rewritten
+            # statement continues down the pipeline
+            raw = resolve_nested_match_recognize(
+                self.spark, raw, self.transpiler)
+        if "PIVOT" in raw.upper():
             # dynamic PIVOT (FOR col IN (ANY) / IN (SELECT …)): resolve
             # the value list on the live session before transpiling —
             # Spark PIVOT needs explicit literals (Snowflake's compiler
             # runs the same enumeration)
-            if "PIVOT" in raw.upper():
-                from .transpiler.pivot_dynamic import (
-                    resolve_dynamic_pivot,
-                    resolve_pivot_default,
-                )
+            from .transpiler.pivot_dynamic import (
+                resolve_dynamic_pivot,
+                resolve_pivot_default,
+            )
 
-                raw = resolve_dynamic_pivot(self.spark, raw, self.transpiler)
-                # DEFAULT ON NULL → conditional aggregation (needs the
-                # source schema, so it also lives here; after dynamic
-                # resolution so IN lists are literal)
-                raw = resolve_pivot_default(self.spark, raw, self.transpiler)
-            # time travel AT/BEFORE(TIMESTAMP => x): snapshot (SCD2)
-            # tables rewrite onto their validity-interval predicate —
-            # needs the live catalog, so it resolves here, not in the
-            # pure transpiler (which keeps the general refusal)
-            from .transpiler.time_travel import resolve_time_travel
+            raw = resolve_dynamic_pivot(self.spark, raw, self.transpiler)
+            # DEFAULT ON NULL → conditional aggregation (needs the
+            # source schema, so it also lives here; after dynamic
+            # resolution so IN lists are literal)
+            raw = resolve_pivot_default(self.spark, raw, self.transpiler)
+        # time travel AT/BEFORE(TIMESTAMP => x): snapshot (SCD2)
+        # tables rewrite onto their validity-interval predicate —
+        # needs the live catalog, so it resolves here, not in the
+        # pure transpiler (which keeps the general refusal)
+        from .transpiler.time_travel import resolve_time_travel
 
-            raw = resolve_time_travel(self.spark, raw, self.transpiler,
-                                      engine=self)
-            for stmt in self.transpiler.to_spark_statements(raw):
-                # pre-flight the analyze-fail-rewrite shapes in a
-                # listener-silent probe session so a statement that
-                # SUCCEEDS after rewriting never posts a
-                # failed-analysis event to the ExecutionListenerBus
-                # (r11 judge What's-wrong #2: pending merge/CTAS
-                # Observations turn those events into ERROR traces)
-                if _retry_prone(stmt):
-                    ok, perr = _probe_analyze(self.spark, stmt)
-                    attempt = stmt
-                    for _ in range(8):
-                        if ok:
-                            break
-                        retry_sql = (_wrap_string_explode(attempt, perr)
-                                     or _wrap_string_subscript(
-                                         attempt, perr)
-                                     or _unwrap_string_tojson(
-                                         attempt, perr))
-                        if retry_sql is None:
-                            break  # real session raises authoritatively
-                        attempt = retry_sql
-                        ok, perr = _probe_analyze(self.spark, attempt)
+        raw = resolve_time_travel(self.spark, raw, self.transpiler,
+                                  engine=self)
+        result = None
+        for stmt in self.transpiler.to_spark_statements(raw):
+            # pre-flight the analyze-fail-rewrite shapes in a
+            # listener-silent probe session so a statement that
+            # SUCCEEDS after rewriting never posts a failed-analysis
+            # event to the ExecutionListenerBus (pending merge/CTAS
+            # Observations turn those events into ERROR traces)
+            if _retry_prone(stmt):
+                ok, perr = _probe_analyze(self.spark, stmt)
+                attempt = stmt
+                for _ in range(8):
                     if ok:
-                        stmt = attempt
-                try:
-                    with _quiet_query_context_logs():
-                        result = self.spark.sql(stmt)
-                except Exception as e:
-                    raise_classified(e, stmt)
-        return _coerce_day_intervals(result)
+                        break
+                    retry_sql = (_wrap_string_explode(attempt, perr)
+                                 or _wrap_string_subscript(attempt, perr)
+                                 or _unwrap_string_tojson(attempt, perr))
+                    if retry_sql is None:
+                        break  # real session raises authoritatively
+                    attempt = retry_sql
+                    ok, perr = _probe_analyze(self.spark, attempt)
+                if ok:
+                    stmt = attempt
+            with _quiet_query_context_logs():
+                result = self.spark.sql(stmt)
+        return result
 
     def _maybe_sample(self, df: DataFrame, sql: str) -> DataFrame:
         # ref impl.py:403-415: wrap in LIMIT n unless SQL already limits
@@ -2048,6 +1380,30 @@ class IcebreakerEngine:
         return f"{self.effective_schema}.{name}"
 
     # ------------------------------------------------- materializations
+    def _run(self, kind: str, name: str, materialization: str,
+             build) -> RunResult:
+        """One model, snapshot or seed run. Every execution it triggers
+        carries one job description, which the telemetry harvest sums;
+        the caller's description is restored. ``build(target)`` returns
+        ``(relation, rows, details)``."""
+        start = time.time()
+        target = self._qualified(name)
+        sc = self.spark.sparkContext
+        caller_desc = sc.getLocalProperty("spark.job.description")
+        # the sequence number keeps descriptions unique across threads
+        run_desc = f"{kind} {target} #{next(_RUN_SEQ)}"
+        after_id = newest_execution_id(self.spark) if self.telemetry else -1
+        sc.setLocalProperty("spark.job.description", run_desc)
+        try:
+            relation, rows, details = build(target)
+        finally:
+            sc.setLocalProperty("spark.job.description", caller_desc)
+        if self.telemetry is not None:
+            metrics = harvest_run(self.spark, run_desc, after_id)
+            self.telemetry.record(name, time.time() - start, rows, metrics)
+        return RunResult(name, materialization, relation, rows,
+                         time.time() - start, details)
+
     def run_model(
         self,
         name: str,
@@ -2064,28 +1420,18 @@ class IcebreakerEngine:
         merge_update_columns: Optional[Sequence[str]] = None,
         merge_exclude_columns: Optional[Sequence[str]] = None,
     ) -> RunResult:
-        start = time.time()
-        target = self._qualified(name)
-
-        if materialization == "view":
-            # M2: ref view.sql:5-23 / adapters.sql:49-53
-            spark_sql = self.sql_to_spark(sql)
-            self.spark.sql(f"CREATE OR REPLACE VIEW {target} AS {spark_sql}")
-            return RunResult(name, "view", target, -1, time.time() - start)
-
-        # every execution of this run carries one job description —
-        # the telemetry harvest sums exactly those
-        sc = self.spark.sparkContext
-        caller_desc = sc.getLocalProperty("spark.job.description")
-        run_desc = f"run_model {target} #{next(_RUN_SEQ)}"
-        after_id = newest_execution_id(self.spark) if self.telemetry else -1
-        sc.setLocalProperty("spark.job.description", run_desc)
-        try:
+        def build(target):
+            if materialization == "view":
+                # M2: ref view.sql:5-23 / adapters.sql:49-53 — one
+                # statement through execute, so session variables, the
+                # live-session resolvers and error classification apply
+                self.execute(f"CREATE OR REPLACE VIEW {target} AS {sql}")
+                return target, -1, {}
             df = self._maybe_sample(self.execute(sql), sql)
             if materialization == "ephemeral":
                 # dbt ephemeral = temp view, not persisted
                 df.createOrReplaceTempView(name)
-                return RunResult(name, "ephemeral", None, -1, time.time() - start)
+                return None, -1, {}
             details: dict = {}
             try:  # runtime failures (e.g. bad cast) → actionable error
                 if materialization == "table":
@@ -2117,12 +1463,9 @@ class IcebreakerEngine:
                     raise ValueError(f"unknown materialization: {materialization}")
             except Exception as e:
                 raise_classified(e, sql)
-        finally:
-            sc.setLocalProperty("spark.job.description", caller_desc)
-        if self.telemetry is not None:
-            metrics = harvest_run(self.spark, run_desc, after_id)
-            self.telemetry.record(name, time.time() - start, rows, metrics)
-        return RunResult(name, materialization, target, rows, time.time() - start, details)
+            return target, rows, details
+
+        return self._run("run_model", name, materialization, build)
 
     def run_snapshot(
         self,
@@ -2135,23 +1478,21 @@ class IcebreakerEngine:
         invalidate_hard_deletes: bool = False,
         now: Optional[_dt.datetime] = None,
     ) -> RunResult:
-        start = time.time()
-        target = self._qualified(name)
-        source = self.execute(sql)
-        details = run_snapshot(
-            self.spark,
-            target,
-            source,
-            unique_key=unique_key,
-            strategy=strategy,
-            updated_at=updated_at,
-            check_cols=check_cols,
-            invalidate_hard_deletes=invalidate_hard_deletes,
-            now=now,
-        )
-        return RunResult(
-            name, "snapshot", target, details["rows"], time.time() - start, details
-        )
+        def build(target):
+            details = run_snapshot(
+                self.spark,
+                target,
+                self.execute(sql),
+                unique_key=unique_key,
+                strategy=strategy,
+                updated_at=updated_at,
+                check_cols=check_cols,
+                invalidate_hard_deletes=invalidate_hard_deletes,
+                now=now,
+            )
+            return target, details["rows"], details
+
+        return self._run("run_snapshot", name, "snapshot", build)
 
     def seed_csv(
         self,
@@ -2166,40 +1507,467 @@ class IcebreakerEngine:
         the same name: per-column type overrides applied as casts on
         top of inference (a zip-code column inferred as INT loses its
         leading zeros without it — the canonical dbt seed pitfall)."""
-        start = time.time()
-        target = self._qualified(name)
+        return self._run("seed_csv", name, "seed", lambda target: (
+            target,
+            write_table(self.spark,
+                        self._read_seed(name, path, header, column_types),
+                        target),
+            {},
+        ))
+
+    def _read_seed(self, name, path, header, column_types) -> DataFrame:
         reader = self.spark.read.option("header", str(header).lower())
-        if column_types:
-            # inference would already have destroyed e.g. leading
-            # zeros before a cast could run — read overridden columns
-            # as strings, then cast to the declared type
-            reader = reader.option("inferSchema", "false")
-            df = reader.csv(path)
-            missing = set(column_types) - set(df.columns)
-            if missing:
-                # a typo'd override key would silently re-introduce
-                # the inference pitfall the feature exists to prevent
-                raise ValueError(
-                    f"seed {name}: column_types references column(s) "
-                    f"{sorted(missing)} not in the CSV header "
-                    f"(columns: {df.columns})"
-                )
-            inferred = (
-                self.spark.read.option("header", str(header).lower())
-                .option("inferSchema", "true")
-                .csv(path)
+        if not column_types:
+            return reader.option("inferSchema", "true").csv(path)
+        # inference would already have destroyed e.g. leading zeros
+        # before a cast could run — read overridden columns as strings,
+        # then cast to the declared type
+        df = reader.option("inferSchema", "false").csv(path)
+        missing = set(column_types) - set(df.columns)
+        if missing:
+            # a typo'd override key would silently re-introduce the
+            # inference pitfall the feature exists to prevent
+            raise ValueError(
+                f"seed {name}: column_types references column(s) "
+                f"{sorted(missing)} not in the CSV header "
+                f"(columns: {df.columns})"
             )
-            by_name = {f.name: f.dataType for f in inferred.schema.fields}
+        inferred = (
+            self.spark.read.option("header", str(header).lower())
+            .option("inferSchema", "true")
+            .csv(path)
+        )
+        by_name = {f.name: f.dataType for f in inferred.schema.fields}
+        from pyspark.sql import functions as F
+
+        return df.select(*(
+            F.col(c).cast(column_types.get(c, by_name[c])).alias(c)
+            for c in df.columns
+        ))
+
+
+# ------------------------------------------------------ statement dispatch
+# a statement's head is read a word at a time, past whitespace and the
+# tokenizer's two comment forms
+_HEAD_GAP = re.compile(r"(?:\s|--[^\n]*|/\*.*?(?:\*/|\Z))*+", re.DOTALL)
+_HEAD_WORD = re.compile(r"[A-Za-z_$][\w$#]*")
+_STAGE_FROM = re.compile(r"\bFROM\s+('?@|DIRECTORY\s*\(\s*'?@)", re.IGNORECASE)
+
+
+def _statement_head(raw: str) -> tuple[str, str, str, str]:
+    """The statement's first four code words, upper-cased ("" past the
+    last): ``CREATE OR REPLACE x`` reads as ``CREATE x``, ``SHOW TERSE
+    x`` as ``SHOW x`` (TERSE is a column-subset hint — same listings
+    here) and ``DESCRIBE`` as ``DESC``. Words end at the first other
+    token, so ``COPY INTO @s`` reads ``COPY INTO``."""
+    words: list[str] = []
+    pos = 0
+    while len(words) < 6:
+        pos = _HEAD_GAP.match(raw, pos).end()
+        m = _HEAD_WORD.match(raw, pos)
+        if m is None:
+            break
+        words.append(m.group().upper())
+        pos = m.end()
+    if words[:3] == ["CREATE", "OR", "REPLACE"]:
+        del words[1:3]
+    elif words[:2] == ["SHOW", "TERSE"]:
+        del words[1]
+    elif words[:1] == ["DESCRIBE"]:
+        words[0] = "DESC"
+    return tuple((words + [""] * 4)[:4])
+
+
+def _status_frame(spark, label: str, status: str, column: str = "statement"):
+    return driver_frame(spark, [(label, status)],
+                        f"{column} string, status string")
+
+
+# Statements about objects with no local counterpart, accepted so that
+# setup scripts and dbt hooks run: (verbs, objects, first column,
+# label, status). Object "" is a statement with no object word, "*"
+# any object word.
+_NOOP_FAMILIES = (
+    # dbt wraps runs in BEGIN/COMMIT; Spark has no multi-statement
+    # transactions
+    (("BEGIN", "COMMIT", "ROLLBACK"), ("", "TRANSACTION", "WORK", "NAME"),
+     "statement", "{v}", "noop: Spark has no transactions; writes are "
+     "per-statement atomic via staged swap"),
+    # grant post-hooks: access control lives in the lakehouse catalog /
+    # storage layer
+    (("GRANT", "REVOKE"), ("*",), "statement", "{v}",
+     "noop: Spark's session catalog has no grant model; manage access "
+     "in the lakehouse catalog or storage layer"),
+    # the principals the grant model would attach to (setup scripts run
+    # these before their GRANT post-hooks)
+    (("CREATE", "DROP", "ALTER"), ("ROLE", "USER"), "statement", "{v} {o}",
+     "noop: Spark's session catalog has no role/user principals; manage "
+     "identities in the lakehouse catalog or storage layer"),
+    # USE [SCHEMA|DATABASE] x is Spark's own and falls through
+    (("USE",), ("WAREHOUSE", "ROLE", "SECONDARY"), "statement", "{v} {o}",
+     "noop: Spark has no warehouse/role objects; compute comes from the "
+     "cluster, access from the lakehouse catalog"),
+    # compute objects: setup scripts create then USE them, so the whole
+    # family no-ops (governance objects — tags, policies, shares —
+    # refuse instead: a no-op there would change data visibility)
+    (("CREATE", "ALTER", "DROP"), ("WAREHOUSE",), "statement", "{v} {o}",
+     "noop: Spark has no warehouse objects; compute is the cluster "
+     "itself"),
+    (("DESC",), ("WAREHOUSE", "USER", "ROLE"), "object", "{o}",
+     "noop: no local compute/principal objects — the CREATE/USE family "
+     "no-ops by design"),
+)
+_NOOPS = {(v, o): fam[2:] for fam in _NOOP_FAMILIES
+          for v in fam[0] for o in fam[1]}
+# SHOW over the no-op families: shaped-but-empty listings, honestly
+# empty because their CREATE no-ops (not errors — scripts inspect them
+# after their GRANT post-hooks)
+_SHOW_EMPTY = {
+    "GRANTS": ("privilege", "granted_on", "name", "granted_to",
+               "grantee_name"),
+    "ROLES": ("name", "comment", "owner"),
+    "USERS": ("name", "login_name", "display_name", "disabled"),
+    "WAREHOUSES": ("name", "state", "size", "comment"),
+    "TRANSACTIONS": ("id", "session", "name", "state"),
+    "LOCKS": ("resource", "type", "transaction", "status"),
+}
+# SHOW / DESC over object families whose CREATE refuses: refuse with
+# the same pointer — an empty listing would imply the family exists
+# here, and a bare DESC parsed `DESC STAGE s` as a table named 'STAGE'
+_SHOW_REFUSE = {
+    "STREAMS": "Structured Streaming (streaming.stream_incremental_append) "
+               "for change capture — Spark has no stream objects",
+    "TASKS": "an external scheduler (cron/Airflow) driving the CLI — "
+             "Spark has no task objects",
+    "PIPES": "a Structured Streaming file source for continuous loading "
+             "— Spark has no pipe objects",
+    "STAGES": "direct filesystem/object-store paths — Spark has no stage "
+              "objects",
+    "ALERTS": "external monitoring over the telemetry store — Spark has "
+              "no alert objects",
+}
+_DESC_REFUSE = ("STAGE", "STREAM", "TASK", "PIPE", "ALERT", "INTEGRATION",
+                "SHARE")
+
+
+def _noop(eng, raw, head):
+    fam = _NOOPS.get(head[:2]) or _NOOPS.get((head[0], "*"))
+    if fam is not None:
+        column, label, status = fam
+        return _status_frame(
+            eng.spark, label.format(v=head[0].lower(), o=head[1].lower()),
+            status, column)
+
+
+def _file_format(eng, raw, head):
+    return file_formats.dispatch(eng, raw)
+
+
+def _stage(eng, raw, head):
+    return stages.dispatch(eng, raw)
+
+
+def _show(eng, raw, head):
+    obj = "GRANTS" if head[1:3] == ("FUTURE", "GRANTS") else head[1]
+    if obj in _SHOW_EMPTY:
+        return driver_frame(eng.spark, [], ", ".join(
+            f"`{c}` string" for c in _SHOW_EMPTY[obj]))
+    if obj in _SHOW_REFUSE:
+        raise TranspileError(
+            f"SHOW {obj}: Spark has no {obj.lower().rstrip('s')} "
+            f"objects. Use {_SHOW_REFUSE[obj]}."
+        )
+    if obj == "SEQUENCES":
+        return sequences.show_sequences(eng)
+    if obj == "PROCEDURES":
+        return procedures.show_procedures(eng)
+    if obj == "VARIABLES":
+        # session variables genuinely exist (SET var = …): stored as
+        # literal text for substitution, string literals display
+        # unquoted like Snowflake does
+        return driver_frame(eng.spark, [
+            (k, v[1:-1].replace("''", "'")
+             if len(v) >= 2 and v[0] == v[-1] == "'" else v)
+            for k, v in sorted(eng._session_vars.items())
+        ], "name string, value string")
+    if obj == "PARAMETERS":
+        # Spark's conf listing (SET -v shape: key, value, meaning); the
+        # IN scope is dropped — one engine, one scope
+        df = eng.spark.sql("SET -v")
+        m = re.search(r"(?i)\bLIKE\s+'([^']*)'", raw)
+        if m:
             from pyspark.sql import functions as F
 
-            cols = []
-            for c in df.columns:
-                if c in column_types:
-                    cols.append(F.col(c).cast(column_types[c]).alias(c))
-                else:
-                    cols.append(F.col(c).cast(by_name[c]).alias(c))
-            df = df.select(*cols)
+            df = df.filter(F.lower(F.col("key")).like(m.group(1).lower()))
+        return df
+
+
+def _describe(eng, raw, head):
+    if head[1] == "RESULT":
+        return eng._describe_result(raw)
+    if head[1] in _DESC_REFUSE:
+        raise TranspileError(
+            f"DESCRIBE {head[1]}: Spark has no {head[1].lower()} objects "
+            "(their CREATE refuses with the idiomatic replacement); "
+            "there is nothing to describe."
+        )
+
+
+def _sequence(eng, raw, head):
+    """CREATE / DROP / DESC SEQUENCE over the session registry
+    (sequences.py); NEXTVAL substitution happened in execute()."""
+    if head[1] != "SEQUENCE":
+        return None
+    if head[0] == "CREATE":
+        name, start, inc, replace, ine = sequences.parse_create_sequence(raw)
+        created = sequences.create_sequence(
+            eng, name, start, inc, replace, ine)
+        status = (f"Sequence {name.upper()} successfully created."
+                  if created else f"Sequence {name.upper()} already "
+                  "exists, statement skipped.")
+    elif head[0] == "DROP":
+        name, if_exists = sequences.parse_drop_sequence(raw)
+        if name in eng._sequences:
+            del eng._sequences[name]
+            status = f"{name.upper()} successfully dropped."
+        elif if_exists:
+            status = (f"Drop statement executed successfully "
+                      f"({name.upper()} already dropped).")
         else:
-            df = reader.option("inferSchema", "true").csv(path)
-        rows = write_table(self.spark, df, target)
-        return RunResult(name, "seed", target, rows, time.time() - start)
+            raise ValueError(
+                f"DROP SEQUENCE: unknown sequence {name!r} — use IF EXISTS")
+    else:
+        m = re.search(r"(?i)\bSEQUENCE\s+(\S+)", raw)
+        if m is None:
+            return None
+        nm = m.group(1).rstrip(";").strip('"').lower()
+        sq = eng._sequences.get(nm)
+        if sq is None:
+            raise ValueError(
+                f"DESCRIBE SEQUENCE: unknown sequence {nm!r} (session "
+                f"sequences: {', '.join(sorted(eng._sequences)) or 'none'})")
+        return driver_frame(
+            eng.spark, [(sq.name, sq.start, sq.increment, sq.next)],
+            "name string, start bigint, increment bigint, next_value bigint")
+    return driver_frame(eng.spark, [(status,)], "status string")
+
+
+def _procedure(eng, raw, head):
+    """CREATE / DROP PROCEDURE over the session registry
+    (procedures.py)."""
+    if head[1] != "PROCEDURE":
+        return None
+    if head[0] == "CREATE":
+        proc = procedures.parse_create_procedure(raw)
+        procedures.register_procedure(eng, proc, proc.replace)
+        name = proc.name
+        status = f"Procedure {name} successfully created."
+    else:
+        dp = procedures.parse_drop_procedure(raw)
+        name, status = dp[0], ("dropped" if procedures.drop_procedure(eng, *dp)
+                               else "skipped (not found)")
+    return _status_frame(eng.spark, name, status, "name")
+
+
+def _call(eng, raw, head):
+    call = procedures.parse_call(raw)
+    if call is not None:
+        return procedures.run_call(eng, *call)
+
+
+def _alter_session(eng, raw, head):
+    """ALTER SESSION SET/UNSET for the parameters with a faithful Spark
+    mapping: TIMEZONE → the session timezone conf (CURRENT_TIMESTAMP,
+    TO_TIMESTAMP renders…), QUERY_TAG → recorded (observability tag,
+    no semantics). Every OTHER parameter keeps the transpiler's named
+    refusal, which mentions these two — silently accepting e.g.
+    WEEK_START would CHANGE answers."""
+    if head[1] != "SESSION":
+        return None
+    m = re.match(r"(?is)\s*ALTER\s+SESSION\s+SET\s+(\w+)\s*=\s*"
+                 r"(?:'([^']*)'|(\S+))\s*;?\s*$", raw)
+    mu = re.match(r"(?is)\s*ALTER\s+SESSION\s+UNSET\s+(\w+)\s*;?\s*$", raw)
+    pname = (m.group(1) if m else mu.group(1) if mu else "").upper()
+    value = None if m is None else (
+        m.group(2) if m.group(2) is not None else m.group(3))
+    if pname == "TIMEZONE":
+        if value is None:
+            eng.spark.conf.unset("spark.sql.session.timeZone")
+        else:
+            eng.spark.conf.set("spark.sql.session.timeZone", value)
+        value = eng.spark.conf.get("spark.sql.session.timeZone")
+    elif pname == "QUERY_TAG":
+        if value is None:
+            eng._session_vars.pop("query_tag", None)
+        else:
+            eng._session_vars["query_tag"] = eng._render_literal(value)
+    else:
+        return None
+    return driver_frame(eng.spark, [(pname.lower(), value or "")],
+                        "parameter string, value string")
+
+
+def _alter_table(eng, raw, head):
+    """ALTER TABLE … SUSPEND|RESUME RECLUSTER and ALTER TABLE t SET
+    <snowflake parameter> = <value>. The Spark grammar forms (SET
+    TBLPROPERTIES/SERDE…) never match the name-=-value shape and fall
+    through untouched."""
+    if head[1] != "TABLE":
+        return None
+    # Snowflake's background reclustering toggle — locally reclustering
+    # is the explicit maintenance op, so the toggle no-ops
+    tail = raw.upper().replace(";", " ").split()
+    if tail[-1] == "RECLUSTER" and tail[-2] in ("SUSPEND", "RESUME"):
+        return _status_frame(
+            eng.spark, tail[-2].lower() + " recluster",
+            "noop: no background reclustering service — recluster "
+            "explicitly via materializations.maintenance (Z-order / "
+            "CLUSTER BY layout)")
+    m = re.match(r"(?is)\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+SET\s+"
+                 r"([A-Z_]+)\s*=\s*(?:'((?:[^']|'')*)'|(\S+))\s*;?\s*$", raw)
+    if not m or m.group(2).upper() in (
+            "TBLPROPERTIES", "SERDEPROPERTIES", "LOCATION"):
+        return None
+    tname, pname = m.group(1), m.group(2).upper()
+    val = (m.group(3).replace("''", "'") if m.group(3) is not None
+           else m.group(4))
+    if pname == "COMMENT":
+        # Spark's table property
+        esc = val.replace("'", "''")
+        eng.spark.sql(f"ALTER TABLE {tname} SET TBLPROPERTIES "
+                      f"('comment' = '{esc}')")
+        return driver_frame(eng.spark, [("comment", val)],
+                            "parameter string, value string")
+    if pname == "DATA_RETENTION_TIME_IN_DAYS":
+        return _status_frame(
+            eng.spark, pname.lower(), "noop: retention here is the "
+            "engine's session-scoped UNDROP ledger (last "
+            f"{eng._drop_retention} drops), not a per-table time window")
+    if pname == "CHANGE_TRACKING":
+        raise ValueError(
+            "ALTER TABLE … SET CHANGE_TRACKING: change tracking backs "
+            "STREAM objects, which have no Spark equivalent — use "
+            "Structured Streaming (streaming.stream_incremental_append) "
+            "for change capture"
+        )
+    raise ValueError(
+        f"ALTER TABLE … SET {pname}: unsupported table parameter — "
+        "COMMENT (mapped to the table property) and DATA_RETENTION_TIME_"
+        "IN_DAYS (no-op; see UNDROP retention) are handled; Spark-native "
+        "forms (SET TBLPROPERTIES …) pass through"
+    )
+
+
+# DDL and DML Spark's parquet tables lack, lowered onto the staged
+# rewrite (create_table.py, insert_all.py, merge_stmt.py); each answers
+# one (table, rows_affected) row
+def _swap_with(eng, raw, head):
+    spec = create_table.parse_swap_with(raw)
+    if spec is not None:
+        return _affected_frame(eng.spark,
+                               create_table.run_swap_with(eng.spark, *spec))
+
+
+def _alter_columns(eng, raw, head):
+    spec = merge_stmt.parse_alter_columns(raw)
+    if spec is not None:
+        return _affected_frame(eng.spark,
+                               merge_stmt.run_alter_columns(eng.spark, spec))
+
+
+def _create_or_replace_table(eng, raw, head):
+    # Spark's REPLACE TABLE needs a DSv2 catalog: this rides the
+    # overwrite-write staged swap the table materialization uses
+    spec = create_table.parse_create_or_replace_table(raw)
+    if spec is not None:
+        return _affected_frame(
+            eng.spark, create_table.run_create_or_replace_table(
+                eng.spark, spec, eng.transpiler, eng.execute))
+
+
+def _insert_all(eng, raw, head):
+    spec = insert_all.parse_insert_all(raw)
+    if spec is not None:
+        return _affected_frame(eng.spark, insert_all.run_insert_all(
+            eng.spark, spec, eng.transpiler, eng.execute))
+
+
+def _delete(eng, raw, head):
+    spec = merge_stmt.parse_delete(raw)
+    if spec is not None:
+        return _affected_frame(eng.spark, merge_stmt.run_delete_statement(
+            eng.spark, spec, eng.transpiler))
+
+
+def _update(eng, raw, head):
+    spec = merge_stmt.parse_update(raw)
+    if spec is not None:
+        # UPDATE … FROM is lowered onto the merge machinery
+        run = (merge_stmt.run_merge_statement
+               if isinstance(spec, merge_stmt.MergeSpec)
+               else merge_stmt.run_update_statement)
+        return _affected_frame(eng.spark, run(eng.spark, spec, eng.transpiler))
+
+
+def _merge(eng, raw, head):
+    spec = merge_stmt.parse_merge(raw)
+    if spec is not None:
+        return _affected_frame(eng.spark, merge_stmt.run_merge_statement(
+            eng.spark, spec, eng.transpiler))
+
+
+def _copy_into(eng, raw, head):
+    """COPY INTO a table: named file formats inline, ``FROM @stage``
+    resolves to the stage's local directory, and the statement rides
+    the path-form loader — or, for ``FROM (SELECT $1, … FROM
+    @stage|'<path>')``, the positional file read + transpiled SELECT
+    (copy_into.py)."""
+    if re.search(r"\bFORMAT_NAME\b|FILE_FORMAT\s*=\s*(?!\()", raw,
+                 re.IGNORECASE):
+        raw = file_formats.resolve_format_name(eng, raw)
+    if re.search(r"\bFROM\s+'?@", raw, re.IGNORECASE):
+        raw = stages.resolve_copy_into_stage(eng, raw) or raw
+    tspec = copy_into.parse_transform_copy(raw)
+    if tspec is not None:
+        src = tspec.src.strip("'")
+        if src.startswith("@"):
+            stage, sub = stages._resolve_ref(eng, src)
+            src = os.path.join(stage.path, sub) if sub else stage.path
+        stats = copy_into.run_transform_copy(eng.spark, tspec,
+                                             eng.transpiler, src)
+    else:
+        spec = copy_into.parse_copy_into(raw)
+        if spec is None:
+            return None
+        stats = copy_into.run_copy_into(eng.spark, spec)
+    return driver_frame(
+        eng.spark, [(stats["table"], stats["rows_loaded"], stats["format"])],
+        "table string, rows_loaded long, format string")
+
+
+# A statement's first head word → its handlers, tried in order; each
+# returns the statement's result, or None to pass it on. A statement
+# none of them takes runs IcebreakerEngine._run_query.
+_HANDLERS = {
+    "SET": (IcebreakerEngine._set_session_var,),
+    "UNSET": (IcebreakerEngine._set_session_var,),
+    "SHOW": (_file_format, _stage, _show),
+    "DESC": (_file_format, _stage, _sequence, _describe, _noop),
+    "CREATE": (_file_format, _stage, _sequence, _procedure, _noop,
+               _create_or_replace_table),
+    "DROP": (_file_format, _stage, _sequence, _procedure,
+             IcebreakerEngine._drop_table, _noop),
+    "UNDROP": (IcebreakerEngine._undrop,),
+    "ALTER": (_noop, _alter_session, _alter_table, _swap_with,
+              _alter_columns),
+    "CALL": (_call,),
+    "INSERT": (_insert_all,),
+    "DELETE": (_delete,),
+    "UPDATE": (_update,),
+    "MERGE": (_merge,),
+    "COPY": (_stage, _copy_into),
+    **dict.fromkeys(("BEGIN", "COMMIT", "ROLLBACK", "GRANT", "REVOKE",
+                     "USE"), (_noop,)),
+    **dict.fromkeys(("PUT", "GET", "LIST", "LS", "REMOVE", "RM"),
+                    (_stage,)),
+}

@@ -42,6 +42,7 @@ from __future__ import annotations
 
 from typing import Any, Optional
 
+from .session import driver_frame
 from .transpiler.tokenizer import (
     COMMENT,
     STRING,
@@ -530,10 +531,9 @@ class _Block:
             ) from None
         except _UserRaise as ur:
             raise UncaughtUserException(ur.name, ur.code, ur.msg) from None
-        return self.engine.spark.createDataFrame(
-            [("anonymous block", "completed")],
-            "statement string, status string",
-        )
+        return driver_frame(self.engine.spark,
+                            [("anonymous block", "completed")],
+                            "statement string, status string")
 
     def run_nested(self) -> None:
         """Run as a NESTED block: control-flow signals (_Return /
@@ -1592,10 +1592,9 @@ class _Block:
         end = self._stmt_end(i)
         j = self._code(i + 1)
         if j >= end:
-            raise _Return(self.engine.spark.createDataFrame(
-                [("anonymous block", None)],
-                "statement string, value string",
-            ))
+            raise _Return(driver_frame(self.engine.spark,
+                                       [("anonymous block", None)],
+                                       "statement string, value string"))
         if self._word(j, "TABLE"):
             k = self._code(j + 1)
             if k < end and self.toks[k].is_op("("):

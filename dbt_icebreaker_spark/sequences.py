@@ -39,6 +39,8 @@ from dataclasses import dataclass
 
 import os as _os
 
+from .session import driver_frame
+
 # rows-per-partition capacity of the compact distributed offset
 # (partition << bits | row); override via env when a single statement
 # legitimately carries more rows per partition
@@ -306,7 +308,7 @@ def show_sequences(engine):
     rows = [(s.name, s.start, s.increment, s.next)
             for s in sorted(engine._sequences.values(),
                             key=lambda s: s.name)]
-    return engine.spark.createDataFrame(
-        rows or [],
+    return driver_frame(
+        engine.spark, rows,
         "name string, start bigint, increment bigint, next_value bigint",
     )

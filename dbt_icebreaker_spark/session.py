@@ -17,10 +17,12 @@ though tests run local[32] —
 
 from __future__ import annotations
 
+import functools
 import os
-from typing import Optional
+from typing import Optional, Sequence
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -62,3 +64,30 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark
+
+
+@functools.lru_cache(maxsize=None)
+def _ddl_schema(ddl: str) -> StructType:
+    return DataType.fromDDL(ddl)
+
+
+def driver_frame(
+    spark: SparkSession, rows: Sequence[tuple], schema: "str | StructType"
+) -> DataFrame:
+    """A result the driver already holds (a status row, a registry
+    listing) as a DataFrame. Built from an Arrow table it plans as a
+    LocalRelation, so collecting it runs no Spark job; a Python-list
+    ``createDataFrame`` plans an RDD scan and costs one job per
+    collect. ``schema`` is a DDL string or a StructType; each row is a
+    tuple in its column order."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = _ddl_schema(schema)
+    arrow = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.table(
+        [pa.array(c, f.type) for c, f in zip(columns, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema)

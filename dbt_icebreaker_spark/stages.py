@@ -62,6 +62,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 
+from .file_formats import resolve_format_name
+from .session import driver_frame
+
 _NAME = r"\"[^\"]+\"|[\w.$]+"
 _CREATE_RE = re.compile(
     rf"^\s*CREATE\s+(?P<replace>OR\s+REPLACE\s+)?(?:TEMP(?:ORARY)?\s+)?"
@@ -209,10 +212,6 @@ def _check_create_options(rest: str) -> str | None:
     return ff
 
 
-def _df(engine, rows, schema) -> DataFrame:
-    return engine.spark.createDataFrame(rows, schema)
-
-
 def create_stage(engine, raw: str) -> DataFrame:
     m = _CREATE_RE.match(raw)
     assert m is not None
@@ -221,8 +220,8 @@ def create_stage(engine, raw: str) -> DataFrame:
     reg = _registry(engine)
     if name in reg:
         if m.group("ine"):
-            return _df(
-                engine,
+            return driver_frame(
+                engine.spark,
                 [(f"Stage {name.upper()} already exists, statement "
                   "skipped.",)],
                 "status string",
@@ -237,8 +236,8 @@ def create_stage(engine, raw: str) -> DataFrame:
     path = tempfile.mkdtemp(prefix=f"sf_stage_{name.replace('.', '_')}_")
     reg[name] = Stage(name=name, path=path, created_on=time.time(),
                       file_format=ff)
-    return _df(
-        engine,
+    return driver_frame(
+        engine.spark,
         [(f"Stage area {name.upper()} successfully created.",)],
         "status string",
     )
@@ -262,7 +261,7 @@ def drop_stage(engine, raw: str) -> DataFrame:
             f"DROP STAGE: unknown stage {name!r} (session stages: "
             f"{known}) — use IF EXISTS"
         )
-    return _df(engine, [(msg,)], "status string")
+    return driver_frame(engine.spark, [(msg,)], "status string")
 
 
 def show_stages(engine) -> DataFrame:
@@ -272,8 +271,8 @@ def show_stages(engine) -> DataFrame:
          time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(s.created_on)))
         for s in sorted(reg.values(), key=lambda s: s.name)
     ]
-    return _df(
-        engine, rows,
+    return driver_frame(
+        engine.spark, rows,
         "name string, type string, location string, created_on string",
     )
 
@@ -296,8 +295,8 @@ def describe_stage(engine, raw: str) -> DataFrame:
         ("STAGE_CREATED", "CREATED_ON",
          time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(s.created_on))),
     ]
-    return _df(
-        engine, rows,
+    return driver_frame(
+        engine.spark, rows,
         "parent_property string, property string, value string",
     )
 
@@ -375,8 +374,8 @@ def put_files(engine, raw: str) -> DataFrame:
             shutil.copyfile(f, dst)
         rows.append((base, target, os.path.getsize(f),
                      os.path.getsize(dst), "UPLOADED"))
-    return _df(
-        engine, rows,
+    return driver_frame(
+        engine.spark, rows,
         "source string, target string, source_size long, "
         "target_size long, status string",
     )
@@ -405,7 +404,8 @@ def get_files(engine, raw: str) -> DataFrame:
         shutil.copyfile(full, out)
         rows.append((os.path.basename(rel), os.path.getsize(out),
                      "DOWNLOADED"))
-    return _df(engine, rows, "file string, size long, status string")
+    return driver_frame(engine.spark, rows,
+                        "file string, size long, status string")
 
 
 def list_files(engine, raw: str) -> DataFrame:
@@ -424,8 +424,8 @@ def list_files(engine, raw: str) -> DataFrame:
             time.strftime("%Y-%m-%d %H:%M:%S",
                           time.gmtime(os.path.getmtime(full))),
         ))
-    return _df(
-        engine, rows,
+    return driver_frame(
+        engine.spark, rows,
         "name string, size long, md5 string, last_modified string",
     )
 
@@ -439,7 +439,7 @@ def remove_files(engine, raw: str) -> DataFrame:
     for full, rel in _stage_files(stage, sub, pm.group(1) if pm else None):
         os.remove(full)
         rows.append((f"{stage.name}/{rel}", "removed"))
-    return _df(engine, rows, "name string, result string")
+    return driver_frame(engine.spark, rows, "name string, result string")
 
 
 def resolve_copy_into_stage(engine, raw: str) -> str | None:
@@ -528,8 +528,8 @@ def run_unload(engine, raw: str) -> DataFrame:
         for r, _d, files in os.walk(out_dir) for f in files
         if not f.startswith(("_", "."))
     )
-    return _df(
-        engine, [(n, size)],
+    return driver_frame(
+        engine.spark, [(n, size)],
         "rows_unloaded long, output_bytes long",
     )
 
@@ -630,8 +630,8 @@ def rewrite_select_from_stage(engine, raw: str) -> str | None:
             ))
         counter0[0] += 1
         view = f"__icebreaker_stage_dir_{counter0[0]}"
-        engine.spark.createDataFrame(
-            rows,
+        driver_frame(
+            engine.spark, rows,
             "relative_path string, size long, last_modified string, "
             "md5 string, etag string, file_url string",
         ).createOrReplaceTempView(view)
@@ -725,8 +725,9 @@ def dispatch(engine, raw: str) -> DataFrame | None:
     up = s.upper()
     if _SHOW_RE.match(s):
         return show_stages(engine)
+    # a named FILE_FORMAT (file_formats.py) inlines its options first
     if up.startswith(("CREATE",)) and _CREATE_RE.match(s):
-        return create_stage(engine, s)
+        return create_stage(engine, resolve_format_name(engine, s))
     if up.startswith("DROP") and _DROP_RE.match(s):
         return drop_stage(engine, s)
     if up.startswith(("DESC", "DESCRIBE")) and _DESC_RE.match(s):
@@ -740,5 +741,5 @@ def dispatch(engine, raw: str) -> DataFrame | None:
     if up.startswith(("REMOVE", "RM ")) and _REMOVE_RE.match(s):
         return remove_files(engine, s)
     if _UNLOAD_RE.match(s):
-        return run_unload(engine, s)
+        return run_unload(engine, resolve_format_name(engine, s))
     return None

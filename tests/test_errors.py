@@ -72,6 +72,22 @@ class TestClassifierContract:
             engine.execute("SELECT missing FROM err_src")
         assert ei.value.__cause__ is not None
 
+    def test_call_failure_classified_once(self, engine):
+        """A procedure body runs through a nested execute, which
+        classifies its own failure; the CALL statement's boundary
+        passes that ExecutionError on instead of wrapping it again."""
+        engine.execute(
+            "CREATE OR REPLACE PROCEDURE err_proc() RETURNS STRING "
+            "LANGUAGE SQL AS $$ BEGIN "
+            "LET n INTEGER := (SELECT no_such_col FROM err_src LIMIT 1); "
+            "RETURN 'x'; END $$")
+        with pytest.raises(ExecutionError) as ei:
+            engine.execute("CALL err_proc()").collect()
+        assert ei.value.condition.startswith("UNRESOLVED_COLUMN")
+        assert ei.value.__cause__ is not None
+        assert not isinstance(ei.value.__cause__, ExecutionError)
+        assert type(ei.value.__cause__).__name__ == "AnalysisException"
+
     def test_format_has_error_and_suggestion_sections(self, engine):
         e = _err(engine, "SELECT missing FROM err_src")
         s = str(e)

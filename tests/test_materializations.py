@@ -55,6 +55,27 @@ class TestTableView:
         engine.run_model("t_base", "SELECT 10 AS a")
         assert spark.table("mat_test.t_view").collect()[0].b == 11
 
+    @pytest.mark.parametrize("materialization", ["table", "view"])
+    @pytest.mark.parametrize("sql, expected", [
+        ("SELECT k FROM mat_test.t_live_src WHERE k < $lim",
+         [(0,), (1,), (2,)]),
+        ("SELECT * FROM (SELECT g, v FROM mat_test.t_live_src) "
+         "PIVOT (SUM(v) FOR g IN (ANY ORDER BY g))", [(6, 9)]),
+    ], ids=["session_var", "dynamic_pivot"])
+    def test_model_sql_takes_statement_path(
+            self, spark, engine, materialization, sql, expected):
+        """A view model's SQL runs through execute like a table
+        model's: session variables substitute and dynamic PIVOT
+        resolves on the live session."""
+        engine.run_model(
+            "t_live_src", "SELECT id AS k, IF(id % 2 = 0, 'a', 'b') AS g, "
+            "id AS v FROM range(6)")
+        engine.execute("SET lim = 3")
+        name = f"t_live_{materialization}"
+        engine.run_model(name, sql, materialization)
+        got = sorted(tuple(r) for r in spark.table(f"mat_test.{name}").collect())
+        assert got == expected
+
 
 class TestIncremental:
     """Strategies vs DuckDB recomputation (ref incremental.sql)."""

@@ -371,6 +371,43 @@ class TestTelemetry:
         assert all(r["shuffle_write_bytes"] > 0 for r in recs)
         spark.sql("DROP DATABASE IF EXISTS tele_inc_test CASCADE")
 
+    def test_snapshot_and_seed_record_their_runs(self, spark, tmp_path):
+        """run_snapshot and seed_csv take run_model's run wrapper: each
+        run carries its own job description, is recorded with its
+        harvested metrics, and the caller's description survives."""
+        import datetime
+
+        from dbt_icebreaker_spark import IcebreakerEngine
+        from dbt_icebreaker_spark.observability.telemetry import TelemetryStore
+        from dbt_icebreaker_spark.sources import register_dir
+
+        store = TelemetryStore(path=str(tmp_path / "telemetry.json"))
+        eng = IcebreakerEngine(spark, schema="tele_snap_test", telemetry=store)
+        register_dir(spark, SF)
+        seed = tmp_path / "seed.csv"
+        seed.write_text("k,v\n1,a\n2,b\n")
+        snap = (
+            "SELECT c_custkey, IFF(c_custkey % 7 = 0, c_acctbal + {d}, "
+            "c_acctbal) AS c_acctbal FROM customer"
+        )
+        sc = spark.sparkContext
+        sc.setJobDescription("caller")
+        try:
+            eng.seed_csv("tele_seed", str(seed))
+            for day in (1, 2):
+                eng.run_snapshot(
+                    "tele_snap", snap.format(d=day), unique_key="c_custkey",
+                    strategy="check", check_cols=["c_acctbal"],
+                    now=datetime.datetime(2026, 4, day))
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+        snaps = store.history("tele_snap")
+        assert len(snaps) == 2
+        assert snaps[-1]["shuffle_write_bytes"] > 0
+        assert [r["rows"] for r in store.history("tele_seed")] == [2]
+        spark.sql("DROP DATABASE IF EXISTS tele_snap_test CASCADE")
+
     def test_spill_gate_warning(self, tmp_path):
         from dbt_icebreaker_spark.observability.telemetry import TelemetryStore
 

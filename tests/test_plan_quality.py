@@ -551,6 +551,104 @@ class TestMaterializationJobFloor:
         assert not over, f"jobs per call over the floor: {over} (all: {got})"
 
 
+class TestStatusStatementJobs:
+    """Statements the engine answers from the driver (no-ops, session
+    registries, shaped-but-empty listings) build their result as an
+    Arrow LocalRelation: running one and collecting its result runs no
+    Spark job. A Python-list frame costs one job per collect, and a
+    bare ``SELECT <expr>`` (SET's evaluation) plans an RDD scan."""
+
+    STATEMENTS = (
+        "BEGIN", "COMMIT", "ROLLBACK WORK",
+        "GRANT SELECT ON TABLE t TO ROLE r", "REVOKE ROLE r FROM USER u",
+        "SET jz_v = 5", "SHOW VARIABLES", "UNSET jz_v",
+        "SHOW GRANTS", "SHOW FUTURE GRANTS IN SCHEMA s", "SHOW ROLES",
+        "SHOW TERSE USERS", "SHOW WAREHOUSES", "SHOW TRANSACTIONS",
+        "SHOW LOCKS",
+        "USE WAREHOUSE wh", "USE ROLE r", "CREATE OR REPLACE ROLE r",
+        "DROP USER u", "CREATE WAREHOUSE w", "ALTER WAREHOUSE w SUSPEND",
+        "DESC WAREHOUSE w", "DESCRIBE ROLE r",
+        "ALTER SESSION SET TIMEZONE = 'UTC'",
+        "ALTER SESSION SET QUERY_TAG = 'jobs'",
+        "ALTER TABLE t SUSPEND RECLUSTER",
+        "ALTER TABLE t SET DATA_RETENTION_TIME_IN_DAYS = 1",
+        "CREATE SEQUENCE jz_seq", "SHOW SEQUENCES", "DESC SEQUENCE jz_seq",
+        "DROP SEQUENCE jz_seq",
+        "CREATE STAGE jz_st", "SHOW STAGES", "DESC STAGE jz_st",
+        "LIST @jz_st", "DROP STAGE jz_st",
+        "CREATE FILE FORMAT jz_ff TYPE = CSV", "SHOW FILE FORMATS",
+        "DESC FILE FORMAT jz_ff", "DROP FILE FORMAT jz_ff",
+        "CREATE OR REPLACE PROCEDURE jz_p() RETURNS STRING LANGUAGE SQL "
+        "AS $$ BEGIN RETURN 'x'; END $$",
+        "SHOW PROCEDURES", "DROP PROCEDURE jz_p()",
+        "DESC RESULT LAST_QUERY_ID()",
+    )
+
+    def test_status_statements_run_no_job(self, spark):
+        from dbt_icebreaker_spark import IcebreakerEngine
+
+        eng = IcebreakerEngine(spark, schema="status_jobs")
+        sc = spark.sparkContext
+        got = {}
+        for i, sql in enumerate(self.STATEMENTS):
+            group = f"status-jobs-{i}"
+            sc.setJobGroup(group, sql)
+            try:
+                eng.execute(sql).collect()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is async
+            got[sql] = len(sc.statusTracker().getJobIdsForGroup(group))
+        ran = {k: n for k, n in got.items() if n}
+        assert not ran, f"status statements that ran Spark jobs: {ran}"
+
+
+class TestStatementDispatch:
+    """A statement's head words pick its handlers: a query head
+    (SELECT, WITH) has none, so it reaches the transpiler without
+    being offered to any DML/DDL statement parser."""
+
+    PARSERS = (
+        ("dbt_icebreaker_spark.procedures", "parse_create_procedure"),
+        ("dbt_icebreaker_spark.procedures", "parse_drop_procedure"),
+        ("dbt_icebreaker_spark.procedures", "parse_call"),
+        ("dbt_icebreaker_spark.materializations.create_table",
+         "parse_swap_with"),
+        ("dbt_icebreaker_spark.materializations.create_table",
+         "parse_create_or_replace_table"),
+        ("dbt_icebreaker_spark.materializations.insert_all",
+         "parse_insert_all"),
+        ("dbt_icebreaker_spark.materializations.merge_stmt",
+         "parse_alter_columns"),
+        ("dbt_icebreaker_spark.materializations.merge_stmt", "parse_delete"),
+        ("dbt_icebreaker_spark.materializations.merge_stmt", "parse_update"),
+        ("dbt_icebreaker_spark.materializations.merge_stmt", "parse_merge"),
+        ("dbt_icebreaker_spark.materializations.copy_into",
+         "parse_transform_copy"),
+        ("dbt_icebreaker_spark.materializations.copy_into",
+         "parse_copy_into"),
+    )
+
+    @pytest.mark.parametrize("sql", [
+        "SELECT 1 AS a, 'x' AS b",
+        "/* lead */ WITH c AS (SELECT 2 AS a) SELECT a FROM c",
+    ])
+    def test_queries_skip_statement_parsers(self, spark, monkeypatch, sql):
+        import importlib
+
+        from dbt_icebreaker_spark import IcebreakerEngine
+
+        eng = IcebreakerEngine(spark, schema="dispatch_test")
+
+        def boom(*a, **kw):
+            raise AssertionError("a query reached a statement parser")
+
+        for mod, name in self.PARSERS:
+            monkeypatch.setattr(importlib.import_module(mod), name, boom)
+        assert len(eng.execute(sql).collect()) == 1
+
+
 class TestRound3OpPlans:
     def test_quality_filter_scans_once_no_presort(self, spark, qs):
         """filter_corpus is scan-speed: the per-doc flags are one
