@@ -759,22 +759,15 @@ def run_call(engine, name: str, pos_args: list[str],
             )
         supplied[nm] = sql
     init_vars = {}
-    prev = engine._record_suspended
-    engine._record_suspended = True
-    try:
-        for a in proc.args:
-            sql = supplied.get(a.name, a.default_sql)
-            if sql is None:
-                raise ProcedureError(
-                    f"CALL {name}: missing argument {a.name!r} "
-                    f"({a.sf_type})"
-                )
-            rows = engine.execute(
-                f"SELECT CAST(({sql}) AS {a.spark_type}) AS __v"
-            ).collect()
-            init_vars[a.name] = rows[0][0] if rows else None
-    finally:
-        engine._record_suspended = prev
+    for a in proc.args:
+        sql = supplied.get(a.name, a.default_sql)
+        if sql is None:
+            raise ProcedureError(
+                f"CALL {name}: missing argument {a.name!r} "
+                f"({a.sf_type})"
+            )
+        init_vars[a.name] = engine._eval_scalar(
+            f"CAST(({sql}) AS {a.spark_type})")
     body = proc.body
     if not is_scripting_block(body):
         body = f"BEGIN\n{body.strip()}\n;\nEND"

@@ -707,16 +707,38 @@ class IcebreakerEngine:
         expr = render(toks[j + 1:]).strip().rstrip(";")
         if not expr:
             return None
-        # over a one-row VALUES, which folds to a local relation: a bare
-        # SELECT plans an RDD scan and costs a Spark job per SET
-        val = self.spark.sql(self.transpiler.to_spark(
-            f"SELECT {expr}\n"
-            "FROM (VALUES (0)) AS __icebreaker_one(__icebreaker_c)"
-        )).collect()[0][0]
-        lit = self._render_literal(val)
+        lit = self._render_literal(self._eval_scalar(expr))
         self._session_vars[name.lower()] = lit
         return driver_frame(self.spark, [(name, lit)],
                             "variable string, value string")
+
+    def _scalar_query(self, expr: str, name: str = "__v") -> DataFrame:
+        """``SELECT <expr> AS <name>`` over a one-row VALUES, which
+        folds to a local relation: collecting it runs no Spark job
+        unless the expression reads a table (a bare SELECT plans an
+        RDD scan, one job per collect)."""
+        sql = f"SELECT {expr} AS {name}"
+        if "NEXTVAL" in sql.upper():
+            # drawn as the FROM-less SELECT it is (one literal per
+            # NEXTVAL): after the FROM below it would read as a
+            # multi-row query and take the distributed id expression
+            sql = sequences.substitute_nextval(self, sql)
+        return self.execute(
+            f"{sql}\nFROM (VALUES (0)) AS __icebreaker_one(__icebreaker_c)"
+        )
+
+    def _eval_scalar(self, expr: str):
+        """Value of one scalar Snowflake expression: SET's right-hand
+        side, a scripting condition or assignment, a CALL argument.
+        An engine internal, so it leaves the RESULT_SCAN history
+        alone: LAST_QUERY_ID keeps naming the user's last statement."""
+        prev = self._record_suspended
+        self._record_suspended = True
+        try:
+            rows = self._scalar_query(expr).collect()
+        finally:
+            self._record_suspended = prev
+        return rows[0][0] if rows else None
 
     # -------------------------------------------------------- execute
     def sql_to_spark(self, sql: str) -> str:
@@ -1641,8 +1663,6 @@ _SHOW_REFUSE = {
              "Spark has no task objects",
     "PIPES": "a Structured Streaming file source for continuous loading "
              "— Spark has no pipe objects",
-    "STAGES": "direct filesystem/object-store paths — Spark has no stage "
-              "objects",
     "ALERTS": "external monitoring over the telemetry store — Spark has "
               "no alert objects",
 }

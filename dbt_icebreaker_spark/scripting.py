@@ -504,20 +504,8 @@ class _Block:
             out.append(t)
         return render(out).strip()
 
-    def _eval_scalar(self, expr_sql: str):
-        # interpreter-internal probe: must not pollute the engine's
-        # RESULT_SCAN history (LAST_QUERY_ID inside a block refers to
-        # the user's last statement, not an IF-condition evaluation)
-        prev = self.engine._record_suspended
-        self.engine._record_suspended = True
-        try:
-            rows = self.engine.execute(f"SELECT {expr_sql} AS __v").collect()
-        finally:
-            self.engine._record_suspended = prev
-        return rows[0][0] if rows else None
-
     def _eval_bool(self, expr_sql: str) -> bool:
-        return bool(self._eval_scalar(f"({expr_sql}) IS TRUE"))
+        return bool(self.engine._eval_scalar(f"({expr_sql}) IS TRUE"))
 
     # ------------------------------------------------------ sections
     def run(self):
@@ -810,7 +798,7 @@ class _Block:
                         f"{self._line_of(i)}): DEFAULT/:= without a "
                         "value expression"
                     )
-                val = self._eval_scalar(default_sql)
+                val = self.engine._eval_scalar(default_sql)
             self.vars[name_t.text.lower()] = val
             i = self._code(end + 1)
         return i
@@ -1009,7 +997,7 @@ class _Block:
                     f"assignment to undeclared variable {t.text!r} — "
                     "use LET or DECLARE first"
                 )
-            self.vars[t.text.lower()] = self._eval_scalar(
+            self.vars[t.text.lower()] = self.engine._eval_scalar(
                 self._sub_expr(self.toks[j + 1:end]))
             return end + 1
         # plain SQL statement → the engine (with :binds). QUERY-class
@@ -1060,7 +1048,7 @@ class _Block:
                 "LET … CURSOR belongs in the DECLARE section "
                 "(DECLARE name CURSOR FOR <query>)"
             )
-        self.vars[name_t.text.lower()] = self._eval_scalar(
+        self.vars[name_t.text.lower()] = self.engine._eval_scalar(
             self._sub_expr(seg[dk + 1:]))
         return end + 1
 
@@ -1162,8 +1150,8 @@ class _Block:
         if not self._word(j2, closer):
             raise ScriptingError(f"FOR: expected END {closer}")
         after = self._stmt_end(j2) + 1
-        lo_v = int(self._eval_scalar(lo_sql))
-        hi_v = int(self._eval_scalar(hi_sql))
+        lo_v = int(self.engine._eval_scalar(lo_sql))
+        hi_v = int(self.engine._eval_scalar(hi_sql))
         rng = range(hi_v, lo_v - 1, -1) if reverse else range(lo_v, hi_v + 1)
         if len(rng) > _LOOP_CAP:
             raise ScriptingError(
@@ -1547,7 +1535,7 @@ class _Block:
 
             lo, hi = operand_span
             op_sql = self._sub_expr(self.toks[lo:hi])
-            val = self._eval_scalar(op_sql)
+            val = self.engine._eval_scalar(op_sql)
             if val is None or isinstance(
                 val, (bool, int, float, str)
             ) or type(val).__name__ == "Decimal":
@@ -1616,7 +1604,7 @@ class _Block:
                 inner = self._sub_binds(self.toks[k + 1:close])
                 raise _Return(self.engine.execute(inner))
         expr = self._sub_expr(self.toks[j:end])
-        raise _Return(self.engine.execute(f"SELECT ({expr}) AS value"))
+        raise _Return(self.engine._scalar_query(f"({expr})", "value"))
 
 
 def run_block(engine, sql: str, init_vars: Optional[dict] = None):

@@ -222,11 +222,12 @@ def substitute_nextval(engine, raw: str) -> str:
             "be constant, so the sequence cannot be drawn per INSERT "
             "— draw it in the insert instead: INSERT INTO t "
             "SELECT <seq>.NEXTVAL, … (or add the column in a CTAS)")
-    # single-row shape: a SELECT with no FROM/VALUES anywhere
+    # single-row shape: a SELECT, or SET's one value, with no
+    # FROM/VALUES anywhere
     ups = {t.upper for t in toks if t.kind == "word"}
     first_word = next(
         (t.upper for t in toks if t.kind == "word"), "")
-    single_row = (first_word == "SELECT" and "FROM" not in ups
+    single_row = (first_word in ("SELECT", "SET") and "FROM" not in ups
                   and "VALUES" not in ups)
     # per-sequence occurrence numbering
     counts: dict[str, int] = {}

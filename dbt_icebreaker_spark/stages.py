@@ -77,7 +77,13 @@ _DROP_RE = re.compile(
     r"\s*;?\s*$",
     re.IGNORECASE,
 )
-_SHOW_RE = re.compile(r"^\s*SHOW\s+STAGES\s*;?\s*$", re.IGNORECASE)
+# TERSE is a column-subset hint and the registry is one scope, so the
+# one listing answers TERSE and any IN scope
+_SHOW_RE = re.compile(
+    r"^\s*SHOW\s+(?:TERSE\s+)?STAGES"
+    r"(?:\s+LIKE\s+'(?P<like>(?:[^']|'')*)')?(?:\s+IN\s+[^;]*?)?\s*;?\s*$",
+    re.IGNORECASE,
+)
 _DESC_RE = re.compile(
     rf"^\s*DESC(?:RIBE)?\s+STAGE\s+(?P<name>{_NAME})\s*;?\s*$",
     re.IGNORECASE,
@@ -264,12 +270,21 @@ def drop_stage(engine, raw: str) -> DataFrame:
     return driver_frame(engine.spark, [(msg,)], "status string")
 
 
-def show_stages(engine) -> DataFrame:
+def show_stages(engine, like: str | None = None) -> DataFrame:
+    """The session's stages, by name; ``like`` is a SQL LIKE pattern
+    on the name, matched case-insensitively as Snowflake does."""
     reg = _registry(engine)
+    keep = None
+    if like is not None:
+        keep = re.compile("".join(
+            ".*" if c == "%" else "." if c == "_" else re.escape(c)
+            for c in like.replace("''", "'")
+        ), re.IGNORECASE | re.DOTALL).fullmatch
     rows = [
         (s.name, "INTERNAL", s.path,
          time.strftime("%Y-%m-%d %H:%M:%S", time.gmtime(s.created_on)))
         for s in sorted(reg.values(), key=lambda s: s.name)
+        if keep is None or keep(s.name)
     ]
     return driver_frame(
         engine.spark, rows,
@@ -723,8 +738,9 @@ def dispatch(engine, raw: str) -> DataFrame | None:
     a stage statement (caller continues normal dispatch)."""
     s = raw.lstrip()
     up = s.upper()
-    if _SHOW_RE.match(s):
-        return show_stages(engine)
+    m = _SHOW_RE.match(s)
+    if m:
+        return show_stages(engine, m.group("like"))
     # a named FILE_FORMAT (file_formats.py) inlines its options first
     if up.startswith(("CREATE",)) and _CREATE_RE.match(s):
         return create_stage(engine, resolve_format_name(engine, s))

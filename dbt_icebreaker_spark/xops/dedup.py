@@ -621,21 +621,16 @@ def embedding_neardup_pairs(
     """Near-duplicate pairs by embedding cosine ≥ threshold.
 
     Brute-force all-pairs via self-join (correct baseline; the
-    LSH-bucketed scale path lives in similarity.random_hyperplane_lsh).
-    Dot products run JVM-side with zip_with/aggregate in double —
+    LSH-bucketed scale path is similarity.lsh_topk). The vectors and
+    the cosine are similarity's one rendering: JVM-side double math,
     deterministic left-to-right summation, oracle-reproducible.
     """
+    from .similarity import _cosine_sql, _vectors
+
     base = df
     if max_id is not None:
         base = base.filter(F.col(id_col) < max_id)
-    v = base.select(
-        F.col(id_col).alias("vid"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-    )
-    v = v.withColumn(
-        "norm",
-        F.sqrt(F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x)),
-    )
+    v = _vectors(base, id_col, vec_col, "vid")
     # the pair join is a broadcast nested loop whose cosine condition
     # contains higher-order functions (CodegenFallback → interpreted,
     # the dominant per-pair cost) — spread the STREAM side across the
@@ -656,17 +651,12 @@ def embedding_neardup_pairs(
         a = a.repartition(par, F.col("vid"))
     a = a.alias("a")
     b = v.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.vec"), F.col("b.vec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(b, F.col("a.vid") < F.col("b.vid"))
         .select(
             F.col("a.vid").cast("long").alias("vec_a"),
             F.col("b.vid").cast("long").alias("vec_b"),
-            (dot / (F.col("a.norm") * F.col("b.norm"))).alias("cosine"),
+            F.expr(_cosine_sql("a.vid", "b.vid")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

@@ -5,32 +5,110 @@ Scale path: random-hyperplane LSH bucketing — candidates only within
 matching buckets, then exact re-rank. At 100 TB the bucketed join
 replaces the broadcast cross-join; bucket count scales with corpus
 size so per-bucket work stays bounded.
+
+Each vector primitive has ONE rendering, a SQL fragment: the
+per-row vector relation (cast to double + L2 norm, ``_vectors_sql``),
+the float dot and cosine (``_dot_sql``, ``_cosine_sql``), the
+squared-L2 distances to every centroid (``_cell_dists_sql``) and the
+per-query top-k (``_topk_sql``). spark.sql statements interpolate
+them; DataFrame compositions wrap the expressions in F.expr and run
+the relations through spark.sql with the DataFrame as an argument.
+The other fragments only name the columns ``_vectors_sql`` projects
+(``<out>``, ``<out>_vec``, ``<out>_norm``), so user column names enter
+the SQL only through ``_vectors_sql``'s arguments.
 """
 
 from __future__ import annotations
 
-import math
-
 from typing import Optional
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _bq
 
 
-def _as_double_vec(df: DataFrame, id_col: str, vec_col: str, out_id: str) -> DataFrame:
-    v = df.select(
-        F.col(id_col).alias(out_id),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(f"{out_id}_vec"),
+def _vectors_sql(src: str, id_col: str, vec_col: str, out: str,
+                 extra: str = "") -> str:
+    """(``out``, [extra,] ``out``_vec, ``out``_norm) per row of ``src``:
+    the vector as array<double> and its L2 norm, computed once per row
+    BEFORE any pair join, so the pair stage only reads them. ``extra``
+    is further select-list text carried along (each item followed by
+    a comma)."""
+    return f"""
+        SELECT *, sqrt(aggregate({out}_vec, 0.0D, (acc, x) -> acc + x * x))
+                  AS {out}_norm
+        FROM (SELECT {_bq(id_col)} AS {out}, {extra}
+                     transform({_bq(vec_col)}, x -> CAST(x AS DOUBLE))
+                       AS {out}_vec
+              FROM {src})
+    """
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str, out: str,
+             extra: str = "") -> DataFrame:
+    return df.sparkSession.sql(
+        _vectors_sql("{df}", id_col, vec_col, out, extra), df=df
     )
-    return v.withColumn(
-        f"{out_id}_norm",
-        F.sqrt(
-            F.aggregate(
-                F.col(f"{out_id}_vec"), F.lit(0.0), lambda acc, x: acc + x * x
-            )
-        ),
+
+
+def _dot_sql(a: str, b: str) -> str:
+    """Float dot product of two array<double> expressions — JVM-side,
+    left-to-right summation, so the DuckDB oracles reproduce it."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
+            "0.0D, (acc, x) -> acc + x)")
+
+
+def _cosine_sql(a: str, b: str) -> str:
+    """Cosine of the ``a`` and ``b`` rows of two ``_vectors_sql``
+    relations (``a``/``b`` name their id columns)."""
+    return f"{_dot_sql(f'{a}_vec', f'{b}_vec')} / ({a}_norm * {b}_norm)"
+
+
+# the k-means centroid list, one row: what every assignment broadcasts
+_CELLS_SQL = "collect_list(named_struct('cell', cell, 'centroid', centroid))"
+
+
+def _cell_dists_sql(vec: str) -> str:
+    """array<(dist, cell)>: squared-L2 distance from ``vec`` to every
+    centroid of the broadcast ``cs`` list. Structs compare field by
+    field, so array_min / array_sort order by distance, ties by cell
+    id — deterministic."""
+    return (
+        "transform(cs, c -> named_struct('dist', "
+        f"aggregate(zip_with({vec}, c.centroid, (x, y) -> (x - y) * (x - y)),"
+        " 0.0D, (acc, d) -> acc + d), 'cell', c.cell))"
+    )
+
+
+def _nearest_cell_sql(vec: str) -> str:
+    return f"array_min({_cell_dists_sql(vec)}).cell"
+
+
+_PAIR_IDS = ("CAST(query_id AS BIGINT) AS query_id, "
+             "CAST(neighbor_id AS BIGINT) AS neighbor_id")
+
+
+def _topk_sql(scored: str, k: int, score: str = "cosine",
+              ids: str = _PAIR_IDS) -> str:
+    """Per-query top-k of a (query_id, neighbor_id, ``score``, …)
+    relation: rank by score, ties broken by neighbor_id. Output
+    (``ids``, score, rank INT)."""
+    return f"""
+        SELECT {ids}, {score}, CAST(rank AS INT) AS rank
+        FROM (SELECT *,
+                     ROW_NUMBER() OVER (PARTITION BY query_id
+                                        ORDER BY {score} DESC,
+                                                 neighbor_id ASC) AS rank
+              FROM {scored})
+        WHERE rank <= {k}
+    """
+
+
+def _topk(scored: DataFrame, k: int, score: str = "cosine",
+          ids: str = _PAIR_IDS) -> DataFrame:
+    return scored.sparkSession.sql(
+        _topk_sql("{scored}", k, score, ids), scored=scored
     )
 
 
@@ -52,41 +130,35 @@ def cosine_topk(
     One spark.sql statement (one Catalyst analysis pass — see
     dedup.minhash_lsh_pairs), oracle-locked via x06.
     """
-
-    def _vec_cte(src: str, out_id: str) -> str:
-        return f"""
-          SELECT {out_id}, {out_id}_vec,
-                 sqrt(aggregate({out_id}_vec, 0.0D,
-                                (acc, x) -> acc + x * x)) AS {out_id}_norm
-          FROM (SELECT {_bq(id_col)} AS {out_id},
-                       transform({_bq(vec_col)}, x -> CAST(x AS DOUBLE))
-                         AS {out_id}_vec
-                FROM {src})
-        """
-
     sql = f"""
-        WITH q AS ({_vec_cte("{queries}", "query_id")}),
-        c AS ({_vec_cte("{corpus}", "neighbor_id")}),
+        WITH q AS ({_vectors_sql("{queries}", id_col, vec_col, "query_id")}),
+        c AS ({_vectors_sql("{corpus}", id_col, vec_col, "neighbor_id")}),
         scored AS (
           SELECT /*+ BROADCAST(q) */ query_id, neighbor_id,
-                 aggregate(zip_with(query_id_vec, neighbor_id_vec,
-                                    (x, y) -> x * y),
-                           0.0D, (acc, x) -> acc + x)
-                 / (query_id_norm * neighbor_id_norm) AS cosine
+                 {_cosine_sql("query_id", "neighbor_id")} AS cosine
           FROM c JOIN q ON neighbor_id != query_id
         )
-        SELECT CAST(query_id AS BIGINT) AS query_id,
-               CAST(neighbor_id AS BIGINT) AS neighbor_id,
-               cosine,
-               CAST(rank AS INT) AS rank
-        FROM (SELECT query_id, neighbor_id, cosine,
-                     ROW_NUMBER() OVER (PARTITION BY query_id
-                                        ORDER BY cosine DESC,
-                                                 neighbor_id ASC) AS rank
-              FROM scored)
-        WHERE rank <= {k}
+        {_topk_sql("scored", k)}
     """
     return corpus.sparkSession.sql(sql, corpus=corpus, queries=queries)
+
+
+def _bucketed(df: DataFrame, id_col: str, vec_col: str, out: str,
+              n_planes: int, dim: int, seed: int) -> DataFrame:
+    """(``out``, bucket, ``out``_vec, ``out``_norm): the vectors of
+    ``df`` with their random-hyperplane bucket."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    planes = rng.standard_normal((n_planes, dim)).tolist()
+    planes_lit = F.array(
+        *[F.array(*[F.lit(float(x)) for x in p]) for p in planes]
+    )
+    bits = (f"array_join(transform(planes, p -> CASE WHEN "
+            f"{_dot_sql(f'{out}_vec', 'p')} > 0 THEN '1' ELSE '0' END), '')")
+    v = _vectors(df, id_col, vec_col, out).withColumn("planes", planes_lit)
+    return v.select(out, F.expr(bits).alias("bucket"), f"{out}_vec",
+                    f"{out}_norm")
 
 
 def hyperplane_buckets(
@@ -107,33 +179,9 @@ def hyperplane_buckets(
     bucketing from the same (seed, n_planes, dim) literals (the x11
     oracle does).
     """
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim)).tolist()
-    planes_lit = F.array(
-        *[F.array(*[F.lit(float(x)) for x in p]) for p in planes]
-    )
-    v = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("vec"),
-        planes_lit.alias("planes"),
-    )
-    bits = F.transform(
-        F.col("planes"),
-        lambda p: F.when(
-            F.aggregate(
-                F.zip_with(F.col("vec"), p, lambda x, y: x * y),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-            > 0,
-            F.lit("1"),
-        ).otherwise(F.lit("0")),
-    )
-    return v.select(
-        F.col(id_col), F.array_join(bits, "").alias("bucket"), F.col("vec")
-    )
+    b = _bucketed(df, id_col, vec_col, "vid", n_planes, dim, seed)
+    return b.select(F.col("vid").alias(id_col), "bucket",
+                    F.col("vid_vec").alias("vec"))
 
 
 def lsh_topk(
@@ -157,24 +205,9 @@ def lsh_topk(
     engines at ~1e-15, so rounding makes the ranking reproducible
     engine-to-engine — which is what lets the corpus entry carry a
     DuckDB oracle for an approximate operator."""
-    cb = hyperplane_buckets(corpus, id_col, vec_col, n_planes, dim, seed)
-    qb = hyperplane_buckets(queries, id_col, vec_col, n_planes, dim, seed)
-    qb = qb.select(
-        F.col(id_col).alias("query_id"),
-        F.col("bucket"),
-        F.col("vec").alias("qvec"),
-    )
-    cb = cb.select(
-        F.col(id_col).alias("neighbor_id"), F.col("bucket"), F.col("vec").alias("cvec")
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("qvec"), F.col("cvec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    qnorm = F.sqrt(F.aggregate(F.col("qvec"), F.lit(0.0), lambda a, x: a + x * x))
-    cnorm = F.sqrt(F.aggregate(F.col("cvec"), F.lit(0.0), lambda a, x: a + x * x))
-    cos = dot / (qnorm * cnorm)
+    cb = _bucketed(corpus, id_col, vec_col, "neighbor_id", n_planes, dim, seed)
+    qb = _bucketed(queries, id_col, vec_col, "query_id", n_planes, dim, seed)
+    cos = F.expr(_cosine_sql("query_id", "neighbor_id"))
     if round_to is not None:
         cos = F.round(cos, round_to)
     scored = (
@@ -182,17 +215,7 @@ def lsh_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("neighbor_id").cast("long"),
-            "cosine",
-            F.col("rank").cast("int"),
-        )
-    )
+    return _topk(scored, k)
 
 
 def kmeans_centroids(
@@ -235,11 +258,6 @@ def kmeans_centroids(
     argmin — the one cascade point in an otherwise deterministic
     pipeline (same defense as lsh_topk.round_to).
     """
-    argmin = (
-        "array_min(transform(cs, c -> named_struct('dist', "
-        "aggregate(zip_with(bid_vec, c.centroid, (x, y) -> (x - y) * (x - y)),"
-        " 0.0D, (acc, d) -> acc + d), 'cell', c.cell))).cell"
-    )
     mean_expr = (
         "avg(x)" if centroid_round is None
         else f"round(avg(x), {centroid_round})"
@@ -248,17 +266,14 @@ def kmeans_centroids(
     prev = "init"
     for i in range(1, iters + 1):
         ctes.append(f""",
-        cents{i} AS (
-          SELECT collect_list(named_struct('cell', cell, 'centroid', centroid)) AS cs
-          FROM {prev}
-        ),
+        cents{i} AS (SELECT {_CELLS_SQL} AS cs FROM {prev}),
         centroids{i} AS (
           SELECT cell,
                  transform(array_sort(collect_list(named_struct('pos', pos, 'm', m))),
                            s -> s.m) AS centroid
           FROM (SELECT cell, {mean_expr} AS m, pos
                 FROM (SELECT cell, pos, x
-                      FROM (SELECT {argmin} AS cell, bid_vec
+                      FROM (SELECT {_nearest_cell_sql("bid_vec")} AS cell, bid_vec
                             FROM (SELECT /*+ BROADCAST(c) */ bid_vec, cs
                                   FROM v CROSS JOIN cents{i} c)) z
                       LATERAL VIEW posexplode(bid_vec) t AS pos, x)
@@ -267,11 +282,7 @@ def kmeans_centroids(
         )""")
         prev = f"centroids{i}"
     sql = f"""
-        WITH v AS (
-          SELECT {_bq(id_col)} AS bid,
-                 transform({_bq(vec_col)}, x -> CAST(x AS DOUBLE)) AS bid_vec
-          FROM {{base}}
-        ),
+        WITH v AS ({_vectors_sql("{base}", id_col, vec_col, "bid")}),
         init AS (
           SELECT CAST(ROW_NUMBER() OVER (ORDER BY __ord) AS INT) AS cell,
                  bid_vec AS centroid
@@ -283,22 +294,20 @@ def kmeans_centroids(
     return base.sparkSession.sql(sql, base=base)
 
 
-def _nearest_cell(cells_col, vec_col):
-    """argmin_{cell} squared-L2(vec, centroid) as a single array
-    aggregate — evaluated per row against the broadcast centroid list,
-    ties broken by cell id for determinism."""
-    scored = F.transform(
-        cells_col,
-        lambda c: F.struct(
-            F.aggregate(
-                F.zip_with(vec_col, c["centroid"], lambda x, y: (x - y) * (x - y)),
-                F.lit(0.0),
-                lambda acc, d: acc + d,
-            ).alias("dist"),
-            c["cell"].alias("cell"),
-        ),
-    )
-    return F.array_min(scored)["cell"]
+def _cells_and_members(corpus: DataFrame, id_col: str, vec_col: str,
+                       out: str, n_cells: int, iters: int,
+                       centroid_round: Optional[int]):
+    """(cents, members): the one-row k-means centroid list ``cs`` and
+    every corpus vector (``_vectors`` columns) with its nearest cell —
+    the centroid list is broadcast, so assignment adds no shuffle."""
+    cents = kmeans_centroids(
+        corpus, id_col, vec_col, n_cells, iters, centroid_round=centroid_round
+    ).agg(F.expr(f"{_CELLS_SQL} AS cs"))
+    members = _vectors(corpus, id_col, vec_col, out).crossJoin(
+        F.broadcast(cents)
+    ).select(out, f"{out}_vec", f"{out}_norm",
+             F.expr(_nearest_cell_sql(f"{out}_vec")).alias("cell"))
+    return cents, members
 
 
 def ivf_topk(
@@ -326,82 +335,26 @@ def ivf_topk(
     per-query top-k window over candidates. Output: (query_id,
     neighbor_id, cosine, rank).
     """
-    centroids = kmeans_centroids(
-        corpus, id_col, vec_col, n_cells, iters, centroid_round=centroid_round
+    cents, inv = _cells_and_members(
+        corpus, id_col, vec_col, "neighbor_id", n_cells, iters, centroid_round
     )
-    cents = centroids.groupBy().agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cs")
-    )
-    c = _as_double_vec(corpus, id_col, vec_col, "neighbor_id")
-    inv = c.crossJoin(F.broadcast(cents)).select(
-        "neighbor_id",
-        "neighbor_id_vec",
-        "neighbor_id_norm",
-        _nearest_cell(F.col("cs"), F.col("neighbor_id_vec")).alias("cell"),
-    )
-    q = _as_double_vec(queries, id_col, vec_col, "query_id")
-    probed = (
-        q.crossJoin(F.broadcast(cents))
-        .select(
-            "query_id",
-            "query_id_vec",
-            "query_id_norm",
-            F.explode(
-                F.slice(
-                    F.transform(
-                        F.array_sort(
-                            F.transform(
-                                F.col("cs"),
-                                lambda cc: F.struct(
-                                    F.aggregate(
-                                        F.zip_with(
-                                            F.col("query_id_vec"),
-                                            cc["centroid"],
-                                            lambda x, y: (x - y) * (x - y),
-                                        ),
-                                        F.lit(0.0),
-                                        lambda acc, d: acc + d,
-                                    ).alias("dist"),
-                                    cc["cell"].alias("cell"),
-                                ),
-                            )
-                        ),
-                        lambda s: s["cell"],
-                    ),
-                    1,
-                    n_probe,
-                )
-            ).alias("cell"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(
-            F.col("query_id_vec"), F.col("neighbor_id_vec"), lambda x, y: x * y
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    cos_expr = dot / (F.col("query_id_norm") * F.col("neighbor_id_norm"))
+    probe = (f"slice(transform(array_sort({_cell_dists_sql('query_id_vec')}),"
+             f" s -> s.cell), 1, {n_probe})")
+    probed = _vectors(queries, id_col, vec_col, "query_id").crossJoin(
+        F.broadcast(cents)
+    ).select("query_id", "query_id_vec", "query_id_norm",
+             F.explode(F.expr(probe)).alias("cell"))
+    cos = F.expr(_cosine_sql("query_id", "neighbor_id"))
     if round_to is not None:
         # round BEFORE ranking so cross-engine summation noise cannot
         # swap near-tie ranks (the x11/lsh_topk defense)
-        cos_expr = F.round(cos_expr, round_to)
+        cos = F.round(cos, round_to)
     scored = (
         probed.join(inv, "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", cos_expr.alias("cosine"))
+        .select("query_id", "neighbor_id", cos.alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("neighbor_id").cast("long"),
-            "cosine",
-            F.col("rank").cast("int"),
-        )
-    )
+    return _topk(scored, k)
 
 
 def semantic_dedup(
@@ -433,26 +386,11 @@ def semantic_dedup(
 
     Output: (id, cell, keep) — one row per input vector.
     """
-    centroids = kmeans_centroids(
-        corpus, id_col, vec_col, n_cells, iters, centroid_round=centroid_round
-    )
-    cents = centroids.groupBy().agg(
-        F.collect_list(F.struct("cell", "centroid")).alias("cs")
-    )
-    v = _as_double_vec(corpus, id_col, vec_col, "vid")
-    assigned = v.crossJoin(F.broadcast(cents)).select(
-        "vid",
-        "vid_vec",
-        "vid_norm",
-        _nearest_cell(F.col("cs"), F.col("vid_vec")).alias("cell"),
+    _, assigned = _cells_and_members(
+        corpus, id_col, vec_col, "vid", n_cells, iters, centroid_round
     )
     a = assigned.alias("a")
     b = assigned.alias("b")
-    dot = F.aggregate(
-        F.zip_with(F.col("a.vid_vec"), F.col("b.vid_vec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     # a vector is dropped when ANY smaller-id same-cell vector sits
     # within the threshold — semi join, not pair materialization, so
     # the output stays one row per vector no matter how dense the
@@ -463,7 +401,7 @@ def semantic_dedup(
             (F.col("a.cell") == F.col("b.cell"))
             & (F.col("b.vid") < F.col("a.vid")),
         )
-        .filter(dot / (F.col("a.vid_norm") * F.col("b.vid_norm")) >= threshold)
+        .filter(F.expr(_cosine_sql("a.vid", "b.vid")) >= threshold)
         .select(F.col("a.vid").alias("vid"))
         .distinct()
         .withColumn("__dropped", F.lit(True))
@@ -499,33 +437,13 @@ def hard_negatives(
     (query_id, query_label, neighbor_id, neighbor_label, cosine,
     rank), ties broken by neighbor_id.
     """
-    def _vec_with_label(df: DataFrame, out_id: str, lbl: str) -> DataFrame:
-        # one projection carries id + vec + norm + label — a join back
-        # to the source just for the label would shuffle the full
-        # corpus before any scoring work
-        v = df.select(
-            F.col(id_col).alias(out_id),
-            F.col(label_col).alias(lbl),
-            F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-                f"{out_id}_vec"
-            ),
-        )
-        return v.withColumn(
-            f"{out_id}_norm",
-            F.sqrt(
-                F.aggregate(
-                    F.col(f"{out_id}_vec"), F.lit(0.0), lambda acc, x: acc + x * x
-                )
-            ),
-        )
-
-    q = _vec_with_label(queries, "query_id", "query_label")
-    c = _vec_with_label(corpus, "neighbor_id", "neighbor_label")
-    dot = F.aggregate(
-        F.zip_with(F.col("query_id_vec"), F.col("neighbor_id_vec"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    # the label rides the vector projection — a join back to the
+    # source just for the label would shuffle the full corpus before
+    # any scoring work
+    q = _vectors(queries, id_col, vec_col, "query_id",
+                 f"{_bq(label_col)} AS query_label,")
+    c = _vectors(corpus, id_col, vec_col, "neighbor_id",
+                 f"{_bq(label_col)} AS neighbor_label,")
     scored = (
         c.join(
             F.broadcast(q),
@@ -539,25 +457,32 @@ def hard_negatives(
             "query_label",
             "neighbor_id",
             "neighbor_label",
-            (dot / (F.col("query_id_norm") * F.col("neighbor_id_norm"))).alias("cosine"),
+            F.expr(_cosine_sql("query_id", "neighbor_id")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("query_label").cast("int"),
-            F.col("neighbor_id").cast("long"),
-            F.col("neighbor_label").cast("int"),
-            "cosine",
-            F.col("rank").cast("int"),
-        )
-    )
+    return _topk(scored, k, ids=(
+        "CAST(query_id AS BIGINT) AS query_id, "
+        "CAST(query_label AS INT) AS query_label, "
+        "CAST(neighbor_id AS BIGINT) AS neighbor_id, "
+        "CAST(neighbor_label AS INT) AS neighbor_label"
+    ))
 
 
 # ------------------------------------------------------------- int8 PQ-lite
+def _int8(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(vid, vid_vec, scale, qvec): each vector, its scale and its
+    int8 codes, from one projection of ``df``."""
+    v = _vectors(df, id_col, vec_col, "vid").select(
+        "vid", "vid_vec",
+        F.expr("array_max(transform(vid_vec, x -> abs(x))) AS scale"),
+    )
+    return v.withColumn("qvec", F.expr(
+        "CASE WHEN scale > 0 THEN transform(vid_vec, "
+        "x -> CAST(floor(x * 127.0D / scale + 0.5D) AS INT)) "
+        "ELSE transform(vid_vec, x -> 0) END"
+    ))
+
+
 def quantize_embeddings(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -574,17 +499,10 @@ def quantize_embeddings(
     ranks on the int8 codes directly — no dequantization pass.
 
     Everything is JVM-side array arithmetic (transform/aggregate) —
-    whole-stage codegen, no UDFs. Output: (id, scale float,
+    whole-stage codegen, no UDFs. Output: (id, scale double,
     qvec array<int> in [-127, 127])."""
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    scale = F.array_max(F.transform(v, F.abs))
-    q = F.when(scale > 0, F.transform(
-        v, lambda x: F.floor(x * 127.0 / scale + 0.5).cast("int")
-    )).otherwise(F.transform(v, lambda x: F.lit(0)))
-    return df.select(
-        F.col(id_col),
-        scale.cast("double").alias("scale"),
-        q.alias("qvec"),
+    return _int8(df, id_col, vec_col).select(
+        F.col("vid").alias(id_col), "scale", "qvec"
     )
 
 
@@ -593,23 +511,15 @@ def dequantize_error(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Quantize → reconstruct → per-vector max absolute error. The
-    quantizer's contract is err ≤ scale/254 + float noise (half a
-    code step); emitting the measured error makes the bound testable
-    and the oracle recomputable."""
-    qd = quantize_embeddings(df, id_col, vec_col)
-    joined = df.select(
-        F.col(id_col),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("__v"),
-    ).join(qd, id_col)
-    recon = F.transform(F.col("qvec"), lambda x: x * F.col("scale") / 127.0)
-    err = F.array_max(
-        F.zip_with(F.col("__v"), recon, lambda a, b: F.abs(a - b))
-    )
-    return joined.select(
-        F.col(id_col),
-        F.col("scale"),
-        err.cast("double").alias("max_err"),
+    """Quantize → reconstruct → per-vector max absolute error, one row
+    per input row. The quantizer's contract is err ≤ scale/254 + float
+    noise (half a code step); emitting the measured error makes the
+    bound testable and the oracle recomputable."""
+    return _int8(df, id_col, vec_col).select(
+        F.col("vid").alias(id_col),
+        "scale",
+        F.expr("array_max(zip_with(vid_vec, qvec, "
+               "(v, q) -> abs(v - q * scale / 127.0D))) AS max_err"),
     )
 
 
@@ -637,13 +547,13 @@ def quantized_cosine_topk(
     # norms are per-ROW scalars — compute them once per side BEFORE
     # the crossJoin (inside the projection they would be re-evaluated
     # per (corpus × query) pair: ~4·N·Q·d wasted multiply-adds)
-    qq = quantize_embeddings(queries, id_col, vec_col).select(
-        F.col(id_col).alias("query_id"),
+    qq = _int8(queries, id_col, vec_col).select(
+        F.col("vid").alias("query_id"),
         F.col("qvec").alias("q"),
         norm(F.col("qvec")).alias("qn"),
     )
-    cc = quantize_embeddings(corpus, id_col, vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
+    cc = _int8(corpus, id_col, vec_col).select(
+        F.col("vid").alias("neighbor_id"),
         F.col("qvec").alias("c"),
         norm(F.col("qvec")).alias("cn"),
     )
@@ -664,16 +574,4 @@ def quantized_cosine_topk(
             ).otherwise(F.lit(0.0)).alias("qcosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("qcosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("query_id").cast("long"),
-            F.col("neighbor_id").cast("long"),
-            F.col("qcosine").cast("double"),
-            F.col("rank").cast("int"),
-        )
-    )
+    return _topk(scored, k, score="qcosine")

@@ -603,6 +603,37 @@ class TestStatusStatementJobs:
         ran = {k: n for k, n in got.items() if n}
         assert not ran, f"status statements that ran Spark jobs: {ran}"
 
+    def test_scalar_evaluations_run_no_job(self, spark):
+        """A scripting block's declarations, conditions, assignments
+        and RETURN, and a CALL's argument binding, evaluate over the
+        one-row VALUES that SET uses: none of them runs a Spark job."""
+        from dbt_icebreaker_spark import IcebreakerEngine
+
+        eng = IcebreakerEngine(spark, schema="status_jobs")
+        eng.execute(
+            "CREATE OR REPLACE PROCEDURE jz_add(a INTEGER, b INTEGER) "
+            "RETURNS INTEGER LANGUAGE SQL AS $$ BEGIN RETURN a + b; END $$"
+        )
+        sc = spark.sparkContext
+        got = {}
+        for i, (sql, want) in enumerate((
+            ("BEGIN LET x INTEGER := 1; IF (x > 0) THEN x := x + 1; "
+             "END IF; RETURN x; END", 2),
+            ("CALL jz_add(1, 2)", 3),
+            ("SET jz_w = 41 + 1", "42"),
+        )):
+            group = f"scalar-jobs-{i}"
+            sc.setJobGroup(group, sql)
+            try:
+                assert eng.execute(sql).collect()[0][-1] == want
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+                sc.setLocalProperty("spark.job.description", None)
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            got[sql] = len(sc.statusTracker().getJobIdsForGroup(group))
+        ran = {k: n for k, n in got.items() if n}
+        assert not ran, f"scalar evaluations that ran Spark jobs: {ran}"
+
 
 class TestStatementDispatch:
     """A statement's head words pick its handlers: a query head
@@ -692,6 +723,37 @@ class TestRound3OpPlans:
         assert ("BroadcastHashJoin" in tree) or ("SortMergeJoin" in tree) or (
             "ShuffledHashJoin" in tree
         )
+
+
+class TestSimilarityPlans:
+    """The similarity ops share one rendering per vector primitive
+    (xops/similarity.py); these pin the physical shapes it keeps."""
+
+    @pytest.mark.parametrize("name", ["x06_ann_topk", "x43_hard_negatives"])
+    def test_query_side_broadcast_top_k_only_shuffle(self, spark, qs, name):
+        """The query side is broadcast into the pair join, and the
+        per-query top-k window is the one shuffle: the corpus side
+        never crosses the network."""
+        tree = _final_tree(_executed_plan(qs[name](spark, SF_DIR)))
+        assert "BroadcastNestedLoopJoin" in tree
+        assert len(re.findall(r"\bBroadcastExchange \(\d+\)", tree)) == 1
+        assert len(re.findall(r"\bExchange \(\d+\)", tree)) == 1
+
+    def test_semantic_dedup_reuses_assignment(self, spark, qs):
+        """The cell assignment is read three times (both sides of the
+        within-cell pair join and the final left join); its exchanges
+        are reused, not recomputed — the reuse a one-statement
+        rendering loses to CTE inlining."""
+        tree = _final_tree(_executed_plan(qs["x38_semantic_dedup"](spark, SF_DIR)))
+        assert len(re.findall(r"\bReusedExchange \(\d+\)", tree)) >= 1
+
+    def test_dequantize_error_is_one_projection(self, spark, qs):
+        """x55 quantizes and reconstructs each row in one projection:
+        no join back to the input on its id."""
+        tree = _final_tree(_executed_plan(
+            qs["x55_quantize_embeddings"](spark, SF_DIR)))
+        assert "Join" not in tree
+        assert "Exchange" not in tree
 
 
 class TestWeightedSampleShape:

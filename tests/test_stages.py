@@ -46,6 +46,21 @@ class TestStageLifecycle:
             x["name"] == "ts_a"
             for x in engine.execute("SHOW STAGES").collect())
 
+    def test_show_terse_and_like_list_registry(self, engine):
+        for name in ("tl_alpha", "tl_beta", "other_st"):
+            engine.execute(f"CREATE STAGE {name}")
+
+        def names(sql):
+            return {x["name"] for x in engine.execute(sql).collect()}
+
+        every = names("SHOW STAGES")
+        assert {"tl_alpha", "tl_beta", "other_st"} <= every
+        assert names("SHOW TERSE STAGES") == every
+        assert names("SHOW STAGES LIKE 'TL_%'") == {"tl_alpha", "tl_beta"}
+        assert names("SHOW TERSE STAGES LIKE 'tl_a%' IN SCHEMA s") == {
+            "tl_alpha"}
+        assert names("SHOW STAGES LIKE 'nomatch%'") == set()
+
     def test_if_not_exists_and_replace(self, engine):
         engine.execute("CREATE STAGE ts_b")
         r = engine.execute("CREATE STAGE IF NOT EXISTS ts_b").collect()

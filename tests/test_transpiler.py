@@ -3736,7 +3736,9 @@ class TestR11SequenceInteractions:
             "END $$")
         c = engine.execute("CALL sqi_p()").collect()[0][0]
         d = engine.execute("CALL sqi_p()").collect()[0][0]
-        assert [int(a), int(b), int(c), int(d)] == [1, 2, 3, 4]
+        engine.execute("SET sqi_v = sqi.NEXTVAL")
+        e, f = engine.execute("SELECT $sqi_v, sqi.NEXTVAL").collect()[0]
+        assert [int(x) for x in (a, b, c, d, e, f)] == [1, 2, 3, 4, 5, 6]
 
     def test_view_definition_refuses(self, engine):
         engine.execute("CREATE OR REPLACE SEQUENCE sqv")

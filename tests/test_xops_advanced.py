@@ -2061,6 +2061,20 @@ class TestQuantization:
         assert rows[1].scale == 0.0 and rows[1].max_err == 0.0
         assert rows[2].scale == 2.0
 
+    def test_dequantize_error_one_row_per_input_row(self, spark):
+        # a duplicated id must not fan out: quantize and reconstruct
+        # come from one projection of each row, not a join on the id
+        from dbt_icebreaker_spark.xops import similarity
+
+        df = spark.createDataFrame(
+            [(1, [1.0, -2.0]), (1, [0.5, 0.25]), (2, [3.0, 0.0])],
+            "vec_id long, embedding array<float>",
+        )
+        rows = similarity.dequantize_error(df).collect()
+        assert sorted((r.vec_id, r.scale) for r in rows) == [
+            (1, 0.5), (1, 2.0), (2, 3.0)
+        ]
+
     def test_quantized_ranking_tracks_float(self, spark):
         from dbt_icebreaker_spark.sources import read_parquet
         from dbt_icebreaker_spark.xops import similarity
